@@ -48,7 +48,7 @@ object Bench {
     "dedup_semantic",       // SemDeDup: kmeans clusters + in-cluster prune (round 6)
     "mg_topk",              // Misra-Gries heavy-hitter sketch, one pass (round 5)
     "ann_bruteforce",       // broadcast query set scan
-    "ann_bruteforce_agg",   // bounded TopKAggregator form of the same (round 5)
+    "ann_bruteforce_agg",   // bounded top-k aggregate form of the same (round 5)
     "ann_ivf",              // clustered probe
     "ann_pq",               // product-quantized ADC scan (round 6)
     "ann_ivf_trained",      // kmeans-trained IVF end-to-end (round 2)

@@ -199,6 +199,18 @@ object Tables {
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, BigInt]()
   private val SizeCacheMax = 1024
 
+  private def estimatedSize(df: DataFrame): BigInt = {
+    val key = df.queryExecution.analyzed.canonicalized
+    sizeEstimateCache.get(key) match {
+      case null =>
+        val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        if (sizeEstimateCache.size >= SizeCacheMax) sizeEstimateCache.clear()
+        sizeEstimateCache.put(key, s)
+        s
+      case hit => hit
+    }
+  }
+
   def dimHint(df: DataFrame): DataFrame = {
     val raw = df.sparkSession.conf
       .get("spark.sql.autoBroadcastJoinThreshold", "10MB")
@@ -206,36 +218,29 @@ object Tables {
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
       catch { case _: NumberFormatException => -1L } // "-1" = disabled
     if (threshold <= 0) return df
-    val key = df.queryExecution.analyzed.canonicalized
-    val size = sizeEstimateCache.get(key) match {
-      case null =>
-        val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (sizeEstimateCache.size >= SizeCacheMax) sizeEstimateCache.clear()
-        sizeEstimateCache.put(key, s)
-        s
-      case hit => hit
-    }
-    if (size <= BigInt(threshold))
+    if (estimatedSize(df) <= BigInt(threshold))
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }
 
-  /** Spread hint for scan-bound HEAVY-COMPUTE passes (r18, guide
-    * §2.5's "one huge unsplittable file" case generalized): when the
-    * frame's estimated bytes would yield fewer input splits than the
-    * session's parallelism, a keyless repartition to
-    * `defaultParallelism` spreads the downstream per-row work (shingle
-    * hashing, codec walks) across every core; a frame big enough to
-    * split naturally passes through UNTOUCHED, so at cluster scale
-    * this plans zero extra exchanges. The trigger condition bounds the
-    * repartition's own cost by construction: it only fires when the
-    * frame is under `cores × maxPartitionBytes` — data small in bytes
-    * whose WORK, not size, is the stage's cost (the same
-    * work-vs-bytes reasoning as the containment mask-pair fix).
-    * Results-neutral: only physical layout changes; callers are
-    * operators whose output is partitioning-independent (everything in
-    * the registry, per the §18 plan-independence sweeps). Size
-    * estimates ride the same memo as [[dimHint]]. */
+  /** Keyless spread for a work-heavy pass over a byte-small scan:
+    * when the frame's estimated bytes would give fewer input splits
+    * than the session's cores, repartition it to `defaultParallelism`
+    * so the downstream per-row work (shingle hashing, codec walks)
+    * runs on every core. A frame big enough to split naturally passes
+    * through untouched, so at cluster scale this plans no exchange.
+    *
+    * Keep rule: a call site exists only with a recorded leave-one-out
+    * result. The site's registered queries run in `graft.Bench` subset
+    * mode with and without the call, in at least 5 alternating pairs
+    * on an idle box, and the call stays only if the side with it wins
+    * at least 4 of 5 pairs by more than its own runs' interquartile
+    * spread (recipe: tools/README.md). Each caller's comment carries
+    * its numbers; a site that stops paying is deleted, not gated.
+    * Results-neutral: only the physical layout changes, and every
+    * caller's output is partitioning-independent (the §18
+    * plan-independence sweeps). Size estimates ride the same memo as
+    * [[dimHint]]. */
   def spreadHint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
@@ -243,28 +248,16 @@ object Tables {
     val splitBytes =
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
       catch { case _: NumberFormatException => 134217728L }
-    val key = df.queryExecution.analyzed.canonicalized
-    val size = sizeEstimateCache.get(key) match {
-      case null =>
-        val s = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (sizeEstimateCache.size >= SizeCacheMax) sizeEstimateCache.clear()
-        sizeEstimateCache.put(key, s)
-        s
-      case hit => hit
-    }
-    if (size < BigInt(splitBytes) * cores) df.repartition(cores) else df
+    if (estimatedSize(df) < BigInt(splitBytes) * cores) df.repartition(cores) else df
   }
 
-  /** Keyed repartition PINNED to the session's shuffle partition count
-    * (r18): a bare `repartition(col)` leaves AQE free to coalesce the
-    * exchange by BYTES, which serializes operators whose post-shuffle
-    * per-row work (window folds, explodes, hashing) is the real cost
-    * on byte-small inputs. Pinning to `numShufflePartitions` is
-    * exactly the pre-AQE layout — where data is big AQE would not have
-    * coalesced, so nothing changes; where it is small the work keeps
-    * its parallelism. The count follows the session conf, so the §18
-    * sizing rule (`SPARK_GRAFT_SHUFFLE_PARTITIONS`) still governs the
-    * big-SF sweeps. */
+  /** Keyed repartition pinned to the session's shuffle partition
+    * count. A bare `repartition(col)` leaves AQE free to coalesce the
+    * exchange by bytes, which serializes post-shuffle per-row work
+    * (window folds, explodes) on byte-small inputs; the pinned count
+    * is the pre-AQE layout, and it follows the session conf, so the
+    * §18 sizing rule (`SPARK_GRAFT_SHUFFLE_PARTITIONS`) still governs
+    * the big-SF sweeps. Same keep rule as [[spreadHint]]. */
   def spreadByKey(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 }

@@ -15,8 +15,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   * common case — a row that does not make the current top k — is one
   * O(1) compare against the worst kept entry; an accepted row is one
   * O(k) in-place shift (k is small: 3-5 in every caller). No
-  * per-row allocation, unlike the immutable-Seq splicing of the typed
-  * `TopKAggregator` buffer this replaces. */
+  * per-row allocation. */
 final class TopKBuffer(val k: Int) {
   val ids = new Array[Long](k)
   val scores = new Array[Double](k)
@@ -26,8 +25,8 @@ final class TopKBuffer(val k: Int) {
     * Double.compare, not > / ==: primitive NaN comparisons are always
     * false, which would make NaN scores order-dependent. compare
     * treats NaN as the LARGEST value, matching Spark's own descending
-    * sort order — the same contract as the typed TopKAggregator and
-    * the row_number window oracle. */
+    * sort order — the same contract as the row_number window
+    * oracle. */
   @inline private def before(id1: Long, s1: Double, id2: Long, s2: Double): Boolean = {
     val c = java.lang.Double.compare(s1, s2)
     c > 0 || (c == 0 && id1 < id2)
@@ -55,8 +54,8 @@ final class TopKBuffer(val k: Int) {
   }
 }
 
-/** Native bounded top-k-per-group aggregate — the Catalyst
-  * `TypedImperativeAggregate` form of `TopKAggregator` (round 19).
+/** Native bounded top-k-per-group aggregate, a Catalyst
+  * `TypedImperativeAggregate`.
   *
   * Identical semantics and the same bounded-state scale property (the
   * buffer never exceeds k entries, so map-side partial aggregation

@@ -468,6 +468,9 @@ object Dedup {
     // filter: explode of an empty array emits nothing, and a filter on
     // a derived array column gets pushed below the project where the
     // whole shingle pipeline would be recomputed inside the scan.
+    // spreadHint: the shingle chain is per-row work on a byte-small
+    // scan. Leave-one-out at sf0.1, local[4]: 1.17 s with, 1.72 s
+    // without (medians), the call winning 5 of 5 pairs
     val sets = Tables.spreadHint(Tables.documents(spark, dir))
       .select(col("doc_id"), col("lang"), toks.as("t"))
       .withColumn("s", array_distinct(expr(shingleExpr)))
@@ -685,7 +688,7 @@ object Dedup {
     // persisted: the band equi-join consumes this frame on BOTH sides;
     // one row per doc, so the cache is tiny while saving a full
     // shingle+min-aggregate recompute (the dominant signature cost)
-    val sig = minhashSignatures(Tables.spreadHint(Tables.documents(spark, dir)))
+    val sig = minhashSignatures(Tables.documents(spark, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = sig
       .select(col("doc_id"), explode(array((0 until 4).map { b =>
@@ -880,7 +883,7 @@ object Dedup {
     * full recall (the banded operator stays the cheap probabilistic
     * path). */
   def dedupContainmentExact(spark: SparkSession, dir: String): DataFrame =
-    containmentPairsExact(Tables.spreadHint(Tables.documents(spark, dir)))
+    containmentPairsExact(Tables.documents(spark, dir))
 
   /** The prefix-filter kernel over an ARBITRARY documents frame
     * (needs `doc_id`, `text`) — see [[dedupContainmentExact]]. */
@@ -1059,7 +1062,7 @@ object Dedup {
     * can measure the prefix filter's candidate count on exactly the
     * frame the registered query runs. */
   def containmentNgramSets(spark: SparkSession, dir: String): DataFrame =
-    Tables.spreadHint(Tables.documents(spark, dir))
+    Tables.documents(spark, dir)
       .select(col("doc_id"), toks.as("t"))
       .withColumn("s",
         transform(array_distinct(expr(shingleExpr)), g => xxhash64(g)))
@@ -1412,9 +1415,7 @@ object Dedup {
       .select(col("doc_id"), col("lang"), expr(simhashSigExpr(16)).as("sh"))
 
   private def simhashSigs(spark: SparkSession, dir: String): DataFrame =
-    // spreadHint: per-token md5 + the 16-bit sig fold are work-heavy on
-    // byte-small scans (0.6 s serial at sf0.1); no-op once scans split
-    simhashSignatures(Tables.spreadHint(Tables.documents(spark, dir)))
+    simhashSignatures(Tables.documents(spark, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Near-dups = hamming ≤ 3 within a lang block, via per-lang
@@ -1860,7 +1861,7 @@ object Dedup {
     * so byte-identical copies match). Empty-path plans (in-memory
     * frames) return None: no files → nothing to invalidate a persisted
     * verdict against, so those stay JVM-memoized only. */
-  private def corpusFingerprint(spark: SparkSession,
+  private[graft] def corpusFingerprint(spark: SparkSession,
       paths: Seq[String]): Option[String] =
     if (paths.isEmpty) None
     else try {
@@ -1870,13 +1871,15 @@ object Dedup {
         val fs = p.getFileSystem(conf)
         var n = 0L
         var bytes = 0L
-        // xor of per-file (len, mtime) hashes: a corpus regenerated
-        // in-place to the same file count and total bytes but
-        // different content no longer reads as unchanged (VERDICT r18
-        // item 7 — the stale verdict only mis-costs, never
+        // xor of per-file (path, len, mtime) hashes: a corpus
+        // regenerated in-place to the same file count and total bytes
+        // but different content no longer reads as unchanged (VERDICT
+        // r18 item 7 — the stale verdict only mis-costs, never
         // mis-answers, but it defeats the probe's purpose). mtime is
         // the cheap content proxy the FileStatus already carries;
-        // order-independent xor keeps the walk order irrelevant.
+        // order-independent xor keeps the walk order irrelevant. The
+        // path keeps equal-size, equal-mtime files from hashing alike
+        // and cancelling each other out of the xor.
         var mix = 0L
         val it = fs.listFiles(p, true)
         while (it.hasNext) {
@@ -1884,7 +1887,7 @@ object Dedup {
           if (st.isFile) {
             n += 1; bytes += st.getLen
             mix ^= scala.util.hashing.MurmurHash3.stringHash(
-              s"${st.getLen}@${st.getModificationTime}").toLong
+              s"${st.getPath}:${st.getLen}@${st.getModificationTime}").toLong
           }
         }
         s"$n:$bytes:$mix"
@@ -2093,44 +2096,21 @@ object Dedup {
   // NEXT saturation decade escalates the subset width (2²⁶-bucket
   // keys for a 35/15 explode step) instead of going quadratic;
   // `graft.SimhashProbe` reproduces the decomposition on any corpus.
-  def dedupSimhashWide(spark: SparkSession, dir: String): DataFrame = {
-    val sig = Tables.documents(spark, dir)
+  def dedupSimhashWide(spark: SparkSession, dir: String): DataFrame =
+    bandedHammingPairsAuto(
+      simhashWideSigsForProbe(spark, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), // self-joined
+      bits = WideBits, maxHamming = WideBands - 1)
+
+  /** The wide-simhash signature frame (doc_id, block, sh):
+    * [[dedupSimhashWide]]'s input, exposed for the banding probe and
+    * specs. */
+  def simhashWideSigsForProbe(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
       .filter(col("text").rlike("\\S")) // cheap raw-text form of size(t)>0 (see simhashSignatures)
       .select(col("doc_id"), col("lang"), array_distinct(toks).as("t"))
       .withColumn("th", transform(col("t"), tok => md5Long(tok)))
-      .select(col("doc_id"), col("lang"), expr(simhashSigExpr(WideBits)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // self-joined
-    bandedHammingPairsAuto(
-      sig.select(col("doc_id"), col("lang").as("block"), col("sh")),
-      bits = WideBits, maxHamming = WideBands - 1)
-  }
-
-  /** The wide-simhash signature frame alone — the probe's input,
-    * exposed for diagnostics and specs. */
-  def simhashWideSigsForProbe(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("text").rlike("\\S"))
-      .select(col("doc_id"), col("lang"), array_distinct(toks).as("t"))
-      .withColumn("th", transform(col("t"), tok => md5Long(tok)))
-      .select(col("doc_id"), col("lang"), expr(simhashSigExpr(WideBits)).as("sh"))
-      .select(col("doc_id"), col("lang").as("block"), col("sh"))
-
-  /** [[dedupSimhashWide]] with the banding config FIXED to the
-    * single-band kernel — the explicit-config escape hatch (and the
-    * A/B baseline for probe-overhead measurements): identical output
-    * to the auto form on any corpus where the probe picks
-    * single-band, zero probe jobs ever. */
-  def dedupSimhashWideFixed(spark: SparkSession, dir: String): DataFrame = {
-    val sig = Tables.documents(spark, dir)
-      .filter(col("text").rlike("\\S"))
-      .select(col("doc_id"), col("lang"), array_distinct(toks).as("t"))
-      .withColumn("th", transform(col("t"), tok => md5Long(tok)))
-      .select(col("doc_id"), col("lang"), expr(simhashSigExpr(WideBits)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bandedHammingPairs(
-      sig.select(col("doc_id"), col("lang").as("block"), col("sh")),
-      bits = WideBits, bands = WideBands, maxHamming = WideBands - 1)
-  }
+      .select(col("doc_id"), col("lang").as("block"), expr(simhashSigExpr(WideBits)).as("sh"))
 
   private val dedupSimhashWideSql = {
     val votes = (0 until WideBits)
@@ -2423,9 +2403,7 @@ object Dedup {
   }
 
   def dedupCdcChunks(spark: SparkSession, dir: String): DataFrame =
-    // spreadHint: the rolling-hash chunk pass serializes on the
-    // byte-small scan (two 0.5 s single-task stages at sf0.1)
-    cdcChunkStats(Tables.spreadHint(Tables.documents(spark, dir)))
+    cdcChunkStats(Tables.documents(spark, dir))
       .orderBy(col("doc_id"))
 
   private val dedupCdcChunksSql =
@@ -2506,12 +2484,9 @@ object Dedup {
     val shArr = expr(
       s"""transform(sequence(0, size(t) - $k),
          |  j -> md5(concat_ws(' ', slice(t, j + 1, $k))))""".stripMargin)
-    val base = Tables.spreadHint(docs
+    val base = docs
       .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= k))
-      // per-offset md5 over every token window: work ∝ tokens × k, so
-      // a byte-small corpus must still spread across cores (spreadHint
-      // is a no-op once the scan splits naturally)
+      .filter(size(col("t")) >= k)
       .select(col("doc_id"), posexplode(shArr).as(Seq("j", "sk")))
     val shingles = // occurrence counts + join probe share one pass
       if (cache) base.persist(StorageLevel.MEMORY_AND_DISK) else base
@@ -2576,11 +2551,8 @@ object Dedup {
     val shArr = expr(
       s"""transform(sequence(0, size(t) - $k),
          |  j -> md5(concat_ws(' ', slice(t, j + 1, $k))))""".stripMargin)
-    val toked = Tables.spreadHint(docs
-      .select(col("doc_id"), toks.as("t")))
-      // see duplicatedOffsets: the shingle pass below is work-heavy on
-      // byte-small inputs; the hint also spreads the cached partitions
-      // every downstream consumer reads
+    val toked = docs
+      .select(col("doc_id"), toks.as("t"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val occ = toked
       .filter(size(col("t")) >= k)
@@ -2884,7 +2856,8 @@ object Dedup {
 
   def dedupWinnowing(spark: SparkSession, dir: String): DataFrame =
     // spreadHint: the in-row gram-hash + window folds are the cost, not
-    // the bytes (four concurrent ~1 s single-task stages at sf0.1)
+    // the bytes. Leave-one-out at sf0.1, local[4]: 1.48 s with, 2.18 s
+    // without (medians), the call winning 5 of 5 pairs
     winnowPairs(winnowFingerprintHashes(
       Tables.spreadHint(Tables.documents(spark, dir))))
 

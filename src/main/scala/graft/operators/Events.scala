@@ -697,7 +697,9 @@ object Events {
     // a pruned-hourly shuffle but re-shuffles the dense grid for the
     // fill window): HEAD 38.4 s vs 15.2 s un-pinned single-exchange
     // vs 4.9 s with the pinned spreadByKey count (AQE byte-coalesce
-    // otherwise serializes the windows); at sf0.1 2.72 → 1.33 s.
+    // otherwise serializes the windows). Leave-one-out at sf0.1,
+    // local[4]: 1.64 s with, 2.43 s without (medians), the call
+    // winning 5 of 5 pairs.
     val ev = Tables.spreadByKey(
       Tables.events(spark, dir).select(
         col("user_id"), unix_micros(col("ts")).as("us"),
@@ -992,7 +994,9 @@ object Events {
 
   def qAnomalyMad(spark: SparkSession, dir: String): DataFrame =
     // spreadByKey: the per-user median/MAD windows reuse this pinned
-    // user exchange (subset rule) — AQE coalesced it to ~1 task by bytes
+    // user exchange; unpinned, AQE coalesces it by bytes. Leave-one-out
+    // at sf0.1, local[4]: 1.07 s with, 1.27 s without (medians), the
+    // call winning 4 of 5 pairs
     anomalyMad(Tables.spreadByKey(Tables.events(spark, dir), col("user_id")))
       .orderBy(col("event_id"))
 

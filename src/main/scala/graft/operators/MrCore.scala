@@ -179,21 +179,10 @@ object MrCore {
     // largest table at 3 iterations). At cluster scale an uncached
     // iterative plan is a non-starter; MEMORY_AND_DISK spills rather
     // than OOMs when the graph outgrows executor memory.
-    // Pre-partitioning edges by src also makes every per-iteration
-    // ranks-join and the deg/nodes aggregates reuse one exchange.
     import org.apache.spark.storage.StorageLevel
     // outdeg rides ON the persisted edge frame (a src-partitioned
-    // window count — exchange-free over the repartition), so no
-    // per-iteration edges⋈deg join exists at all
-    // pinned count (r19): the unpinned repartition AQE-coalesced the
-    // persisted edge frame to ~3 partitions by BYTES, so all 3 rounds'
-    // join+agg work ran at parallelism ~3 with one straggler task
-    // owning each round (JobProbe: maxTask 5.5 s of a 5.6 s stage).
-    // Work, not bytes, decides the count (guide §2.5); spreadByKey
-    // pins the session's shuffle partitions, env-governed at scale.
-    val edges = Tables.spreadByKey(
-      fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst"))),
-      col("src"))
+    // window count), so no per-iteration edges⋈deg join exists at all
+    val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
       .sortWithinPartitions(col("src")) // each round's merge join reuses this order
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -516,17 +505,8 @@ object MrCore {
     * against the distinct+self-join reference in IterativeSpec). */
   private[graft] def coOrderTopEdges(li: DataFrame,
       topK: Int = CoOrderTopEdges): DataFrame =
-    // size-gated spread between the set aggregate and the pair
-    // explosion (r19, guide §2.5): unpinned, AQE byte-coalesced the
-    // set-building exchange to ~4 partitions while the stage's real
-    // work is the DOWNSTREAM pair explosion (Σ |suppliers|² per order
-    // — 897k pairs from 147k rows at sf0.1, one 3.0 s task owned the
-    // stage). spreadHint keeps the map-side collect_set partial dedup
-    // (a keyed pre-repartition would ship every raw row) and is a
-    // structural no-op once the sets frame splits naturally at scale.
-    Tables.spreadHint(
-      li.groupBy(col("l_orderkey"))
-        .agg(expr("array_sort(collect_set(l_suppkey))").as("sa")))
+    li.groupBy(col("l_orderkey"))
+      .agg(expr("array_sort(collect_set(l_suppkey))").as("sa"))
       .select(explode(expr(
         """flatten(transform(sa, (x, i) ->
           |  transform(slice(sa, i + 2, size(sa) - i - 1),
@@ -1010,13 +990,15 @@ object MrCore {
         .select(col("src").as("node"))
       // the did-anything-peel scalar rides the peeled checkpoint's
       // materialization as an accumulator (the bfs/cc discipline,
-      // r19) — one fewer driver action per round, same exact count
+      // r19) — one fewer driver action per round, same exact count.
+      // The counting UDF wraps the layer literal, not `node`, so the
+      // node column keeps the input's type (Int, Long, String, ...)
       val peelCnt = spark.sparkContext.longAccumulator("kcore_peeled")
-      val tick = udf((n: Long) => { peelCnt.add(1L); n }).asNondeterministic()
+      val tick = udf((layer: Int) => { peelCnt.add(1L); layer }).asNondeterministic()
       val (peeled, peeledIds) = Dedup.checkpointTracked(
         alive.join(next.select(col("node").as("kept")),
             col("node") === col("kept"), "left_anti")
-          .select(tick(col("node")).as("node"), lit(r).as("layer")))
+          .select(col("node"), tick(lit(r)).as("layer")))
       val (nextCp, nextIds) = Dedup.checkpointTracked(next)
       Dedup.freeBlocks(spark, aliveIds)
       alive = nextCp; aliveIds = nextIds

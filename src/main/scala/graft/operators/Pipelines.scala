@@ -219,9 +219,7 @@ object Pipelines {
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     val isEval =
       pmod(md5Long(concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
-    // spreadHint: the fivegram passes serialize on the byte-small scan
-    val docs = Tables.spreadHint(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     decontaminateBloomAgainst(docs.filter(!isEval), docs.filter(isEval))
       .orderBy(col("doc_id"))
   }

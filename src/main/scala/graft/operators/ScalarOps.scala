@@ -477,7 +477,7 @@ object ScalarOps {
     * with builtin min-over-struct instead of a typed Aggregator
     * closure: same ≤1-row-per-partition-per-group bound, but it
     * stays inside whole-stage codegen and works for any orderable
-    * value type (the TopKAggregator route is (Long, Double)-keyed).
+    * value type (the BoundedTopK route is (Long, Double)-keyed).
     * Output schema/rounding identical to [[qMode]]; RelationalSpec
     * proves row equality on the registered domain, and the shared
     * oracle hash-checks it against DuckDB independently. */

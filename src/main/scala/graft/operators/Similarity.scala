@@ -796,15 +796,7 @@ object Similarity {
       "(the assigned frame comes from the final iteration)")
     val spark = e0.sparkSession
     import org.apache.spark.storage.StorageLevel
-    // spreadHint HERE, not in the shared vecs() frame (r19, VERDICT
-    // r18 #2): the Lloyd loop pays iters × (assign fold + update agg)
-    // per row on a byte-small scan, so the trainer is the one vecs
-    // consumer whose per-row work justifies the repartition (measured:
-    // ann_kmeans 2.25 → 2.05 s with it, while the scan-light members
-    // lose 0.1-0.5 s each when every consumer inherits the exchange —
-    // ann_bruteforce 0.50 → 0.38 unhinted). No-op once the scan
-    // splits naturally at scale (the size gate).
-    val e = Tables.spreadHint(e0).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = e0.persist(StorageLevel.MEMORY_AND_DISK)
 
     // assign = [[nearestCentroid]] projection against the driver-side
     // centroid literal: ZERO exchanges on any layout. (The r3 form —

@@ -193,10 +193,7 @@ object TextAnalysis {
         i => struct(element_at(col("t"), i + 1).as("w1"),
           element_at(col("t"), i + d + 1).as("w2"))))
       .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    // spreadHint: each consumer's explode ran serially on the 1-split
-    // scan; the hinted exchange carries raw text once per consumer and
-    // stays a no-op at natural splits
-    val docs = Tables.spreadHint(Tables.documents(spark, dir)).withColumn("t", toks)
+    val docs = Tables.documents(spark, dir).withColumn("t", toks)
     // the corpus IS scanned+exploded by each consumer (pair aggregate,
     // unigram aggregate, totals) — deliberately: persisting the two
     // exploded frames was tried and MEASURED SLOWER (8.0 s vs 5.4 s
@@ -275,9 +272,7 @@ object TextAnalysis {
     * score row (documented; the corpus's 20-90-word docs all score).
     */
   def textLmScore(spark: SparkSession, dir: String): DataFrame =
-    // spreadHint: the bigram explode + persist materialization ran
-    // serially on the 1-split scan (three blocked 0.9 s stages)
-    lmScore(Tables.spreadHint(Tables.documents(spark, dir)))
+    lmScore(Tables.documents(spark, dir))
 
   /** The corpus-LM scoring kernel over an ARBITRARY documents frame
     * (needs `doc_id`, `text`) — see [[textLmScore]]. */
@@ -338,7 +333,7 @@ object TextAnalysis {
     * tokens have no bigram and drop out, matching the oracle. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    Tables.spreadByKey(Tables.documents(spark, dir), col("doc_id"))
+    Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode(toks).as(Seq("pos", "tok")))
       .withColumn("bigram", concat(col("tok"), lit(" "), lead(col("tok"), 1).over(w)))
       .filter(col("bigram").isNotNull)
@@ -492,9 +487,7 @@ object TextAnalysis {
   def textTfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val tf = docs
-      .select(col("doc_id"), toks.as("t"))
-      .transform(Tables.spreadByKey(_, col("doc_id"))) // compact arrays through the shuffle; pinned count (Tables.spreadByKey) so AQE cannot serialize the explode
-      .select(col("doc_id"), explode(col("t")).as("term"))
+      .select(col("doc_id"), explode(toks).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1044,8 +1037,9 @@ object TextAnalysis {
     * integer-derived doubles (exact on both engines). */
   def textFilterQuality(spark: SparkSession, dir: String): DataFrame =
     // spreadHint: the gate's tokenize + per-rule metrics are per-row
-    // work on a byte-small scan (two 0.63 s single-task stages at
-    // sf0.1); no-op once the scan splits naturally
+    // work on a byte-small scan. Leave-one-out at sf0.1, local[4]:
+    // 0.99 s with, 1.61 s without (medians), the call winning 5 of 5
+    // pairs
     qualityRules(Tables.spreadHint(Tables.documents(spark, dir)))
       .orderBy(col("doc_id"))
 

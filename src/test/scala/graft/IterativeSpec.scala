@@ -154,6 +154,28 @@ class IterativeSpec extends SparkSpec {
     CacheHygiene.sweep(spark)
   }
 
+  test("k-core peel: Int- and String-keyed edges keep their node type and Long layers") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val s = spark
+    import s.implicits._
+    val co = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("s1", "s2")
+    val symLong = co.unionAll(co.select(col("s2").as("s1"), col("s1").as("s2")))
+      .select(col("s1").as("src"), col("s2").as("dst"))
+    val longLayers = MrCore.kCorePeel(symLong, 2, 10).collect()
+      .map(r => r.getLong(0).toString -> r.getInt(1)).toMap
+    for ((tpe, castTo) <- Seq(IntegerType -> "int", StringType -> "string")) {
+      val sym = symLong.select(col("src").cast(castTo).as("src"),
+        col("dst").cast(castTo).as("dst"))
+      val out = MrCore.kCorePeel(sym, 2, 10)
+      assert(out.schema("node").dataType == tpe, s"node type for $castTo: ${out.schema}")
+      assert(out.schema("node").dataType != LongType)
+      val layers = out.collect().map(r => r.get(0).toString -> r.getInt(1)).toMap
+      assert(layers == longLayers, s"$castTo-keyed layers")
+    }
+    CacheHygiene.sweep(spark)
+  }
+
   test("label propagation: two bridged triangles resolve to two communities") {
     val s = spark
     import s.implicits._

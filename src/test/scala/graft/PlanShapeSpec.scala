@@ -373,6 +373,24 @@ class PlanShapeSpec extends SparkSpec {
       "every row must get a valid centroid id")
   }
 
+  test("kmeans trainer and co-order edges plan no round-robin spread exchange") {
+    // both spreads measured as losses at 32, 8 and 4 cores and were
+    // removed; one may only return with a leave-one-out result
+    import graft.operators.Similarity
+    import graft.functions.VectorFunctions
+    def roundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.contains("RoundRobinPartitioning")
+    val e = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("nrm", VectorFunctions.norm(col("v")))
+    val (_, assigned) = Similarity.kmeansTrain(e, 3, iters = 1)
+    assert(!roundRobin(assigned),
+      s"kmeans assigned frame:\n${assigned.queryExecution.executedPlan}")
+    val co = MrCore.coOrderTopEdges(Tables.lineitem(spark, sf))
+    assert(!roundRobin(co), s"co-order edges:\n${co.queryExecution.executedPlan}")
+    CacheHygiene.sweep(spark)
+  }
+
   test("typed sampleFrames equals the oracle-checked mm_frame_sample query") {
     val s = spark
     import s.implicits._

@@ -63,26 +63,9 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: TopKAggregator equals sort-take") {
-    val agg = new graft.functions.TopKAggregator(3)
-    forAll(Gen.listOf(Gen.zip(Gen.choose(0L, 30L), Gen.choose(-100.0, 100.0)))) {
-      (pairs: List[(Long, Double)]) =>
-        val viaAgg = pairs.foldLeft(agg.zero)((b, p) => agg.reduce(b, p))
-        val expect = pairs.sortBy(t => (-t._2, t._1)).take(3)
-        assert(viaAgg.ids.zip(viaAgg.scores) == expect)
-        // merge in halves must give the same answer
-        val (h1, h2) = pairs.splitAt(pairs.length / 2)
-        val merged = agg.merge(
-          h1.foldLeft(agg.zero)((b, p) => agg.reduce(b, p)),
-          h2.foldLeft(agg.zero)((b, p) => agg.reduce(b, p)))
-        assert(merged.ids.zip(merged.scores) == expect)
-    }
-  }
-
   test("property: BoundedTopK buffer equals sort-take (with merge halves)") {
-    // the native TypedImperativeAggregate that replaced the typed
-    // TopKAggregator on the query paths (round 19) — same ordering
-    // contract, exercised through the same property
+    // the buffer behind the native BoundedTopK aggregate: score desc,
+    // then id asc, and merging two halves gives the same top k
     forAll(Gen.listOf(Gen.zip(Gen.choose(0L, 30L), Gen.choose(-100.0, 100.0)))) {
       (pairs: List[(Long, Double)]) =>
         val buf = new graft.functions.TopKBuffer(3)
@@ -573,6 +556,30 @@ class PropertySpec extends SparkSpec {
         f.delete()
       }
       rm(dir)
+    }
+  }
+
+  test("corpus fingerprint: equal-size, equal-mtime files that swap contents do not cancel out") {
+    val dir = java.nio.file.Files.createTempDirectory("corpus_fp").toFile
+    try {
+      val a = new java.io.File(dir, "a.txt")
+      val b = new java.io.File(dir, "b.txt")
+      def put(f: java.io.File, body: String, mtime: Long): Unit = {
+        java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+        assert(f.setLastModified(mtime))
+      }
+      val t0 = 1700000000000L
+      put(a, "aaaa", t0); put(b, "bbbb", t0)
+      val fp = () => graft.operators.Dedup.corpusFingerprint(spark, Seq(dir.getAbsolutePath))
+      val before = fp()
+      assert(before.isDefined)
+      // swap the contents; both files again share one (new) mtime, so
+      // count, bytes and the per-file (len, mtime) pairs all match
+      put(a, "bbbb", t0 + 5000L); put(b, "aaaa", t0 + 5000L)
+      assert(fp() != before, "a rewritten equal-size pair must change the fingerprint")
+    } finally {
+      Option(dir.listFiles()).getOrElse(Array.empty).foreach(_.delete())
+      dir.delete()
     }
   }
 
