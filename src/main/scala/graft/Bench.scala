@@ -575,20 +575,8 @@ object Bench {
           encode(col("text"), "UTF-8"))),
       drive[(Long, String)]("stream_winnow", docs,
         ds => StreamingJobs.winnowStream(ds.toDF("doc_id", "text"))),
-      // both banding widths pinned EXPLICITLY (VERDICT r17 #1): the
-      // r18 StreamVideoProbe A/B flipped the library default to wide
-      // (narrow recall 0.375 on the saturating corpus — canonical
-      // displacement, cap-independent), but this entry keeps the
-      // narrow form under its historical name for artifact
-      // continuity; the _wide twin's state_rows ride alongside so
-      // the 262,144-bucket ceiling vs distinct-signature growth is
-      // WATCHED, not estimated
       drive[graft.operators.Multimodal.FrameHash]("stream_videodup",
-        frameHashes,
-        ds => StreamingJobs.videoDupStream(ds, wide = false).toDF()),
-      drive[graft.operators.Multimodal.FrameHash]("stream_videodup_wide",
-        frameHashes,
-        ds => StreamingJobs.videoDupStream(ds, wide = true).toDF()),
+        frameHashes, ds => StreamingJobs.videoDupStream(ds).toDF()),
       // the against-index compaction head (round 18): the history
       // half is snapshotted into the manifest-committed frame index
       // OUTSIDE the timed region (batch compaction is the amortized
@@ -596,7 +584,7 @@ object Bench {
       // watches the steady-state per-row price of the stream-static
       // bucket join + the stateless-history/stateful-new split, and
       // its state_rows column shows the since-snapshot bound next to
-      // the _wide twin's full-corpus state
+      // stream_videodup's full-corpus state
       {
         val vSplit = frameHashes.iterator.map(_.doc_id).max / 2
         val idxDir =

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.Calibration.capProfile]] over the REAL corpus
   * postings that the two shipped hot-key caps guard —
   * `Dedup.winnowPairs`'s fingerprint postings (constant `WinnowMaxDf`
-  * = 64) and `Multimodal.videoDupStats`'s 4×16-bit band postings
-  * (constant `VideoBandDfCap` = 1024) — and print one JSON line per
+  * = 64) and `Multimodal.videoDupStats`'s band postings
+  * (`Multimodal.frameBandPostings`, 10 two-band subset keys per frame;
+  * constant `VideoBandDfCap` = 1024) — and print one JSON line per
   * (family, budget), so the constants sit next to what the kernel
   * would actually recommend on the corpus (SCALING.md records the
   * rows; until this main existed the kernel had only seen planted

@@ -24,7 +24,7 @@ import org.apache.spark.sql.SparkSession
   *     this doubles as a cross-config output check; at big SFs the
   *     losing rungs cost real wall clock, hence the opt-in).
   *  3. `--cap N`: run the agree-2 capped kernel
-  *     ([[graft.operators.Dedup.bandedHammingPairsSubsetCapped]]) at
+  *     ([[graft.operators.Dedup.bandedHammingPairsCapped]]) at
   *     band-df cap N and print retained vs uncapped pair counts — the
   *     measured recall contract of the cap (the lossy alternative to
   *     raising agree; see Calibration.recallAtCaps for the general
@@ -77,11 +77,8 @@ object SimhashProbe {
         s""""probe_sec":${"%.1f".format(probeSec)}}""")
 
       if (doTime) rungs.filter(k => timeAll || k == c.agree).foreach { k =>
-        val kernel =
-          if (k == 1) operators.Dedup.bandedHammingPairs(
-            sigs, Bits, MaxHamming + 1, MaxHamming)
-          else operators.Dedup.bandedHammingPairsSubset(
-            sigs, Bits, MaxHamming + k, MaxHamming)
+        val kernel = operators.Dedup.bandedHammingPairs(
+          sigs, Bits, MaxHamming + k, MaxHamming)
         val s0 = System.nanoTime()
         val pairs = kernel.count() // sort elided under the aggregate
         val sec = (System.nanoTime() - s0) / 1e9
@@ -90,10 +87,10 @@ object SimhashProbe {
       }
 
       cap.foreach { dfCap =>
-        val total = operators.Dedup.bandedHammingPairsSubset(
+        val total = operators.Dedup.bandedHammingPairs(
           sigs, Bits, MaxHamming + 2, MaxHamming).count()
         val s0 = System.nanoTime()
-        val kept = operators.Dedup.bandedHammingPairsSubsetCapped(
+        val kept = operators.Dedup.bandedHammingPairsCapped(
           sigs, Bits, MaxHamming + 2, MaxHamming, dfCap).count()
         val sec = (System.nanoTime() - s0) / 1e9
         val recall = if (total == 0L) 1.0 else kept.toDouble / total

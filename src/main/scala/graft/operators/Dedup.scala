@@ -1432,196 +1432,154 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** PUBLIC parameterized banded-hamming kernel — the reusable 100 TB
-    * candidate generator behind both simhash paths. Input: (doc_id,
-    * block, sh) rows — `block` is any coarse blocking key (lang here;
-    * pairs never cross blocks), `sh` a `bits`-wide Long signature.
-    * The signature splits into `bands` near-equal contiguous bands;
-    * by PIGEONHOLE, any pair with hamming ≤ maxHamming < bands agrees
-    * exactly on ≥ 1 band, so an equi-join on (block, band, band_bits)
-    * has total recall and the hamming filter removes false positives.
-    * Candidate count ∝ band-bucket collisions, not n²; (band, bits)
-    * doubles as a write-once partition key at scale. The recall bound
-    * is property-tested over random (bits, bands, maxHamming) configs
-    * in PropertySpec.
-    *
-    * A pair colliding in k bands appears k times; it is deduped
-    * WITHOUT a shuffle by keeping only the FIRST matching band (every
-    * earlier band differs) — a pure filter on the join output. */
   // band b covers signature bits [bound(b), bound(b+1)) — near-equal
   // widths; ANY partition of the bits preserves the pigeonhole bound
   private def bandBounds(bits: Int, bands: Int): IndexedSeq[Int] =
     (0 to bands).map(b => b * bits / bands)
-  private def bandBitsAt(bound: IndexedSeq[Int], side: String, b: Int): String =
-    s"(shiftright($side, ${bound(b)}) & ${(1L << (bound(b + 1) - bound(b))) - 1}L)"
 
-  def bandedHammingPairs(sigs: DataFrame, bits: Int, bands: Int,
-      maxHamming: Int): DataFrame = {
-    require(bits >= 1 && bits <= 63, s"bits must be in [1, 63], got $bits")
+  /** Width in bits of the widest packed `agree`-band key (the sum of
+    * the `agree` widest bands). */
+  private def maxKeyBits(bits: Int, bands: Int, agree: Int): Int =
+    bandBounds(bits, bands).sliding(2).map(p => p(1) - p(0)).toSeq
+      .sorted.reverse.take(agree).sum
+
+  /** The `agree`-subsets of `bands` bands in lex order — the order of
+    * [[pigeonholeKeys]]' `sub` ids. */
+  private def bandSubsets(bands: Int, agree: Int): Vector[Seq[Int]] =
+    (0 until bands).combinations(agree).map(_.toSeq).toVector
+
+  /** Validates a banding geometry and returns its `agree` (bands −
+    * maxHamming): bits in [1, 64], 1 ≤ bands ≤ bits, 0 ≤ maxHamming <
+    * bands, and every packed key ≤ 63 bits (which also rejects a single
+    * 64-bit band, whose mask `(1L << 64) - 1` is 0). */
+  private def bandingAgree(bits: Int, bands: Int, maxHamming: Int): Int = {
+    require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
     require(bands >= 1 && bands <= bits, s"bands must be in [1, $bits], got $bands")
     require(maxHamming >= 0 && maxHamming < bands,
-      s"pigeonhole recall needs maxHamming < bands, got $maxHamming vs $bands")
-    val bound = bandBounds(bits, bands)
-    def bandBits(side: String, b: Int): String = bandBitsAt(bound, side, b)
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"), expr(bandBits("sh", b)).as("bits"))
-    }
-    val exploded = sigs.select(col("doc_id"), col("block"), col("sh"),
-      explode(array(bandStructs: _*)).as("bd"))
-      .select(col("doc_id"), col("block"), col("sh"),
-        col("bd.band").as("band"), col("bd.bits").as("bits"))
-    val a = exploded.select(col("doc_id").as("doc_a"), col("block"),
-      col("band"), col("bits"), col("sh").as("ha"))
-    val b = exploded.select(col("doc_id").as("doc_b"), col("block").as("block_b"),
-      col("band").as("band_b"), col("bits").as("bits_b"), col("sh").as("hb"))
-    val firstMatchingBand = "CASE band " + (0 until bands).map { bnd =>
-      val priorDiffer = (0 until bnd).map(j =>
-        s"${bandBits("ha", j)} != ${bandBits("hb", j)}")
-      s"WHEN $bnd THEN (${if (priorDiffer.isEmpty) "true" else priorDiffer.mkString(" AND ")})"
-    }.mkString(" ") + " END"
-    a.join(b, col("block") === col("block_b") && col("band") === col("band_b") &&
-        col("bits") === col("bits_b") && col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr("cast(bit_count(ha ^ hb) as int)"))
-      .filter(col("hamming") <= maxHamming && expr(firstMatchingBand))
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("doc_b"))
+      s"pigeonhole recall needs 0 <= maxHamming < bands, got $maxHamming vs $bands")
+    val agree = bands - maxHamming
+    require(maxKeyBits(bits, bands, agree) <= 63,
+      s"packed $agree-band key must fit 63 bits, got ${maxKeyBits(bits, bands, agree)}")
+    agree
   }
 
-  /** Generalized-pigeonhole banded-hamming kernel — the headroom past
-    * the single-band join when band buckets saturate. With `bands`
-    * bands and hamming ≤ maxHamming, at most maxHamming bands differ,
-    * so at least `agree = bands − maxHamming` bands match EXACTLY; any
-    * agree-sized subset of those matching bands is one of the
-    * C(bands, agree) enumerated subsets, so an equi-join on (block,
-    * subset-id, concatenated subset bits) has TOTAL recall — the same
-    * output as [[bandedHammingPairs]] (same signature, same exact
-    * hamming filter), but each join key carries `agree` bands' worth
-    * of bits: bucket space 2^(agree·width) instead of 2^width.
+  /** The pigeonhole band keys of a `bits`-wide signature column — the
+    * one key builder behind every banded near-dup join (text simhash,
+    * image phash, video frame postings, the banding probe). The
+    * signature splits into `bands` near-equal contiguous bands; with
+    * hamming ≤ bands − agree at most that many bands differ, so ≥
+    * `agree` bands match EXACTLY and one of the C(bands, agree)
+    * lex-ordered subsets matches on all its bands. Each subset's band
+    * bits are packed (first band highest) into one Long. Returns an
+    * array of (sub, key) structs, `sub` the subset's lex index, for one
+    * explode. `shiftright` is signed, but the mask after it keeps only
+    * bits [lo, lo + width), so it equals an unsigned shift whenever
+    * lo + width ≤ 64 — which every band satisfies, up to `bits` = 64. */
+  private[graft] def pigeonholeKeys(sh: Column, bits: Int, bands: Int,
+      agree: Int): Column = {
+    bandingAgree(bits, bands, bands - agree)
+    val bound = bandBounds(bits, bands)
+    def band(b: Int): Column =
+      shiftright(sh, bound(b)).bitwiseAND(lit((1L << (bound(b + 1) - bound(b))) - 1))
+    array(bandSubsets(bands, agree).zipWithIndex.map { case (s, i) =>
+      struct(lit(i).as("sub"), s.tail.foldLeft(band(s.head)) { (acc, b) =>
+        shiftleft(acc, bound(b + 1) - bound(b)).bitwiseOR(band(b))
+      }.as("key"))
+    }: _*)
+  }
+
+  /** PUBLIC banded-hamming kernel — the reusable 100 TB candidate
+    * generator behind every simhash path. Input: (doc_id, block, sh)
+    * rows — `block` is any coarse blocking key (lang here; pairs never
+    * cross blocks), `sh` a `bits`-wide Long signature. With `bands`
+    * bands and hamming ≤ maxHamming, at least `agree = bands −
+    * maxHamming` bands match exactly, so an equi-join on (block, sub,
+    * key) over the [[pigeonholeKeys]] has TOTAL recall and the exact
+    * hamming filter removes false positives; the recall bound is
+    * property-tested over random (bits, bands, maxHamming) configs in
+    * PropertySpec. Candidate count ∝ key-bucket collisions, not n².
     * Trade: explode factor C(bands, agree) rows per doc vs collision
     * mass ∝ n²/2^(agree·width) — at 60 bits / hamming ≤ 4, the 6-band
     * agree-2 config pays 15 rows/doc (vs 5) for 2²⁰-bucket keys (vs
-    * 2¹²), 256× the per-bucket selectivity; 7-band agree-3 pays 35
-    * rows/doc for ~2²⁶-bucket keys. Which agree wins is a corpus
-    * property — [[chooseBandingConfig]] measures both terms and
-    * [[bandedHammingPairsAuto]] dispatches (at sf10 the natural
-    * corpus stays single-band, 63.3 s vs 160.1 s agree-2; at sf100
-    * its saturated buckets flip the probe to the subset join, 3.7×
-    * less candidate mass — SCALING.md r16). `agree == 1` degenerates
-    * to the single-band kernel and is delegated.
+    * 2¹²). Which agree wins is a corpus property —
+    * [[chooseBandingConfig]] measures both terms and
+    * [[bandedHammingPairsAuto]] dispatches (at sf10 the natural corpus
+    * stays agree-1, 63.3 s vs 160.1 s agree-2; at sf100 its saturated
+    * buckets flip the probe to agree-2, 3.7× less candidate mass —
+    * SCALING.md r16).
     *
-    * Multi-subset collisions dedup WITHOUT a shuffle: per candidate,
-    * one XOR gives the band-match bitmask `bm` (bit b set ⟺ band b
-    * identical), and the lex-FIRST matching subset — `combinations`
-    * enumerates ascending tuples in lex order — is exactly the
+    * Multi-key collisions dedup WITHOUT a shuffle: per candidate, one
+    * XOR gives the band-match bitmask `bm` (bit b set ⟺ band b
+    * identical), and the lex-FIRST matching subset is exactly the
     * `agree` LOWEST set bits of `bm`. A subset `s` IS the lowest-agree
     * bits of `bm` ⟺ `bm` restricted to [0, max(s)] equals s's mask —
-    * both sides of that test are per-subset CONSTANTS, so the filter
-    * is one CASE-pair lookup per candidate: `(bm & below(sub)) =
-    * mask(sub)`, O(bands) work at ANY agree. (Round 17: this replaces
-    * a CASE re-deriving all < sub prior subset keys per candidate —
-    * O(C(bands,agree)²) packed-key folds in one codegen'd projection,
-    * which throttled agree ≥ 3 at 35 subsets / ~600 folds.) */
-  def bandedHammingPairsSubset(sigs: DataFrame, bits: Int, bands: Int,
+    * both sides of that test are per-subset CONSTANTS, so the filter is
+    * one CASE-pair lookup per candidate, O(bands) work at ANY agree
+    * (at agree = 1 it is the "first matching band" rule). */
+  def bandedHammingPairs(sigs: DataFrame, bits: Int, bands: Int,
       maxHamming: Int): DataFrame = {
-    val agree = bands - maxHamming
-    require(agree >= 1,
-      s"pigeonhole recall needs maxHamming < bands, got $maxHamming vs $bands")
-    if (agree == 1) return bandedHammingPairs(sigs, bits, bands, maxHamming)
-    require(bits >= 1 && bits <= 63, s"bits must be in [1, 63], got $bits")
-    require(bands <= bits, s"bands must be in [1, $bits], got $bands")
+    val agree = bandingAgree(bits, bands, maxHamming)
     val bound = bandBounds(bits, bands)
-    // the widest possible subset key is the sum of the `agree` widest
-    // bands (agree × max-width over-rejects valid configs, e.g. the
-    // full-width agree == bands case where the widths sum to `bits`)
-    val widths = bound.sliding(2).map(p => p(1) - p(0)).toSeq
-    require(widths.sorted.reverse.take(agree).sum <= 63,
-      "packed subset key must fit a long")
-    def bandBits(side: String, b: Int): String = bandBitsAt(bound, side, b)
-    def subsetKey(side: String, s: Seq[Int]): String =
-      s.foldLeft("0L") { (acc, b) =>
-        s"(shiftleft($acc, ${bound(b + 1) - bound(b)}) | ${bandBits(side, b)})"
-      }
-    val subsets = (0 until bands).combinations(agree).map(_.toSeq).toVector
-    val keyStructs = subsets.zipWithIndex.map { case (s, i) =>
-      struct(lit(i).as("sub"), expr(subsetKey("sh", s)).as("kbits"))
-    }
+    val subsets = bandSubsets(bands, agree)
     val exploded = sigs.select(col("doc_id"), col("block"), col("sh"),
-      explode(array(keyStructs: _*)).as("kd"))
+      explode(pigeonholeKeys(col("sh"), bits, bands, agree)).as("kd"))
       .select(col("doc_id"), col("block"), col("sh"),
-        col("kd.sub").as("sub"), col("kd.kbits").as("kbits"))
+        col("kd.sub").as("sub"), col("kd.key").as("kbits"))
     val a = exploded.select(col("doc_id").as("doc_a"), col("block"),
       col("sub"), col("kbits"), col("sh").as("ha"))
     val b = exploded.select(col("doc_id").as("doc_b"), col("block").as("block_b"),
       col("sub").as("sub_b"), col("kbits").as("kbits_b"), col("sh").as("hb"))
     // band-match bitmask over the pair's XOR: bit b ⟺ band b identical
-    val bandMatchMask = (0 until bands).map { b =>
+    val xr = col("ha").bitwiseXOR(col("hb"))
+    val bm = (0 until bands).map { b =>
       val mask = ((1L << (bound(b + 1) - bound(b))) - 1) << bound(b)
-      s"(CASE WHEN (xr & ${mask}L) = 0 THEN ${1L << b}L ELSE 0L END)"
-    }.mkString(" + ")
-    val subsetMask = "CASE sub " + subsets.zipWithIndex.map { case (s, i) =>
-      s"WHEN $i THEN ${s.map(1L << _).sum}L"
-    }.mkString(" ") + " END"
-    // bm restricted to bits [0, max(s)]: constant per subset
-    val belowMask = "CASE sub " + subsets.zipWithIndex.map { case (s, i) =>
-      s"WHEN $i THEN ${(1L << (s.max + 1)) - 1}L"
-    }.mkString(" ") + " END"
+      when(xr.bitwiseAND(lit(mask)) === 0L, lit(1L << b)).otherwise(lit(0L))
+    }.reduce(_ bitwiseOR _)
+    def perSubset(v: Seq[Int] => Long): Column =
+      subsets.zipWithIndex.tail.foldLeft(when(col("sub") === 0, lit(v(subsets.head)))) {
+        case (acc, (s, i)) => acc.when(col("sub") === i, lit(v(s)))
+      }
+    // bm restricted to bits [0, max(s)] must equal s's own mask
+    val lexFirst = bm.bitwiseAND(perSubset(s => -1L >>> (63 - s.max))) ===
+      perSubset(_.map(1L << _).reduce(_ | _))
     a.join(b,
         col("block") === col("block_b") && col("sub") === col("sub_b") &&
         col("kbits") === col("kbits_b") && col("doc_a") < col("doc_b"))
-      .withColumn("xr", expr("ha ^ hb"))
-      .withColumn("hamming", expr("cast(bit_count(xr) as int)"))
-      .withColumn("bm", expr(bandMatchMask))
-      .filter(col("hamming") <= maxHamming &&
-        expr(s"(bm & ($belowMask)) = ($subsetMask)"))
+      .withColumn("hamming", bit_count(xr).cast("int"))
+      .filter(col("hamming") <= maxHamming && lexFirst)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** [[bandedHammingPairsSubset]] with a per-key document-frequency
-    * cap — the winnowing/video hot-key discipline applied to the
-    * subset postings: any (block, subset, bits) bucket held by more
-    * than `bandDfCap` docs is corpus boilerplate whose c·(c−1)/2
-    * candidate mass the caller refuses to pay, and is dropped BEFORE
-    * the join. NOT total recall: a pair whose every shared subset key
-    * is over-cap is lost — calibrate the cap with
-    * [[Calibration.capProfile]] over the postings this kernel builds
-    * and price the loss with [[Calibration.recallAtCaps]] (minShared
-    * = 1 matches this kernel's survival rule exactly) before choosing
-    * it over the lossless agree-escalation of
-    * [[bandedHammingPairsAuto]]. MEASURED (r17, `graft.SimhashProbe
-    * --cap 1024`, sf10 documents corpus, 60 bits / 6 bands / hamming
-    * ≤ 4): recall 1.0000 — 15,536,528 of 15,536,528 uncapped pairs
-    * retained; no (subset, bits) bucket exceeds df 1024 at that SF,
-    * so the cap is pure insurance there (SCALING.md round-17). Pair
-    * dedup here is a groupBy on (doc_a, doc_b) — output-sized, not
-    * candidate-sized — because the lex-first surviving subset is
-    * cap-dependent, so the mask trick above cannot canonicalize. */
-  def bandedHammingPairsSubsetCapped(sigs: DataFrame, bits: Int, bands: Int,
+  /** [[bandedHammingPairs]] with a per-key document-frequency cap —
+    * the winnowing/video hot-key discipline applied to the band-key
+    * postings: any (block, sub, key) bucket held by more than
+    * `bandDfCap` docs is corpus boilerplate whose c·(c−1)/2 candidate
+    * mass the caller refuses to pay, and is dropped BEFORE the join.
+    * NOT total recall: a pair whose every shared key is over-cap is
+    * lost — calibrate the cap with [[Calibration.capProfile]] over the
+    * postings this kernel builds and price the loss with
+    * [[Calibration.recallAtCaps]] (minShared = 1 matches this kernel's
+    * survival rule exactly) before choosing it over the lossless
+    * agree-escalation of [[bandedHammingPairsAuto]]. MEASURED (r17,
+    * `graft.SimhashProbe --cap 1024`, sf10 documents corpus, 60 bits /
+    * 6 bands / hamming ≤ 4): recall 1.0000 — 15,536,528 of 15,536,528
+    * uncapped pairs retained; no (sub, key) bucket exceeds df 1024 at
+    * that SF, so the cap is pure insurance there (SCALING.md
+    * round-17). Pair dedup here is a groupBy on (doc_a, doc_b) —
+    * output-sized, not candidate-sized — because the lex-first
+    * surviving subset is cap-dependent, so the mask trick above cannot
+    * canonicalize. */
+  def bandedHammingPairsCapped(sigs: DataFrame, bits: Int, bands: Int,
       maxHamming: Int, bandDfCap: Long): DataFrame = {
-    val agree = bands - maxHamming
-    require(agree >= 2, s"capped kernel is subset-only, got agree $agree")
+    val agree = bandingAgree(bits, bands, maxHamming)
     require(bandDfCap >= 2, s"a cap below 2 keeps no pair, got $bandDfCap")
-    require(bits >= 1 && bits <= 63, s"bits must be in [1, 63], got $bits")
-    require(bands <= bits, s"bands must be in [1, $bits], got $bands")
-    val bound = bandBounds(bits, bands)
-    val widths = bound.sliding(2).map(p => p(1) - p(0)).toSeq
-    require(widths.sorted.reverse.take(agree).sum <= 63,
-      "packed subset key must fit a long")
-    def bandBits(side: String, b: Int): String = bandBitsAt(bound, side, b)
-    def subsetKey(side: String, s: Seq[Int]): String =
-      s.foldLeft("0L") { (acc, b) =>
-        s"(shiftleft($acc, ${bound(b + 1) - bound(b)}) | ${bandBits(side, b)})"
-      }
-    val subsets = (0 until bands).combinations(agree).map(_.toSeq).toVector
-    val keyStructs = subsets.zipWithIndex.map { case (s, i) =>
-      struct(lit(i).as("sub"), expr(subsetKey("sh", s)).as("kbits"))
-    }
     // df per key via a window on the join key itself: one shuffle,
     // reused by the join (same partitioning), never a second pass
     val exploded = sigs.select(col("doc_id"), col("block"), col("sh"),
-      explode(array(keyStructs: _*)).as("kd"))
+      explode(pigeonholeKeys(col("sh"), bits, bands, agree)).as("kd"))
       .select(col("doc_id"), col("block"), col("sh"),
-        col("kd.sub").as("sub"), col("kd.kbits").as("kbits"))
+        col("kd.sub").as("sub"), col("kd.key").as("kbits"))
       .withColumn("df", count(lit(1)).over(
         Window.partitionBy(col("block"), col("sub"), col("kbits"))))
       .filter(col("df") <= bandDfCap)
@@ -1646,8 +1604,8 @@ object Dedup {
     * collision masses the costs were built from — the raw evidence,
     * carried so bench telemetry can expose a verdict that a future
     * corpus would flip. Round 17 — the agree-k escalation (VERDICT
-    * r16 #1): `agree` is the CHOSEN subset size (1 = the single-band
-    * kernel; ≥ 2 = the C(maxHamming+agree, agree)-subset join), and
+    * r16 #1): `agree` is the CHOSEN subset size (1 = single-band
+    * keys; ≥ 2 = the C(maxHamming+agree, agree)-subset keys), and
     * `costByAgree`/`massByAgree` carry every candidate config's
     * measured point so the decade at which the next escalation fires
     * is visible in telemetry before it happens. `costSubset`/
@@ -1689,8 +1647,8 @@ object Dedup {
     * point on the single-band branch at any mass scaling up to
     * n²-in-buckets, yet still routes the genuinely saturated regime
     * (one band ≈ one bucket, mass ≈ n²/2 ≫ rows — the planted
-    * PropertySpec corpus) to the subset join, which is the regime
-    * the subset kernel exists for.
+    * PropertySpec corpus) to the subset keys, which is the regime
+    * agree ≥ 2 exists for.
     * candidatePairs per config is estimated WITHOUT forming pairs:
     * Σ c·(c−1)/2 over the config's key buckets — BOTH configs' keys
     * tagged and exploded in ONE count aggregate over a deterministic
@@ -1723,35 +1681,23 @@ object Dedup {
     // term alone exceeds any realistic mass saving at these widths)
     def feasible(k: Int): Boolean = {
       val bands = maxHamming + k
-      if (bands > bits) return false
-      val bound = bandBounds(bits, bands)
-      val widths = bound.sliding(2).map(p => p(1) - p(0)).toSeq
-      widths.sorted.reverse.take(k).sum <= 63 &&
-        (0 until bands).combinations(k).size <= 128
+      bands <= bits && maxKeyBits(bits, bands, k) <= 63 &&
+        bandSubsets(bands, k).size <= 128
     }
     val agrees = (1 to maxAgree).filter(feasible)
     require(agrees.contains(1), s"single-band config infeasible at bits=$bits")
-    // keys per config, all tagged into ONE explode + count pass
-    def keysFor(k: Int): Seq[Column] = {
-      val bands = maxHamming + k
-      val bound = bandBounds(bits, bands)
-      def subsetKey(s: Seq[Int]): String = s.foldLeft("0L") { (acc, b) =>
-        s"(shiftleft($acc, ${bound(b + 1) - bound(b)}) | ${bandBitsAt(bound, "sh", b)})"
-      }
-      (0 until bands).combinations(k).map(_.toSeq).zipWithIndex.map {
-        case (s, i) => struct(lit(k).as("cfg"), lit(i).as("idx"),
-          expr(subsetKey(s)).as("kbits"))
-      }.toSeq
-    }
-    val keyCount: Map[Int, Int] = agrees.map { k =>
-      k -> (0 until (maxHamming + k)).combinations(k).size
-    }.toMap
+    val keyCount: Map[Int, Int] =
+      agrees.map(k => k -> bandSubsets(maxHamming + k, k).size).toMap
+    // every config's keys, tagged by agree, in ONE explode + count pass
     val masses = sample
-      .select(col("block"),
-        explode(array(agrees.flatMap(keysFor): _*)).as("kd"))
-      .groupBy(col("block"), col("kd"))
+      .select(col("block"), explode(array(agrees.map { k =>
+        struct(lit(k).as("cfg"),
+          pigeonholeKeys(col("sh"), bits, maxHamming + k, k).as("keys"))
+      }: _*)).as("c"))
+      .select(col("block"), col("c.cfg").as("cfg"), explode(col("c.keys")).as("kd"))
+      .groupBy(col("block"), col("cfg"), col("kd"))
       .agg(count(lit(1)).as("c"))
-      .groupBy(col("kd.cfg").as("cfg"))
+      .groupBy(col("cfg"))
       .agg(coalesce(sum(col("c") * (col("c") - lit(1L)) / lit(2L)),
         lit(0L)).cast("double").as("m"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
@@ -1961,8 +1907,8 @@ object Dedup {
 
   /** [[bandedHammingPairs]] with the config probe-chosen by
     * [[chooseBandingConfig]] instead of hand-fixed: same output
-    * whichever branch wins (both kernels are total-recall for
-    * hamming ≤ maxHamming and apply the same exact filter), so
+    * whichever agree wins (every config is total-recall for
+    * hamming ≤ maxHamming and applies the same exact filter), so
     * oracles are untouched — only the candidate-generation cost
     * moves. The probe runs ONCE per (corpus frame, bits, maxHamming)
     * per JVM ([[bandingChoiceCache]]) — and, for file-backed corpora,
@@ -1998,10 +1944,7 @@ object Dedup {
     bandingProbeTelemetry.put(
       s"${corpusLabel(sigs.queryExecution.analyzed)}|bits=$bits|h=$maxHamming",
       choice)
-    if (choice.agree >= 2)
-      bandedHammingPairsSubset(sigs, bits, maxHamming + choice.agree, maxHamming)
-    else
-      bandedHammingPairs(sigs, bits, maxHamming + 1, maxHamming)
+    bandedHammingPairs(sigs, bits, maxHamming + choice.agree, maxHamming)
   }
 
   /** 16-bit banded demo — the pigeonhole proof at toy width: the same
@@ -2078,10 +2021,10 @@ object Dedup {
   // the banding explode + shuffle mass is, so tripling the exploded
   // rows (15 subset keys/doc vs 5 bands/doc) costs 2.5× however few
   // candidates survive. The registered query therefore stays on the
-  // single-band kernel at every SF; [[bandedHammingPairsSubset]]
-  // remains the public, property-tested option for corpora where
-  // collision mass genuinely dominates (dup-dense buckets, higher
-  // maxHamming, narrower signatures).
+  // agree-1 config at every SF; agree ≥ 2 (the same
+  // [[bandedHammingPairs]] kernel) remains the property-tested option
+  // for corpora where collision mass genuinely dominates (dup-dense
+  // buckets, higher maxHamming, narrower signatures).
   // Round 9: the choice is no longer a hand-fixed literal — the
   // registered query dispatches through [[chooseBandingConfig]]'s
   // collision-mass probe, which on THIS corpus picks the same

@@ -217,32 +217,22 @@ object Multimodal {
   }
 
   /** Banded Hamming near-dup join over 64-bit perceptual hashes —
-    * the image twin of the simhash text pipeline, on the same LSH
-    * argument: 4 bands of 16 bits; any pair within Hamming ≤ 3 agrees
-    * EXACTLY on ≥ 1 band (pigeonhole: 3 differing bits cannot touch
-    * 4 bands), so the candidate stage is a plain equi-join on
-    * (band, value) — never an all-pairs compare — and the popcount
-    * verify runs on candidates only. Full recall for maxHamming ≤ 3;
-    * raise bands for looser thresholds (the standard b > d rule).
-    * Returns (doc_id, dup_id, hamming), doc_id < dup_id, distinct. */
+    * the image twin of the simhash text pipeline, through the same
+    * [[Dedup.bandedHammingPairs]] kernel on one constant block: 4 bands
+    * of 16 bits; any pair within Hamming ≤ 3 agrees EXACTLY on ≥ 1
+    * band (pigeonhole: 3 differing bits cannot touch 4 bands), so the
+    * candidate stage is an equi-join on the band keys — never an
+    * all-pairs compare — and the popcount verify runs on candidates
+    * only. Full recall for maxHamming ≤ 3; raise bands for looser
+    * thresholds (the standard b > d rule). Returns (doc_id, dup_id,
+    * hamming), doc_id < dup_id, distinct. */
   def phashNearDup(hashes: Dataset[MediaHash], maxHamming: Int = 3): DataFrame = {
-    require(maxHamming <= 3, "4x16-bit banding guarantees recall only to Hamming 3")
-    val bands = hashes.toDF("doc_id", "phash")
-      .select(col("doc_id"), col("phash"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("phash"), b * 16)
-              .bitwiseAND(lit(0xffffL)).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("phash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    val r = bands.select(col("doc_id").as("dup_id"),
-      col("phash").as("phash2"), col("band"), col("bv"))
-    bands.join(r, Seq("band", "bv"))
-      .filter(col("doc_id") < col("dup_id"))
-      .select(col("doc_id"), col("dup_id"),
-        bit_count(col("phash").bitwiseXOR(col("phash2"))).as("hamming"))
-      .distinct()
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"4x16-bit banding guarantees recall only to Hamming 0..3, got $maxHamming")
+    Dedup.bandedHammingPairs(hashes.toDF("doc_id", "sh").withColumn("block", lit(0)),
+        bits = 64, bands = 4, maxHamming = 3)
       .filter(col("hamming") <= maxHamming)
+      .select(col("doc_a").as("doc_id"), col("doc_b").as("dup_id"), col("hamming"))
   }
 
   /** A REAL (if minimal) container + demuxer, since this container
@@ -406,6 +396,30 @@ object Multimodal {
     * boilerplate frames a dedup pass should not be pairing anyway. */
   private val VideoBandDfCap = 1024L
 
+  /** The video postings recall to this Hamming distance. */
+  private[graft] def requireVideoHamming(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"5-band agree-2 subsets guarantee recall only to Hamming 0..3, got $maxHamming")
+
+  /** The band postings of a (doc_id, frame_no, phash) frame — the
+    * (band, bv) join key of [[videoDupStats]], the frame index and the
+    * stream heads, exposed so [[graft.operators.Calibration.capProfile]]
+    * can profile the REAL posting distribution the [[VideoBandDfCap]]
+    * constant guards. [[Dedup.pigeonholeKeys]] splits the 64-bit phash
+    * into 5 bands (bounds 0/12/25/38/51/64): any frame pair within
+    * hamming ≤ 3 has ≥ 2 exactly-matching bands, so the C(5,2) = 10
+    * two-band subset keys (~25 bits each) have total recall to
+    * hamming 3. `sub` rides the `band` column, the packed two-band bits
+    * ride `bv`. The 2²⁵⁺-bucket key spaces are the lever against band
+    * saturation: narrower 4×16 bands measured 32× the candidate mass at
+    * the same wall time and streamed recall 0.375 (SCALING.md r17/r18). */
+  private[graft] def frameBandPostings(fh: DataFrame): DataFrame =
+    fh.select(col("doc_id"), col("frame_no"), col("phash"),
+        explode(Dedup.pigeonholeKeys(col("phash"), bits = 64, bands = 5, agree = 2))
+          .as("bb"))
+      .select(col("doc_id"), col("frame_no"), col("phash"),
+        col("bb.sub").as("band"), col("bb.key").as("bv"))
+
   /** Duplicate-frame share per video — the [[graft.operators.Dedup
     * .chunkDupStats]] twin for the video modality: a frame is
     * duplicated iff some OTHER document has a frame within
@@ -416,83 +430,20 @@ object Multimodal {
     * clips.
     *
     * Plan shape: signatures are a narrow map (64 bits/frame in
-    * flight, never pixels); candidates come from the same 4×16-bit
-    * banded equi-join as [[phashNearDup]] (full recall to Hamming 3
-    * by pigeonhole, never all-pairs), with the [[VideoBandDfCap]]
+    * flight, never pixels); candidates come from the banded
+    * equi-join on [[frameBandPostings]] (full recall to Hamming 3 by
+    * pigeonhole, never all-pairs), with the [[VideoBandDfCap]]
     * hot-band drop bounding pair mass ∝ cap × postings; the verify
     * popcount runs on candidates only; per-doc stats are two bounded
     * aggregates. The per-run persist of the hash frame is a
     * documented cost (three consumers); callers reclaim it via
     * CacheHygiene.sweep — the pipeline_curate_v6 precedent. */
-  /** The 4×16-bit band postings of a (doc_id, frame_no, phash) frame —
-    * the (band, bv) join key of [[videoDupStats]], exposed so
-    * [[graft.operators.Calibration.capProfile]] can profile the REAL
-    * posting distribution the [[VideoBandDfCap]] constant guards. */
-  private[graft] def frameBandPostings(fh: DataFrame): DataFrame =
-    fh.select(col("doc_id"), col("frame_no"), col("phash"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("band"),
-            shiftrightunsigned(col("phash"), b * 16)
-              .bitwiseAND(lit(0xffffL)).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("frame_no"), col("phash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-
-  /** The agree-2 subset postings over a 5-band split of the 64-bit
-    * phash (round 17 — VERDICT r16 #5, the band-WIDTH lever): any
-    * frame pair within hamming ≤ 3 has ≥ 5 − 3 = 2 exactly-matching
-    * bands, so the C(5,2) = 10 two-band subset keys (~25-26 bits
-    * each) have total recall to hamming 3 like the 4×16 single-band
-    * keys — but with 2²⁵⁺ buckets per key space instead of 2¹⁶, which
-    * is the lever against the band saturation the r16 calibration
-    * measured (hot df 1,664 → 15,398 across one decade, genuine
-    * pairs riding df-(504, 1024] bands). Explode trade: 10 postings
-    * per frame instead of 4. Key layout mirrors
-    * [[graft.operators.Dedup.bandedHammingPairsSubset]]; `sub` rides
-    * the `band` column, the packed two-band bits ride `bv`, so every
-    * (band, bv)-keyed consumer (capProfile, recallAtCaps,
-    * [[videoDupStats]]'s join) works on either posting set. */
-  private[graft] def frameBandPostingsWide(fh: DataFrame): DataFrame = {
-    val bound = IndexedSeq(0, 12, 25, 38, 51, 64)
-    def bandBits(b: Int) =
-      shiftrightunsigned(col("phash"), bound(b))
-        .bitwiseAND(lit((1L << (bound(b + 1) - bound(b))) - 1))
-    val subsets = (0 until 5).combinations(2).map(_.toSeq).toVector
-    fh.select(col("doc_id"), col("frame_no"), col("phash"),
-        explode(array(subsets.zipWithIndex.map { case (s, i) =>
-          struct(lit(i).as("band"),
-            s.foldLeft(lit(0L)) { (acc, b) =>
-              shiftleft(acc, bound(b + 1) - bound(b)).bitwiseOR(bandBits(b))
-            }.as("bv"))
-        }: _*)).as("bb"))
-      .select(col("doc_id"), col("frame_no"), col("phash"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-  }
-
   def videoDupStats(hashes: Dataset[FrameHash], maxHamming: Int = 3,
       bandDfCap: Long = VideoBandDfCap): DataFrame = {
-    require(maxHamming <= 3, "4x16-bit banding guarantees recall only to Hamming 3")
-    videoDupStatsOn(hashes, frameBandPostings, maxHamming, bandDfCap)
-  }
-
-  /** [[videoDupStats]] on the WIDE (5-band agree-2 subset) postings —
-    * same output contract, same hot-key cap semantics, 10 postings per
-    * frame for ~2²⁵-bucket keys. The r17 A/B (`graft.VideoBandProbe`,
-    * SCALING.md round-17 row) measures when the explode is worth the
-    * selectivity: on a corpus whose 16-bit bands saturate, the wide
-    * keys keep the genuine pairs a df cap would otherwise price in
-    * recall. */
-  def videoDupStatsWide(hashes: Dataset[FrameHash], maxHamming: Int = 3,
-      bandDfCap: Long = VideoBandDfCap): DataFrame = {
-    require(maxHamming <= 3, "5-band agree-2 subsets guarantee recall only to Hamming 3")
-    videoDupStatsOn(hashes, frameBandPostingsWide, maxHamming, bandDfCap)
-  }
-
-  private def videoDupStatsOn(hashes: Dataset[FrameHash],
-      postingsOf: DataFrame => DataFrame, maxHamming: Int,
-      bandDfCap: Long): DataFrame = {
+    requireVideoHamming(maxHamming)
     val fh = hashes.toDF("doc_id", "frame_no", "phash")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = postingsOf(fh)
+    val bands = frameBandPostings(fh)
     val hot = bands.groupBy(col("band"), col("bv"))
       .agg(count(lit(1)).as("df")).filter(col("df") > bandDfCap)
       .select(col("band"), col("bv"))
@@ -520,29 +471,26 @@ object Multimodal {
     * [[graft.streaming.StreamingJobs.videoDupStream]] keeps per
     * bucket in the state store. This is the compaction target the
     * stream head's scaladoc promises: ∝ occupied buckets (≤ 10
-    * rows/frame before bucket collapse on the wide keys), never
+    * rows/frame before bucket collapse), never
     * pixels, never corpus bytes. The stream's `bucketCap` does not
     * affect the canonical under the monotone-ingest model (the min
     * doc arrives first, so it is admitted before any cap can bind),
     * so a batch-built index equals the capped stream's retained
     * canonicals. */
-  def frameIndexFrame(hashes: Dataset[FrameHash], wide: Boolean = true): DataFrame = {
-    val fh = hashes.toDF("doc_id", "frame_no", "phash")
-    val postings = if (wide) frameBandPostingsWide(fh) else frameBandPostings(fh)
-    postings.groupBy(col("band"), col("bv"))
+  def frameIndexFrame(hashes: Dataset[FrameHash]): DataFrame =
+    frameBandPostings(hashes.toDF("doc_id", "frame_no", "phash"))
+      .groupBy(col("band"), col("bv"))
       .agg(min(struct(col("doc_id"), col("frame_no"), col("phash"))).as("c"))
       .select(col("band"), col("bv"), col("c.doc_id").as("canon_doc"),
         col("c.frame_no").as("canon_frame"), col("c.phash").as("canon_phash"))
-  }
 
   /** Build + atomically publish the frame index as a
     * [[graft.sources.ManifestTable]] — the video twin of
     * [[graft.operators.Dedup.writeMinhashIndex]]: readers during a
     * rebuild see the old or the new complete index, never half. */
-  def writeFrameIndex(hashes: Dataset[FrameHash], path: String,
-      wide: Boolean = true): Unit = {
+  def writeFrameIndex(hashes: Dataset[FrameHash], path: String): Unit = {
     val spark = hashes.sparkSession
-    val idx = frameIndexFrame(hashes, wide)
+    val idx = frameIndexFrame(hashes)
     val v = graft.sources.ManifestTable.prepare(spark, path)(dir =>
       idx.write.parquet(dir))
     graft.sources.ManifestTable.publish(spark, path, v)
@@ -553,11 +501,10 @@ object Multimodal {
     * the next version. Cost ∝ index + batch; the corpus is never
     * re-scanned. (min on the (doc, frame, phash) STRUCT, not a
     * key-replace upsert — last-writer-wins would be wrong.) */
-  def updateFrameIndex(newHashes: Dataset[FrameHash], path: String,
-      wide: Boolean = true): Unit = {
+  def updateFrameIndex(newHashes: Dataset[FrameHash], path: String): Unit = {
     val spark = newHashes.sparkSession
     val merged = graft.sources.ManifestTable.read(spark, path)
-      .unionByName(frameIndexFrame(newHashes, wide))
+      .unionByName(frameIndexFrame(newHashes))
       .groupBy(col("band"), col("bv"))
       .agg(min(struct(col("canon_doc"), col("canon_frame"),
         col("canon_phash"))).as("c"))
@@ -581,11 +528,9 @@ object Multimodal {
     * equi-join on the bucket key; batch side ingest-sized, index side
     * ∝ occupied buckets; pixels never in flight. */
   def videoDupAgainstIndex(index: DataFrame, newHashes: Dataset[FrameHash],
-      maxHamming: Int = 3, wide: Boolean = true): DataFrame = {
-    require(maxHamming <= 3, (if (wide) "5-band agree-2 subsets" else
-      "4x16-bit banding") + " guarantees recall only to Hamming 3")
-    val fh = newHashes.toDF("doc_id", "frame_no", "phash")
-    val nb = if (wide) frameBandPostingsWide(fh) else frameBandPostings(fh)
+      maxHamming: Int = 3): DataFrame = {
+    requireVideoHamming(maxHamming)
+    val nb = frameBandPostings(newHashes.toDF("doc_id", "frame_no", "phash"))
     val canon = index
       .select(col("canon_doc").as("doc_id"), col("canon_frame").as("frame_no"),
         col("canon_phash").as("phash"), col("band"), col("bv"))
@@ -670,29 +615,16 @@ object Multimodal {
   }
 
   /** Registered video near-dup query: synthetic clip corpus →
-    * [[demuxFrameHashes]] → [[videoDupStatsWide]] → per-doc duplicate-
+    * [[demuxFrameHashes]] → [[videoDupStats]] → per-doc duplicate-
     * frame share, ordered. Rows-only by declared design (the
     * mm_feature_knn precedent: a DuckDB twin would have to
     * re-implement the PNG codec, bilinear thumbnail, and aHash bit
     * math — re-implementation, not verification); SourcesSpec plants
     * the contract instead: a re-encoded duplicate clip is found at
     * share 1.0, a distinct clip is not, and the hot-band cap drops
-    * boilerplate-frame blowups.
-    *
-    * Round 17 — the registered path is the WIDE (5-band agree-2)
-    * banding, on the measured A/B (`graft.VideoBandProbe` at sf10,
-    * SCALING.md round-17 row): the 4×16 bands SATURATE on this corpus
-    * (total candidate-pair mass 2.465 B, max band df 15,398 — the
-    * quadratic regime r16's calibration flagged) where the ~25-bit
-    * subset keys carry 77.0 M (32× less) with max df 1,182, planted-
-    * pair recall 1.0 at EVERY cap probed (narrow needed the 1024 cap
-    * A/B to justify its recall), and the consumer costs the same wall
-    * time (0.79 vs 0.80 s min-of-2). Same output on any corpus where
-    * the cap bites neither side (both posting sets are total-recall
-    * to hamming 3); [[videoDupStats]] stays the explicit narrow
-    * variant. */
+    * boilerplate-frame blowups. */
   def mmVideoNearDup(spark: SparkSession, dir: String): DataFrame =
-    videoDupStatsWide(demuxFrameHashes(syntheticClips(spark, dir)))
+    videoDupStats(demuxFrameHashes(syntheticClips(spark, dir)))
       .orderBy(col("doc_id"))
 
   /** Frame sampling over OPAQUE payloads: every `stride`-th fixed-size

@@ -241,7 +241,8 @@ object StreamingJobs {
   /** Streaming video near-dup — the ingest twin of
     * `Multimodal.videoDupStats`, possible because the per-frame
     * signature is a stateless narrow map (`demuxFrameHashes`) and the
-    * 4×16-bit band keys are pure projections. The stateful step is
+    * band keys (`Multimodal.frameBandPostings`, 10 two-band subset keys
+    * per frame) are pure projections. The stateful step is
     * the minhashDedupStream bucket pattern with one addition: the
     * bucket retains the canonical frame's FULL 64-bit hash, so an
     * arriving frame VERIFIES with a popcount before it is emitted —
@@ -250,102 +251,81 @@ object StreamingJobs {
     * bucket that has admitted more frames stops matching (black
     * frames / title cards would otherwise route a corpus's worth of
     * traffic through one state key). State: ONE fixed-size record per
-    * non-empty bucket (4/frame), sharded by the bucket key; the
-    * bounding/compaction options are minhashDedupStream's. Emits each
-    * frame that near-matches the retained canonical of ANOTHER doc,
-    * per band (consumers distinct on (doc_id, frame_no), like the
-    * batch side). On a batch frame the same code sees each bucket as
-    * one complete group in (doc_id, frame_no) order — StreamingSpec
-    * proves streamed == batch == the planted re-encode expectation.
-    *
-    * Banding note (r17 estimate REPLACED by the r18 measurement —
-    * `graft.StreamVideoProbe` on the saturating sf10 corpus, 1.5 M
-    * frames / 250 k planted re-encode pairs, SCALING.md round-18):
-    * the DEFAULT is now the same 5-band agree-2 subset postings as
-    * the batch `videoDupStatsWide` (10 keys/frame over ~2²⁵-bucket
-    * key spaces), because the narrow 4×16 head's recall collapse on
-    * a saturated corpus is structural, not cap-tunable — measured
-    * planted-pair recall 0.375 at the shipped cap AND bit-identical
-    * 0.375 uncapped: the loss is CANONICAL DISPLACEMENT (a 16-bit
-    * bucket retains one canonical hash; once the key space saturates
-    * the canonical is almost never the genuine partner), which no
-    * `bucketCap` setting recovers. The wide keys measured recall
-    * 249,999/250,000 (≈1.0; the one miss is the same displacement
-    * mechanism at 2²⁵ scale) on identical input. The price is the
-    * state model: narrow is bounded by construction at 4 × 2¹⁶ =
-    * 262,144 fixed-size records EVER (measured 158,888 rows /
-    * 63 MB), wide grows with distinct frame signatures (measured
-    * 5,000,705 rows / 1.67 GB — 31× here, NOT the r17 scaladoc's
-    * "2.5×/frame" estimate, which priced insertions and missed that
-    * narrow's TOTAL is key-space-capped). At ingest scale the wide
-    * head therefore needs the compaction path minhashDedupStream's
-    * scaladoc documents (periodic snapshot of the store into the
-    * batch index + restart against it); `wide = false` remains the
-    * bounded-state option for memory-pinned deployments that accept
-    * the measured recall price on saturating corpora (below
-    * saturation — e.g. the sf0.1 corpus — narrow recall is 1.0 and
-    * the ceiling is a feature). */
+    * non-empty bucket, sharded by the bucket key; it grows with
+    * distinct frame signatures, so at ingest scale the store is
+    * bounded by [[videoDupStreamAgainstIndex]]'s snapshot + restart.
+    * Emits each frame that near-matches the retained canonical of
+    * ANOTHER doc, per band key (consumers distinct on (doc_id,
+    * frame_no), like the batch side). On a batch frame the same code
+    * sees each bucket as one complete group in (doc_id, frame_no)
+    * order — StreamingSpec proves streamed == batch == the planted
+    * re-encode expectation. The keys are 5-band agree-2 subsets, not
+    * 4×16-bit bands, because a 16-bit bucket's one canonical is
+    * displaced once the key space saturates: measured streamed recall
+    * 0.375 vs ≈1.0 on the saturating corpus (SCALING.md r18). */
   def videoDupStream(hashes: Dataset[graft.operators.Multimodal.FrameHash],
-      maxHamming: Int = 3, bucketCap: Long = 4096L,
-      wide: Boolean = true): Dataset[FrameDupOut] = {
+      maxHamming: Int = 3, bucketCap: Long = 4096L): Dataset[FrameDupOut] = {
     import hashes.sparkSession.implicits._
-    require(maxHamming <= 3, (if (wide) "5-band agree-2 subsets" else
-      "4x16-bit banding") + " guarantees recall only to Hamming 3")
-    val fh = hashes.toDF("doc_id", "frame_no", "phash")
-    // the SAME posting projections as the batch kernels — stateless
-    // narrow maps, so the stream and batch sides bucket identically
-    val bands =
-      (if (wide) graft.operators.Multimodal.frameBandPostingsWide(fh)
-       else graft.operators.Multimodal.frameBandPostings(fh))
-        .as[FrameBandHit]
+    graft.operators.Multimodal.requireVideoHamming(maxHamming)
+    // the SAME posting projection as the batch kernels — a stateless
+    // narrow map, so the stream and batch sides bucket identically
+    val bands = graft.operators.Multimodal
+      .frameBandPostings(hashes.toDF("doc_id", "frame_no", "phash"))
+      .as[FrameBandHit]
     bands.groupByKey(b => (b.band, b.bv))
       .flatMapGroupsWithState[FrameBucketState, FrameDupOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: (Int, Long), it: Iterator[FrameBandHit],
             state: GroupState[FrameBucketState]) =>
-          // (doc_id, frame_no) order WITHIN one micro-batch: the emitted
-          // set is deterministic for any interleaving inside a batch; on
-          // a batch frame (one batch = everything) that is global order.
-          // ACROSS batches the canonical is the min doc admitted SO FAR:
-          // if a lower doc_id first arrives in a LATER batch, earlier
-          // batches' rows were matched against the then-canonical and are
-          // not retracted (append mode) — the (doc_id, dup_of) attribution
-          // can differ from the single-batch run, while "which frames are
-          // flagged at all" still requires a ≤maxHamming canonical match.
-          // StreamingSpec pins both: the single-batch == batch equality
-          // and the two-batch late-canonical contract.
-          val hits = it.toArray.sortBy(h => (h.doc_id, h.frame_no))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FrameDupOut]
-          var st = state.getOption
-            .getOrElse(FrameBucketState(Long.MaxValue, 0, 0L, 0L))
-          hits.foreach { h =>
-            if (st.seen < bucketCap) {
-              if (st.minDoc == Long.MaxValue)
-                st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
-                  phash = h.phash)
-              else if (h.doc_id != st.minDoc) {
-                val ham = java.lang.Long.bitCount(h.phash ^ st.phash)
-                if (ham <= maxHamming)
-                  out += FrameDupOut(h.doc_id, h.frame_no, st.minDoc, key._1, ham)
-                // canonical stays the minimum (doc, frame) admitted
-                if (h.doc_id < st.minDoc)
-                  st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
-                    phash = h.phash)
-              }
-            }
-            st = st.copy(seen = st.seen + 1)
-          }
-          state.update(st)
-          out.iterator
+          admitFrames(key._1, it.toArray, state, maxHamming, bucketCap)
       }
+  }
+
+  /** One bucket's stateful step, shared by both video heads. Hits are
+    * taken in (doc_id, frame_no) order WITHIN one micro-batch: the
+    * emitted set is deterministic for any interleaving inside a batch;
+    * on a batch frame (one batch = everything) that is global order.
+    * ACROSS batches the canonical is the min doc admitted SO FAR: if a
+    * lower doc_id first arrives in a LATER batch, earlier batches' rows
+    * were matched against the then-canonical and are not retracted
+    * (append mode) — the (doc_id, dup_of) attribution can differ from
+    * the single-batch run, while "which frames are flagged at all"
+    * still requires a ≤maxHamming canonical match. StreamingSpec pins
+    * both: the single-batch == batch equality and the two-batch
+    * late-canonical contract. */
+  private def admitFrames(band: Int, hits: Array[FrameBandHit],
+      state: GroupState[FrameBucketState], maxHamming: Int,
+      bucketCap: Long): Iterator[FrameDupOut] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FrameDupOut]
+    var st = state.getOption
+      .getOrElse(FrameBucketState(Long.MaxValue, 0, 0L, 0L))
+    hits.sortBy(h => (h.doc_id, h.frame_no)).foreach { h =>
+      if (st.seen < bucketCap) {
+        if (st.minDoc == Long.MaxValue)
+          st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
+            phash = h.phash)
+        else if (h.doc_id != st.minDoc) {
+          val ham = java.lang.Long.bitCount(h.phash ^ st.phash)
+          if (ham <= maxHamming)
+            out += FrameDupOut(h.doc_id, h.frame_no, st.minDoc, band, ham)
+          // canonical stays the minimum (doc, frame) admitted
+          if (h.doc_id < st.minDoc)
+            st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
+              phash = h.phash)
+        }
+      }
+      st = st.copy(seen = st.seen + 1)
+    }
+    state.update(st)
+    out.iterator
   }
 
   case class FrameBandHitIdx(doc_id: Long, frame_no: Int, phash: Long,
     band: Int, bv: Long, canon_doc: Option[Long], canon_phash: Option[Long])
 
   /** [[videoDupStream]] restarted AGAINST a compacted frame index —
-    * the compaction path the wide head's state model needs at ingest
-    * scale (r18 measurement: wide state grows with distinct frame
+    * the compaction path the head's state model needs at ingest
+    * scale (r18 measurement: state grows with distinct frame
     * signatures, 5.0 M rows / 1.67 GB on the saturating sf10 corpus),
     * now code instead of a scaladoc promise. The history's bucket
     * canonicals (min (doc_id, frame_no) + full 64-bit hash — exactly
@@ -367,18 +347,15 @@ object StreamingJobs {
     * (same emissions for post-snapshot frames, state rows = new
     * buckets only) is pinned by StreamingSpec. */
   def videoDupStreamAgainstIndex(hashes: Dataset[graft.operators.Multimodal.FrameHash],
-      index: DataFrame, maxHamming: Int = 3, bucketCap: Long = 4096L,
-      wide: Boolean = true): Dataset[FrameDupOut] = {
+      index: DataFrame, maxHamming: Int = 3,
+      bucketCap: Long = 4096L): Dataset[FrameDupOut] = {
     import hashes.sparkSession.implicits._
-    require(maxHamming <= 3, (if (wide) "5-band agree-2 subsets" else
-      "4x16-bit banding") + " guarantees recall only to Hamming 3")
-    val fh = hashes.toDF("doc_id", "frame_no", "phash")
-    val bands =
-      (if (wide) graft.operators.Multimodal.frameBandPostingsWide(fh)
-       else graft.operators.Multimodal.frameBandPostings(fh))
-        .join(index.select(col("band"), col("bv"), col("canon_doc"),
-          col("canon_phash")), Seq("band", "bv"), "left_outer")
-        .as[FrameBandHitIdx]
+    graft.operators.Multimodal.requireVideoHamming(maxHamming)
+    val bands = graft.operators.Multimodal
+      .frameBandPostings(hashes.toDF("doc_id", "frame_no", "phash"))
+      .join(index.select(col("band"), col("bv"), col("canon_doc"),
+        col("canon_phash")), Seq("band", "bv"), "left_outer")
+      .as[FrameBandHitIdx]
     bands.groupByKey(b => (b.band, b.bv))
       .flatMapGroupsWithState[FrameBucketState, FrameDupOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -398,31 +375,13 @@ object StreamingJobs {
                 else Iterator.empty
               }
             case None =>
-              val out = scala.collection.mutable.ArrayBuffer.empty[FrameDupOut]
-              var st = state.getOption
-                .getOrElse(FrameBucketState(Long.MaxValue, 0, 0L, 0L))
-              hits.foreach { h =>
-                if (st.seen < bucketCap) {
-                  if (st.minDoc == Long.MaxValue)
-                    st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
-                      phash = h.phash)
-                  else if (h.doc_id != st.minDoc) {
-                    val ham = java.lang.Long.bitCount(h.phash ^ st.phash)
-                    if (ham <= maxHamming)
-                      out += FrameDupOut(h.doc_id, h.frame_no, st.minDoc,
-                        key._1, ham)
-                    if (h.doc_id < st.minDoc)
-                      st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
-                        phash = h.phash)
-                  }
-                }
-                st = st.copy(seen = st.seen + 1)
-              }
-              state.update(st)
-              out.iterator
+              admitFrames(key._1, hits.map(h =>
+                FrameBandHit(h.doc_id, h.frame_no, h.phash, h.band, h.bv)),
+                state, maxHamming, bucketCap)
           }
       }
   }
+
 
   // ------------------------------------------------------------- CDC changelog
   case class CdcEv(user_id: Long, event_id: Long, event_type: String,

@@ -63,18 +63,17 @@ class CalibrationSpec extends SparkSpec {
     import s.implicits._
     // 3 genuine clips ×2 copies + 10 clips sharing one boilerplate
     // band value — profile the SAME (band, bv) postings videoDupStats
-    // bands on, then run it with the recommended cap
+    // caps (10 subset keys per frame), then run it with the
+    // recommended cap
     def clip(id: Long, key: Long, size: Int) = Multimodal.RawMedia(id,
       Multimodal.packFrames((0 until 3).map(f => Multimodal.blockFramePng(key, f, size))))
     val corpus = (0L until 3L).flatMap(k =>
       Seq(clip(k * 2, 10L + k, 16), clip(k * 2 + 1, 10L + k, 24))) ++
       (100L until 110L).map(id => clip(id, 777L, 16))
     val hashes = Multimodal.demuxFrameHashes(corpus.toDS())
-    val postings = hashes.toDF("doc_id", "frame_no", "phash")
-      .select(col("doc_id"), explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), shiftrightunsigned(col("phash"), b * 16)
-          .bitwiseAND(lit(0xffffL)).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
+    val postings = Multimodal.frameBandPostings(
+        hashes.toDF("doc_id", "frame_no", "phash"))
+      .select(col("doc_id"), col("band"), col("bv"))
       .distinct()
     // genuine pairs: band values shared by 2 docs; boilerplate: by 10
     val p = Calibration.capProfile(postings, Seq("band", "bv"),

@@ -11,10 +11,11 @@ import graft.streaming.StreamingJobs.Ev
   * in-memory brute-force references, over randomized inputs. */
 class PropertySpec extends SparkSpec {
 
-  /** Drive a ScalaCheck Gen manually: 10 seeded samples per property
-    * (deterministic across runs — no scalatestplus bridge needed). */
-  private def forAll[A](gen: Gen[A])(body: A => Unit): Unit =
-    (0 until 10).foreach { i =>
+  /** Drive a ScalaCheck Gen manually: `samples` seeded samples per
+    * property (deterministic across runs — no scalatestplus bridge
+    * needed). */
+  private def forAll[A](gen: Gen[A], samples: Int = 10)(body: A => Unit): Unit =
+    (0 until samples).foreach { i =>
       body(gen.pureApply(Gen.Parameters.default, Seed(42L + i)))
     }
 
@@ -203,55 +204,75 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: bandedHammingPairs has total recall vs all-pairs for any (bits, bands, maxHamming)") {
+  /** Random signatures with planted near-dups: each base also appears
+    * with <= maxHamming bits flipped. */
+  private def plantedSigs(bits: Int, maxHamming: Int, base: List[Long],
+      flips: List[Int]): List[Long] = {
+    val mask = if (bits == 64) -1L else (1L << bits) - 1
+    val bases = base.map(_ & mask)
+    val clones = bases.zip(flips).map { case (b, f) =>
+      (0 until f).foldLeft(b)((acc, i) => acc ^ (1L << ((b.toInt.abs + i * 7) % bits)))
+    }
+    bases ++ clones
+  }
+
+  /** bandedHammingPairs must equal the all-pairs popcount reference and
+    * emit each pair exactly once despite multi-key collisions. */
+  private def checkBandedVsAllPairs(bits: Int, bands: Int, maxHamming: Int,
+      sigs: List[Long]): Unit = {
     val s = spark
     import s.implicits._
+    val df = sigs.zipWithIndex
+      .map { case (sh, i) => (i.toLong, "x", sh) }.toDF("doc_id", "block", "sh")
+    val got = graft.operators.Dedup
+      .bandedHammingPairs(df, bits, bands, maxHamming)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    val expect = (for {
+      (a, i) <- sigs.zipWithIndex
+      (b, j) <- sigs.zipWithIndex
+      if i < j
+      h = java.lang.Long.bitCount(a ^ b)
+      if h <= maxHamming
+    } yield (i.toLong, j.toLong, h)).toSet
+    assert(got.length == got.toSet.size,
+      s"bits=$bits bands=$bands maxHamming=$maxHamming: duplicate pairs emitted")
+    assert(got.toSet == expect,
+      s"bits=$bits bands=$bands maxHamming=$maxHamming: " +
+        s"missing=${(expect -- got.toSet).take(3)} extra=${(got.toSet -- expect).take(3)}")
+  }
+
+  test("property: bandedHammingPairs has total recall vs all-pairs for any (bits, bands, maxHamming)") {
     // random configs + random signatures with planted near-dups: the
-    // pigeonhole guarantee (maxHamming < bands ⇒ every qualifying pair
-    // matches exactly on ≥1 band) must hold for ARBITRARY band splits,
-    // including uneven widths (bits not divisible by bands)
+    // generalized pigeonhole (hamming <= h over `bands` bands => some
+    // (bands - h)-subset of bands matches exactly) must hold for ANY
+    // agree >= 1 and arbitrary band splits, including uneven widths
+    // (bits not divisible by bands)
     val cfgGen: Gen[(Int, Int, Int, List[Long])] = for {
       bits <- Gen.choose(8, 48)
       bands <- Gen.choose(2, 6)
-      maxHamming <- Gen.choose(0, bands - 1)
+      agree <- Gen.choose(1, bands)
       n <- Gen.choose(10, 35)
       base <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
-      flips <- Gen.listOfN(n, Gen.choose(0, maxHamming))
-    } yield {
-      val mask = (1L << bits) - 1
-      val bases = base.map(_ & mask)
-      // plant near-dups: each base also appears with <= maxHamming bits flipped
-      val clones = bases.zip(flips).map { case (b, f) =>
-        (0 until f).foldLeft(b)((acc, i) => acc ^ (1L << ((b.toInt.abs + i * 7) % bits)))
-      }
-      (bits, bands, maxHamming, bases ++ clones)
+      flips <- Gen.listOfN(n, Gen.choose(0, bands - agree))
+    } yield (bits, bands, bands - agree, plantedSigs(bits, bands - agree, base, flips))
+    forAll(cfgGen, samples = 20) { case (bits, bands, maxHamming, sigs) =>
+      checkBandedVsAllPairs(bits, bands, maxHamming, sigs)
     }
-    forAll(cfgGen) { case (bits, bands, maxHamming, sigs) =>
-      val df = sigs.zipWithIndex
-        .map { case (sh, i) => (i.toLong, "x", sh) }.toDF("doc_id", "block", "sh")
-      val got = graft.operators.Dedup
-        .bandedHammingPairs(df, bits, bands, maxHamming)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val expect = (for {
-        (a, i) <- sigs.zipWithIndex
-        (b, j) <- sigs.zipWithIndex
-        if i < j
-        h = java.lang.Long.bitCount(a ^ b)
-        if h <= maxHamming
-      } yield (i.toLong, j.toLong, h)).toSet
-      assert(got == expect,
-        s"bits=$bits bands=$bands maxHamming=$maxHamming: " +
-          s"missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
+    // the two fixed 64-bit geometries in production: the video frame
+    // postings (5 bands, agree 2) and the image phash join (4 bands,
+    // agree 1) — full-width signatures, top band ending at bit 63
+    val rnd = new scala.util.Random(7L)
+    for ((bands, maxHamming) <- Seq((5, 3), (4, 3))) {
+      val base = List.fill(30)(rnd.nextLong())
+      val flips = List.fill(30)(rnd.nextInt(maxHamming + 1))
+      checkBandedVsAllPairs(64, bands, maxHamming, plantedSigs(64, maxHamming, base, flips))
     }
   }
 
   test("property: bandedHammingPairsSubset equals all-pairs for any config with agree >= 2") {
-    val s = spark
-    import s.implicits._
-    // the generalized pigeonhole (hamming <= h over `bands` bands =>
-    // some (bands - h)-subset of bands matches exactly) must hold for
-    // arbitrary uneven band splits, and the subset join must emit each
-    // pair exactly once despite multi-subset collisions
+    // the subset-keyed regime on its own: every config here needs
+    // multi-band keys (agree >= 2), so the join must emit each pair
+    // exactly once although a pair can share several subset keys
     val cfgGen: Gen[(Int, Int, Int, List[Long])] = for {
       bits <- Gen.choose(12, 48)
       bands <- Gen.choose(3, 6)
@@ -259,33 +280,48 @@ class PropertySpec extends SparkSpec {
       n <- Gen.choose(10, 35)
       base <- Gen.listOfN(n, Gen.choose(Long.MinValue, Long.MaxValue))
       flips <- Gen.listOfN(n, Gen.choose(0, maxHamming))
-    } yield {
-      val mask = (1L << bits) - 1
-      val bases = base.map(_ & mask)
-      val clones = bases.zip(flips).map { case (b, f) =>
-        (0 until f).foldLeft(b)((acc, i) => acc ^ (1L << ((b.toInt.abs + i * 7) % bits)))
-      }
-      (bits, bands, maxHamming, bases ++ clones)
-    }
+    } yield (bits, bands, maxHamming, plantedSigs(bits, maxHamming, base, flips))
     forAll(cfgGen) { case (bits, bands, maxHamming, sigs) =>
-      val df = sigs.zipWithIndex
-        .map { case (sh, i) => (i.toLong, "x", sh) }.toDF("doc_id", "block", "sh")
-      val got = graft.operators.Dedup
-        .bandedHammingPairsSubset(df, bits, bands, maxHamming)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      val expect = (for {
-        (a, i) <- sigs.zipWithIndex
-        (b, j) <- sigs.zipWithIndex
-        if i < j
-        h = java.lang.Long.bitCount(a ^ b)
-        if h <= maxHamming
-      } yield (i.toLong, j.toLong, h)).toSet
-      assert(got.length == got.toSet.size,
-        s"bits=$bits bands=$bands maxHamming=$maxHamming: duplicate pairs emitted")
-      assert(got.toSet == expect,
-        s"bits=$bits bands=$bands maxHamming=$maxHamming: " +
-          s"missing=${(expect -- got.toSet).take(3)} extra=${(got.toSet -- expect).take(3)}")
+      checkBandedVsAllPairs(bits, bands, maxHamming, sigs)
     }
+  }
+
+  private def bandingSigs = {
+    val s = spark
+    import s.implicits._
+    Seq((0L, "x", 123456789L), (1L, "x", 123456789L), (2L, "x", 987654321L))
+      .toDF("doc_id", "block", "sh")
+  }
+
+  /** Both banded kernels must reject the geometry up front. */
+  private def assertBandingRejects(bits: Int, bands: Int, maxHamming: Int): Unit = {
+    intercept[IllegalArgumentException](graft.operators.Dedup
+      .bandedHammingPairs(bandingSigs, bits, bands, maxHamming))
+    intercept[IllegalArgumentException](graft.operators.Dedup
+      .bandedHammingPairsCapped(bandingSigs, bits, bands, maxHamming, bandDfCap = 10L))
+  }
+
+  test("banded kernels reject bits outside [1, 64]") {
+    assertBandingRejects(bits = 0, bands = 1, maxHamming = 0)
+    assertBandingRejects(bits = 65, bands = 5, maxHamming = 3)
+  }
+
+  test("banded kernels reject bands outside [1, bits]") {
+    assertBandingRejects(bits = 16, bands = 0, maxHamming = 0)
+    assertBandingRejects(bits = 16, bands = 17, maxHamming = 3)
+  }
+
+  test("banded kernels reject maxHamming outside [0, bands)") {
+    // -1 used to yield agree = bands + 1: no subset, an empty result
+    assertBandingRejects(bits = 60, bands = 6, maxHamming = -1)
+    assertBandingRejects(bits = 60, bands = 6, maxHamming = 6)
+  }
+
+  test("banded kernels reject a packed key wider than 63 bits") {
+    // a single 64-bit band: its mask (1L << 64) - 1 would be 0
+    assertBandingRejects(bits = 64, bands = 1, maxHamming = 0)
+    // five bands all agreeing pack 64 bits
+    assertBandingRejects(bits = 64, bands = 5, maxHamming = 0)
   }
 
   test("banding probe: subset on a saturated band, single-band on spread signatures, auto output invariant") {
@@ -411,18 +447,18 @@ class PropertySpec extends SparkSpec {
       (2001L, "x", (mix(9999L) & mask60) ^ (1L << 3)))
     val df = (spread ++ cluster ++ pair).toDF("doc_id", "block", "sh")
     val uncapped = graft.operators.Dedup
-      .bandedHammingPairsSubset(df, 60, 6, 4)
+      .bandedHammingPairs(df, 60, 6, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     // cap far above any key's df: identical output (every key kept)
     val loose = graft.operators.Dedup
-      .bandedHammingPairsSubsetCapped(df, 60, 6, 4, bandDfCap = 10000L)
+      .bandedHammingPairsCapped(df, 60, 6, 4, bandDfCap = 10000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(loose == uncapped, "a cap above max df must be lossless")
     // tight cap: the 50-doc cluster's keys all have df 50 > 10 and are
     // dropped (its C(50,2) pairs are the candidate mass the cap
     // refuses); the planted pair's keys have df 2 and survive
     val tight = graft.operators.Dedup
-      .bandedHammingPairsSubsetCapped(df, 60, 6, 4, bandDfCap = 10L)
+      .bandedHammingPairsCapped(df, 60, 6, 4, bandDfCap = 10L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(tight.contains((2000L, 2001L, 1)),
       s"low-df planted pair must survive the cap: ${tight.take(5)}")
@@ -592,7 +628,7 @@ class PropertySpec extends SparkSpec {
     val df = Seq((0L, "x", 123456789L), (1L, "x", 123456789L),
       (2L, "x", 987654321L)).toDF("doc_id", "block", "sh")
     val got = graft.operators.Dedup
-      .bandedHammingPairsSubset(df, 63, 5, 0)
+      .bandedHammingPairs(df, 63, 5, 0)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((0L, 1L)), s"exact-dup pair expected: $got")
   }

@@ -516,17 +516,17 @@ class SourcesSpec extends SparkSpec {
     val batch = hashes.filter(_.doc_id >= 3L).toDS()
     // reference: the deterministic batch frame of the stream head
     val inline = graft.streaming.StreamingJobs
-      .videoDupStream(hashes.toDS(), wide = true).collect()
+      .videoDupStream(hashes.toDS()).collect()
       .map(d => (d.doc_id, d.frame_no, d.dup_of, d.band, d.hamming))
       .filter(_._1 >= 3L).toSet
     assert(inline.exists(_._1 == 3L) && inline.exists(_._1 == 5L),
       s"planted cross-split AND in-batch pairs expected: $inline")
 
     val tmp = java.nio.file.Files.createTempDirectory("vf-index").toString
-    Multimodal.writeFrameIndex(hist, tmp, wide = true)
+    Multimodal.writeFrameIndex(hist, tmp)
     // one-shot probe of the whole ingest batch
     val oneShot = Multimodal
-      .videoDupAgainstIndex(ManifestTable.read(s, tmp), batch, wide = true)
+      .videoDupAgainstIndex(ManifestTable.read(s, tmp), batch)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3), r.getInt(4))).toSet
     assert(oneShot == inline, s"one-shot probe != inline: $oneShot vs $inline")
@@ -537,12 +537,12 @@ class SourcesSpec extends SparkSpec {
     val b1 = hashes.filter(h => h.doc_id >= 3L && h.doc_id < 5L).toDS()
     val b2 = hashes.filter(_.doc_id == 5L).toDS()
     val r1 = Multimodal
-      .videoDupAgainstIndex(ManifestTable.read(s, tmp), b1, wide = true)
+      .videoDupAgainstIndex(ManifestTable.read(s, tmp), b1)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3), r.getInt(4))).toSet
-    Multimodal.updateFrameIndex(b1, tmp, wide = true)
+    Multimodal.updateFrameIndex(b1, tmp)
     val r2 = Multimodal
-      .videoDupAgainstIndex(ManifestTable.read(s, tmp), b2, wide = true)
+      .videoDupAgainstIndex(ManifestTable.read(s, tmp), b2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getInt(3), r.getInt(4))).toSet
     assert((r1 union r2) == inline, s"two-step != inline: ${r1 union r2}")
@@ -552,13 +552,13 @@ class SourcesSpec extends SparkSpec {
     val folded = ManifestTable.read(s, tmp).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3), r.getLong(4))).toSet
     val scratch = Multimodal.frameIndexFrame(
-        hashes.filter(_.doc_id < 5L).toDS(), wide = true).collect()
+        hashes.filter(_.doc_id < 5L).toDS()).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3), r.getLong(4))).toSet
     assert(folded == scratch, "min-merge fold must equal a from-scratch index")
     CacheHygiene.sweep(s)
   }
 
-  test("wide video banding: agree-2 subset keys match the narrow output and keep pigeonhole recall") {
+  test("video banding: videoDupStats equals an all-pairs popcount reference; subset keys keep pigeonhole recall") {
     val s = spark
     import s.implicits._
     import graft.operators.Multimodal
@@ -569,14 +569,19 @@ class SourcesSpec extends SparkSpec {
     val corpus = (Seq(clip(0L, 10L, 16), clip(1L, 10L, 24), clip(2L, 99L, 16)) ++
       (100L until 110L).map(id => clip(id, 1234L, 16))).toDS()
     val hashes = Multimodal.demuxFrameHashes(corpus)
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    val frames = hashes.collect().toSeq
+    // all-pairs reference: a frame is duplicated iff a frame of
+    // ANOTHER doc lies within hamming 3 (the cap does not bite here)
+    val expect = frames.groupBy(_.doc_id).map { case (d, fs) =>
+      val dup = fs.count(f => frames.exists(o => o.doc_id != d &&
+        java.lang.Long.bitCount(f.phash ^ o.phash) <= 3)).toLong
+      d -> ((fs.size.toLong, dup,
+        BigDecimal(dup.toDouble / fs.size).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+    }
+    val got = Multimodal.videoDupStats(hashes).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    // same contract as the 4x16 path on the planted corpus — both
-    // posting sets are total-recall to hamming 3, so outputs agree
-    val narrow = asMap(Multimodal.videoDupStats(hashes))
-    val wide = asMap(Multimodal.videoDupStatsWide(hashes))
-    assert(wide == narrow, s"wide != narrow: $wide vs $narrow")
-    assert(wide(0L) == ((3L, 3L, 1.0)) && wide(2L) == ((3L, 0L, 0.0)), s"$wide")
+    assert(got == expect, s"banded != all-pairs: $got vs $expect")
+    assert(got(0L) == ((3L, 3L, 1.0)) && got(2L) == ((3L, 0L, 0.0)), s"$got")
     CacheHygiene.sweep(s)
     // pigeonhole on the raw keys: ANY 64-bit pair with hamming <= 3
     // shares >= 1 of the 10 two-band subset keys (5 bands, <= 3 can
@@ -596,7 +601,7 @@ class SourcesSpec extends SparkSpec {
     }
     val fhA = pairs.zipWithIndex.map { case ((a, _), i) => (i.toLong * 2, 0, a) }
     val fhB = pairs.zipWithIndex.map { case ((_, b), i) => (i.toLong * 2 + 1, 0, b) }
-    val posted = Multimodal.frameBandPostingsWide(
+    val posted = Multimodal.frameBandPostings(
       (fhA ++ fhB).toDF("doc_id", "frame_no", "phash"))
       .select(col("doc_id"), col("band"), col("bv"))
       .as[(Long, Int, Long)].collect()
@@ -605,6 +610,28 @@ class SourcesSpec extends SparkSpec {
       if (java.lang.Long.bitCount(a ^ b) <= 3)
         assert(posted(i.toLong * 2).intersect(posted(i.toLong * 2 + 1)).nonEmpty,
           s"hamming<=3 pair $i must share a subset key")
+    }
+    // published frame indexes stay valid: the keys are bit-identical to
+    // the formula they were built with — bounds 0/12/25/38/51/64,
+    // unsigned shifts, lex-ordered two-band subsets packed first band
+    // highest
+    val bound = IndexedSeq(0, 12, 25, 38, 51, 64)
+    def bandBits(h: Long, b: Int) =
+      (h >>> bound(b)) & ((1L << (bound(b + 1) - bound(b))) - 1)
+    def formula(h: Long): Set[(Int, Long)] =
+      (0 until 5).combinations(2).zipWithIndex.map { case (sub, i) =>
+        i -> sub.foldLeft(0L)((acc, b) =>
+          (acc << (bound(b + 1) - bound(b))) | bandBits(h, b))
+      }.toSet
+    val fixed = Seq(0L, -1L, Long.MinValue, Long.MaxValue,
+      0x0123456789ABCDEFL, 0xFEDCBA9876543210L, mix(1L), mix(2L))
+    val pinned = Multimodal.frameBandPostings(fixed.zipWithIndex
+        .map { case (h, i) => (i.toLong, 0, h) }.toDF("doc_id", "frame_no", "phash"))
+      .select(col("doc_id"), col("band"), col("bv"))
+      .as[(Long, Int, Long)].collect()
+      .groupBy(_._1).map { case (d, rows) => d -> rows.map(r => (r._2, r._3)).toSet }
+    fixed.zipWithIndex.foreach { case (h, i) =>
+      assert(pinned(i.toLong) == formula(h), f"postings of $h%016x moved")
     }
     CacheHygiene.sweep(s)
   }

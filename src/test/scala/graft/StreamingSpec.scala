@@ -598,24 +598,30 @@ class StreamingSpec extends SparkSpec {
       "ingest-time fingerprints must equal the batch kernel bit-for-bit")
   }
 
-  test("stream video near-dup: streamed == batch, re-encode matched with popcount verify, bucket cap bites") {
+  /** Planted clips: 0/1 same content re-encoded (16 px vs 24 px), 2
+    * distinct — the SourcesSpec corpus at the stream head. */
+  private def plantedReencodeHashes: Seq[graft.operators.Multimodal.FrameHash] = {
     val s = spark
     import s.implicits._
     import graft.operators.Multimodal
-    import graft.operators.Multimodal.{FrameHash, RawMedia}
-    // planted clips: 0/1 same content re-encoded (16 px vs 24 px),
-    // 2 distinct — the SourcesSpec corpus at the stream head
+    import graft.operators.Multimodal.RawMedia
     def clip(id: Long, key: Long, size: Int) = RawMedia(id,
       Multimodal.packFrames((0 until 3).map(f =>
         Multimodal.blockFramePng(key, f, size))))
     val clips = Seq(clip(0L, 10L, 16), clip(1L, 10L, 24), clip(2L, 99L, 16))
-    val hashes = Multimodal.demuxFrameHashes(clips.toDS()).collect().toSeq
-    val hashDf = hashes.toDS()
+    Multimodal.demuxFrameHashes(clips.toDS()).collect().toSeq
+  }
+
+  test("stream video near-dup: streamed == batch, re-encode matched with popcount verify, bucket cap bites") {
+    val s = spark
+    import s.implicits._
+    import graft.operators.Multimodal.FrameHash
+    val hashDf = plantedReencodeHashes.toDS()
     // batch run of the SAME job code: complete buckets, global order
-    val batch = StreamingJobs.videoDupStream(hashDf, wide = false).collect()
+    val batch = StreamingJobs.videoDupStream(hashDf).collect()
       .map(d => (d.doc_id, d.frame_no, d.dup_of, d.band, d.hamming)).toSet
     // planted expectation: every frame of doc 1 matches its doc-0
-    // canonical at Hamming 0 on all 4 bands; doc 2 matches nothing
+    // canonical at popcount-verified Hamming 0; doc 2 matches nothing
     assert(batch.map(t => (t._1, t._2, t._3, t._5)) ==
       (0 until 3).map(f => (1L, f, 0L, 0)).toSet,
       s"re-encoded frames must match their canonicals exactly: $batch")
@@ -623,7 +629,7 @@ class StreamingSpec extends SparkSpec {
     hashDf.toDF().write.mode("overwrite").parquet(tmp)
     val src = s.readStream.schema(hashDf.toDF().schema).parquet(tmp)
       .as[FrameHash]
-    val q = StreamingJobs.videoDupStream(src, wide = false)
+    val q = StreamingJobs.videoDupStream(src)
       .writeStream.format("memory").queryName("vdup_out")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
@@ -636,52 +642,39 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch, "ingest-time matches must equal the batch run")
     // bucket cap: with the cap at 1 every bucket admits only its
     // canonical and stops — no matches can be emitted
-    val capped = StreamingJobs.videoDupStream(hashDf, bucketCap = 1L,
-      wide = false).collect()
+    val capped = StreamingJobs.videoDupStream(hashDf, bucketCap = 1L).collect()
     assert(capped.isEmpty, s"a cap-1 bucket must never match: ${capped.toSeq}")
   }
 
   test("stream video near-dup WIDE: streamed == batch, planted re-encode found on all 10 subset keys") {
-    // the 5-band agree-2 variant (VERDICT r17 #1): same state machine,
-    // wide posting keys — the planted re-encode must be found at
-    // hamming 0 on every C(5,2) = 10 subset key, and the streamed run
-    // must equal the batch frame bit-for-bit like the narrow head
+    // the 5-band agree-2 posting keys: the planted re-encode must be
+    // found at hamming 0 on every C(5,2) = 10 subset key, and a stream
+    // fed in two micro-batches (canonical first) must equal the batch
+    // frame bit-for-bit
     val s = spark
     import s.implicits._
-    import graft.operators.Multimodal
-    import graft.operators.Multimodal.{FrameHash, RawMedia}
-    def clip(id: Long, key: Long, size: Int) = RawMedia(id,
-      Multimodal.packFrames((0 until 3).map(f =>
-        Multimodal.blockFramePng(key, f, size))))
-    val clips = Seq(clip(0L, 10L, 16), clip(1L, 10L, 24), clip(2L, 99L, 16))
-    val hashes = Multimodal.demuxFrameHashes(clips.toDS()).collect().toSeq
-    val hashDf = hashes.toDS()
-    val batch = StreamingJobs.videoDupStream(hashDf, wide = true).collect()
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.Multimodal.FrameHash
+    val hashes = plantedReencodeHashes
+    val batch = StreamingJobs.videoDupStream(hashes.toDS()).collect()
       .map(d => (d.doc_id, d.frame_no, d.dup_of, d.band, d.hamming)).toSet
     // identical hashes agree on every band, so all 10 subset keys match
     assert(batch == (for (f <- 0 until 3; b <- 0 until 10)
         yield (1L, f, 0L, b, 0)).toSet,
       s"re-encoded frames must match on all 10 subset keys: $batch")
-    val tmp = java.nio.file.Files.createTempDirectory("vdupw-in").toString
-    hashDf.toDF().write.mode("overwrite").parquet(tmp)
-    val src = s.readStream.schema(hashDf.toDF().schema).parquet(tmp)
-      .as[FrameHash]
-    val q = StreamingJobs.videoDupStream(src, wide = true)
-      .writeStream.format("memory").queryName("vdupw_out")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val in = MemoryStream[FrameHash](s)
+    val q = StreamingJobs.videoDupStream(in.toDS()).writeStream
+      .format("memory").queryName("vdupw_out")
+      .outputMode("append").start()
+    in.addData(hashes.filter(_.doc_id == 0L))
+    q.processAllAvailable()
+    in.addData(hashes.filter(_.doc_id != 0L))
     q.processAllAvailable()
     q.stop()
     val streamed = s.sql("select * from vdupw_out").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3),
         r.getInt(4))).toSet
     assert(streamed == batch, "wide ingest-time matches must equal the batch run")
-    // cap semantics are posting-set-independent: cap 1 admits only
-    // canonicals, so nothing can match on the wide keys either
-    val capped = StreamingJobs.videoDupStream(hashDf, bucketCap = 1L,
-      wide = true).collect()
-    assert(capped.isEmpty, s"a cap-1 bucket must never match: ${capped.toSeq}")
   }
 
   test("stream video near-dup across micro-batches: late lower doc_id re-canonicalizes, attribution is per-arrival") {
@@ -703,7 +696,7 @@ class StreamingSpec extends SparkSpec {
       Seq(clip(0L, 10L, 16), clip(1L, 10L, 24), clip(5L, 10L, 16)).toDS())
       .collect().toSeq
     val in = MemoryStream[FrameHash](s)
-    val q = StreamingJobs.videoDupStream(in.toDS(), wide = false).writeStream
+    val q = StreamingJobs.videoDupStream(in.toDS()).writeStream
       .format("memory").queryName("vdup2_out")
       .outputMode("append").start()
     in.addData(hashes.filter(h => h.doc_id == 1L || h.doc_id == 5L))
@@ -721,7 +714,7 @@ class StreamingSpec extends SparkSpec {
     // vs the single-batch run, where doc 0 is canonical from the start —
     // the attribution DIFFERENCE is the documented contract, while both
     // runs agree that exactly two of the three re-encodes are flagged
-    val single = StreamingJobs.videoDupStream(hashes.toDS(), wide = false).collect()
+    val single = StreamingJobs.videoDupStream(hashes.toDS()).collect()
       .map(d => (d.doc_id, d.dup_of)).toSet
     assert(single == Set((1L, 0L), (5L, 0L)))
     assert(single.map(_._1).size == byDoc.map(_._1).size)
@@ -797,7 +790,7 @@ class StreamingSpec extends SparkSpec {
     val clips = Seq(clip(0L, 10L, 16), clip(1L, 10L, 24), clip(2L, 20L, 16),
       clip(3L, 20L, 24), clip(4L, 30L, 16), clip(5L, 30L, 24))
     val hashes = Multimodal.demuxFrameHashes(clips.toDS()).collect().toSeq
-    val full = StreamingJobs.videoDupStream(hashes.toDS(), wide = true)
+    val full = StreamingJobs.videoDupStream(hashes.toDS())
       .collect().map(d => (d.doc_id, d.frame_no, d.dup_of, d.band, d.hamming)).toSet
     val fullTail = full.filter(_._1 >= 3L)
     // the cross-split pair must be found via the history canonical
@@ -807,11 +800,11 @@ class StreamingSpec extends SparkSpec {
     val hist = hashes.filter(_.doc_id < 3L).toDS()
     val tail = hashes.filter(_.doc_id >= 3L).toDS()
     val idxDir = java.nio.file.Files.createTempDirectory("vf-snap").toString
-    Multimodal.writeFrameIndex(hist, idxDir, wide = true)
+    Multimodal.writeFrameIndex(hist, idxDir)
     val index = ManifestTable.read(s, idxDir)
 
     val restartedBatch = StreamingJobs
-      .videoDupStreamAgainstIndex(tail, index, wide = true).collect()
+      .videoDupStreamAgainstIndex(tail, index).collect()
       .map(d => (d.doc_id, d.frame_no, d.dup_of, d.band, d.hamming)).toSet
     assert(restartedBatch == fullTail,
       "restart-against-snapshot must equal the uninterrupted stream's post-split rows")
@@ -819,7 +812,7 @@ class StreamingSpec extends SparkSpec {
     val inDir = java.nio.file.Files.createTempDirectory("vf-snap-in").toString
     tail.toDF().write.mode("overwrite").parquet(inDir)
     val src = s.readStream.schema(tail.toDF().schema).parquet(inDir).as[FrameHash]
-    val q = StreamingJobs.videoDupStreamAgainstIndex(src, index, wide = true)
+    val q = StreamingJobs.videoDupStreamAgainstIndex(src, index)
       .writeStream.format("memory").queryName("vf_compact_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable()
@@ -831,7 +824,7 @@ class StreamingSpec extends SparkSpec {
         r.getInt(4))).toSet
     assert(streamed == fullTail)
     import org.apache.spark.sql.functions.col
-    val tailPostings = Multimodal.frameBandPostingsWide(
+    val tailPostings = Multimodal.frameBandPostings(
       tail.toDF("doc_id", "frame_no", "phash")).select("band", "bv").distinct()
     val newBuckets = tailPostings.join(index, Seq("band", "bv"), "left_anti").count()
     val histBuckets = tailPostings.join(index, Seq("band", "bv"), "left_semi").count()
