@@ -168,13 +168,7 @@ object Bench {
     if (spillOn) SpillStats.install(spark)
     // fail fast with a readable message: a typo'd name would otherwise
     // throw NoSuchElementException mid-loop with no JSON emitted
-    val unknown = selected.filterNot(SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] unknown queries: ${unknown.mkString(", ")}; " +
-        s"known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-      spark.stop()
-      sys.exit(2)
-    }
+    SparkEntry.exitOnUnknown("bench", Some(selected))
     // each query runs TWICE, cold-cache both times (isolate() between),
     // and the reported number is the min: this box's wall-clock noise
     // is ±2-4x on iterative queries, so a single sample routinely

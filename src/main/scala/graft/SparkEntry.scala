@@ -23,4 +23,16 @@ object SparkEntry {
   /** DuckDB-runnable oracle SQL per query (same parquet tables). */
   def oracleSql: Map[String, String] =
     allDefs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+
+  /** Fail fast on a query subset naming an unregistered query: print
+    * the unknown and the known names to stderr and exit 2, so a typo'd
+    * subset never runs (or checks) nothing and reports success. */
+  private[graft] def exitOnUnknown(tool: String, names: Option[Iterable[String]]): Unit = {
+    val unknown = names.toSeq.flatten.filterNot(queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[$tool] unknown queries: ${unknown.mkString(", ")}; " +
+        s"known: ${queries.keys.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+  }
 }

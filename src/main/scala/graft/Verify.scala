@@ -9,6 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (local iteration aid;
     // the driver always runs the full set)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
+    SparkEntry.exitOnUnknown("verify", only)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

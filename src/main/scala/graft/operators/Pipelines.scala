@@ -62,20 +62,6 @@ object Pipelines {
        |ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- decontamination
-  /** Benchmark decontamination — the curation pass every serious
-    * training pipeline runs: any training document sharing a 5-gram
-    * with an evaluation document is flagged (the published
-    * GPT-3/PaLM-style n-gram collision rule). Here the "eval set" is
-    * a deterministic ~5% doc_id split standing in for a benchmark
-    * suite; in production it is an external table.
-    *
-    * Plan shape for 100 TB: the eval side is SMALL by nature
-    * (benchmarks are thousands of docs, not billions), so its
-    * distinct 5-gram table is broadcast — the training corpus is
-    * never shuffled for the probe; its only exchange is the final
-    * per-doc aggregate on doc_id. 5-grams are per-row array
-    * expressions (same no-explode-before-distinct shape as the
-    * minhash shingles). */
   /** Per-doc distinct 5-grams, exploded: (doc_id, s). `docs` needs
     * (doc_id, text). r19: the token compaction + gram fold run as ONE
     * native codegen'd expression ([[graft.functions.FivegramArray]] —
@@ -87,24 +73,36 @@ object Pipelines {
       graft.functions.NgramFunctions.fivegramArr(
         split(col("text"), "\\s+")))).as("s"))
 
-  /** PUBLIC decontamination API against an EXTERNAL eval corpus —
-    * the production form (the registered query below derives its eval
-    * split from the same table only so DuckDB can check it). Returns
-    * one row per train doc: the keep/drop list. */
-  def decontaminateAgainst(train: DataFrame, evalDocs: DataFrame): DataFrame = {
-    val evalNgrams = fivegrams(evalDocs)
+  /** The eval side of the registered decontamination split: a
+    * deterministic ~5% of doc_ids, standing in for a benchmark suite
+    * (ONE definition under both decontamination queries and
+    * `pipeline_curate_v7`; [[isEvalSql]] is its oracle twin). */
+  private def isEval: Column =
+    pmod(md5Long(concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
+
+  /** The eval corpus's distinct (5-gram, eval doc) pairs — the
+    * benchmark-sized probe table both decontamination kernels join. */
+  private def evalNgramsOf(evalDocs: DataFrame): DataFrame =
+    fivegrams(evalDocs)
       .select(col("s").as("es"), col("doc_id").as("eval_doc")).distinct()
-    val hits = fivegrams(train)
+
+  /** The shared decontamination tail: probe `trainNgrams` against
+    * `evalNgrams`, aggregate hits per train doc, and return one row per
+    * doc of `train` (the keep/drop list a pipeline consumes), clean
+    * docs carrying zeros. The hit aggregate is bounded only by the
+    * CONTAMINATION RATE — tiny on honest corpora, unbounded when the
+    * eval suite contains common phrases — so both joins go through
+    * dimHint, never a forced broadcast(). `evalNgrams` leads so callers
+    * build it first: expression ids follow build order, and the
+    * distinct-count expansion orders its columns by their hash. */
+  private def keepList(evalNgrams: DataFrame, train: DataFrame,
+      trainNgrams: DataFrame): DataFrame = {
+    val hits = trainNgrams
       .join(Tables.dimHint(evalNgrams), col("s") === col("es"))
       .groupBy(col("doc_id"))
       .agg(
         countDistinct(col("s")).as("sh"),
         countDistinct(col("eval_doc")).as("ed"))
-    // one row per TRAIN doc (the keep/drop list a pipeline consumes),
-    // clean docs carrying zeros. The hit aggregate is bounded only by
-    // the CONTAMINATION RATE — tiny on honest corpora, unbounded when
-    // the eval suite contains common phrases — so the hint goes
-    // through dimHint, never a forced broadcast().
     train.select(col("doc_id"))
       .join(Tables.dimHint(hits), Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
@@ -112,6 +110,13 @@ object Pipelines {
         coalesce(col("ed"), lit(0L)).as("n_eval_docs"),
         (coalesce(col("sh"), lit(0L)) > 0).as("contaminated"))
   }
+
+  /** PUBLIC decontamination API against an EXTERNAL eval corpus —
+    * the production form (the registered query below derives its eval
+    * split from the same table only so DuckDB can check it). Returns
+    * one row per train doc: the keep/drop list. */
+  def decontaminateAgainst(train: DataFrame, evalDocs: DataFrame): DataFrame =
+    keepList(evalNgramsOf(evalDocs), train, fivegrams(train))
 
   // ------------------------------------------------------- bloom decontamination
   /** Bloom probe count. 3 md5-salted hashes: FP rate (1−e^(−jn/m))^j
@@ -188,64 +193,68 @@ object Pipelines {
     // documented policy: MEMORY_AND_DISK, reclaimed by block-manager
     // LRU (and re-persisting the same plan on a later invocation
     // reuses, not duplicates, the cache entry).
-    val evalNgrams = fivegrams(evalDocs)
-      .select(col("s").as("es"), col("doc_id").as("eval_doc")).distinct()
+    val evalNgrams = evalNgramsOf(evalDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // sizing input is distinct n-grams ONLY — evalNgrams is distinct
     // over (es, eval_doc) PAIRS, which would over-count each n-gram
     // once per eval doc and oversize m vs the 16 bits/element target
     val (bm, m) = bloomBitmap(evalNgrams.select(col("es").as("s")).distinct())
-    val flagged = fivegrams(train)
-      .filter(bloomMightContain(bm, m, col("s")))
-    val hits = flagged
-      .join(Tables.dimHint(evalNgrams), col("s") === col("es"))
-      .groupBy(col("doc_id"))
-      .agg(
-        countDistinct(col("s")).as("sh"),
-        countDistinct(col("eval_doc")).as("ed"))
-    // dimHint, not broadcast(): hit volume is contamination-bounded,
-    // not structurally small (see decontaminateAgainst)
-    train.select(col("doc_id"))
-      .join(Tables.dimHint(hits), Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        coalesce(col("sh"), lit(0L)).as("n_shared_ngrams"),
-        coalesce(col("ed"), lit(0L)).as("n_eval_docs"),
-        (coalesce(col("sh"), lit(0L)) > 0).as("contaminated"))
+    keepList(evalNgrams, train,
+      fivegrams(train).filter(bloomMightContain(bm, m, col("s"))))
+  }
+
+  /** A registered decontamination query: `kernel` over the doc_id
+    * train/eval split of the documents table, ordered for the oracle. */
+  private def decontaminateSplit(spark: SparkSession, dir: String,
+      kernel: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    kernel(docs.filter(!isEval), docs.filter(isEval)).orderBy(col("doc_id"))
   }
 
   /** Registered twin of `pipeline_decontaminate` through the bloom
     * prefilter — same eval split, same oracle (the output is
     * bloom-parameter-independent by the verify join). */
-  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val isEval =
-      pmod(md5Long(concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    decontaminateBloomAgainst(docs.filter(!isEval), docs.filter(isEval))
-      .orderBy(col("doc_id"))
-  }
+  def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
+    decontaminateSplit(spark, dir, decontaminateBloomAgainst)
 
-  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val isEval =
-      pmod(md5Long(concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    decontaminateAgainst(docs.filter(!isEval), docs.filter(isEval))
-      .orderBy(col("doc_id"))
-  }
+  /** Benchmark decontamination — the curation pass every serious
+    * training pipeline runs: any training document sharing a 5-gram
+    * with an evaluation document is flagged (the published
+    * GPT-3/PaLM-style n-gram collision rule). Here the "eval set" is
+    * a deterministic ~5% doc_id split standing in for a benchmark
+    * suite ([[isEval]]); in production it is an external table.
+    *
+    * Plan shape for 100 TB: the eval side is SMALL by nature
+    * (benchmarks are thousands of docs, not billions), so its
+    * distinct 5-gram table is broadcast — the training corpus is
+    * never shuffled for the probe; its only exchange is the final
+    * per-doc aggregate on doc_id. 5-grams are per-row array
+    * expressions (same no-explode-before-distinct shape as the
+    * minhash shingles). */
+  def decontaminate(spark: SparkSession, dir: String): DataFrame =
+    decontaminateSplit(spark, dir, decontaminateAgainst)
+
+  /** Oracle twin of [[isEval]] over the doc id expression `id`. */
+  private def isEvalSql(id: String): String =
+    s"(${md5LongSql(s"'decon:' || cast($id as varchar)")} % 20 = 0)"
+
+  /** Distinct 5-grams of the token list `tk` (oracle twin of
+    * [[fivegrams]] before the explode). */
+  private val fivegramsSql =
+    """list_distinct(list_filter(
+      |    list_transform(tk, (x, i) -> CASE WHEN i + 4 <= len(tk)
+      |      THEN x || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] END),
+      |    s -> s IS NOT NULL))""".stripMargin
 
   private val decontaminateSql =
     s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
-       |sh AS (
-       |  SELECT doc_id, list_distinct(list_filter(
-       |    list_transform(tk, (x, i) -> CASE WHEN i + 4 <= len(tk)
-       |      THEN x || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] END),
-       |    s -> s IS NOT NULL)) AS s
-       |  FROM t),
+       |sh AS (SELECT doc_id, $fivegramsSql AS s FROM t),
        |e AS (
        |  SELECT doc_id AS eval_doc, unnest(s) AS es FROM sh
-       |  WHERE ${md5LongSql("'decon:' || cast(doc_id as varchar)")} % 20 = 0),
+       |  WHERE ${isEvalSql("doc_id")}),
        |tr AS (
        |  SELECT doc_id, unnest(s) AS s FROM sh
-       |  WHERE ${md5LongSql("'decon:' || cast(doc_id as varchar)")} % 20 <> 0),
+       |  WHERE NOT ${isEvalSql("doc_id")}),
        |hits AS (
        |  SELECT tr.doc_id,
        |    cast(count(DISTINCT tr.s) as bigint) AS sh,
@@ -257,28 +266,13 @@ object Pipelines {
        |  coalesce(h.ed, 0) AS n_eval_docs,
        |  coalesce(h.sh, 0) > 0 AS contaminated
        |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-       |WHERE ${md5LongSql("'decon:' || cast(d.doc_id as varchar)")} % 20 <> 0
+       |WHERE NOT ${isEvalSql("d.doc_id")}
        |ORDER BY d.doc_id""".stripMargin
 
   // ---------------------------------------------------------------- sequence packing
   /** Tokens per fixed-length training sequence. */
   private val SeqLen = 512
 
-  /** Sequence packing — the batch-prep pass that turns a curated
-    * corpus into fixed-length training sequences: documents are
-    * concatenated in doc_id order into a token stream, the stream is
-    * cut every [[SeqLen]] tokens, and each document is accounted to
-    * the sequence containing its first token. Output is the packing
-    * manifest (per sequence: docs, tokens, id span) a loader consumes.
-    *
-    * The global running token count is a two-level prefix sum — the
-    * same shape that ranks `mr_sort` (MrCore.scala): range-partition
-    * by doc_id, local prefix within each partition, then a
-    * 32-row partition-total table (the ONLY globally-ordered window)
-    * broadcast back as offsets. No single-partition window ever sees
-    * the corpus, so the plan holds at any scale: each partition's
-    * prefix is executor-local, and the offset table is one row per
-    * partition regardless of corpus size. */
   /** PUBLIC kernel: packing manifest for any (doc_id, text) frame.
     * A manifest row exists for every sequence where some document
     * STARTS: a document longer than `seqLen` spans the following
@@ -329,12 +323,29 @@ object Pipelines {
         max(col("doc_id")).as("last_doc"))
   }
 
+  /** Sequence packing — the batch-prep pass that turns a curated
+    * corpus into fixed-length training sequences: documents are
+    * concatenated in doc_id order into a token stream, the stream is
+    * cut every [[SeqLen]] tokens, and each document is accounted to
+    * the sequence containing its first token. Output is the packing
+    * manifest (per sequence: docs, tokens, id span) a loader consumes.
+    *
+    * The global running token count is a two-level prefix sum — the
+    * same shape that ranks `mr_sort` (MrCore.scala): range-partition
+    * by doc_id, local prefix within each partition, then a
+    * 32-row partition-total table (the ONLY globally-ordered window)
+    * broadcast back as offsets. No single-partition window ever sees
+    * the corpus, so the plan holds at any scale: each partition's
+    * prefix is executor-local, and the offset table is one row per
+    * partition regardless of corpus size. */
   def packSequences(spark: SparkSession, dir: String): DataFrame =
     packManifest(Tables.documents(spark, dir), SeqLen)
       .orderBy(col("seq_id"))
 
-  private val packSequencesSql =
-    s"""WITH t AS (SELECT doc_id, cast(len($toksSql) as bigint) AS toks FROM documents),
+  /** Packing oracle over the per-doc token count expression `toks`
+    * (the single global window [[packManifest]] splits in two). */
+  private def packSql(toks: String): String =
+    s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
        |c AS (
        |  SELECT doc_id, toks,
        |    coalesce(sum(toks) OVER (ORDER BY doc_id
@@ -345,6 +356,8 @@ object Pipelines {
        |  cast(sum(toks) as bigint) AS n_tokens,
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM c GROUP BY seq_id ORDER BY seq_id""".stripMargin
+
+  private val packSequencesSql = packSql(s"cast(len($toksSql) as bigint)")
 
   /** Sequence packing priced in BPE-ish tokens instead of whitespace
     * words — the budget a real training run actually packs against
@@ -359,18 +372,7 @@ object Pipelines {
       tokCol = TextAnalysis.bpeCountCol)
       .orderBy(col("seq_id"))
 
-  private val packSequencesBpeSql =
-    s"""WITH t AS (SELECT doc_id, ${TextAnalysis.bpeCountSql} AS toks FROM documents),
-       |c AS (
-       |  SELECT doc_id, toks,
-       |    coalesce(sum(toks) OVER (ORDER BY doc_id
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-       |  FROM t)
-       |SELECT cast(cb // $SeqLen as bigint) AS seq_id,
-       |  cast(count(*) as bigint) AS n_docs,
-       |  cast(sum(toks) as bigint) AS n_tokens,
-       |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-       |FROM c GROUP BY seq_id ORDER BY seq_id""".stripMargin
+  private val packSequencesBpeSql = packSql(TextAnalysis.bpeCountSql)
 
   // ---------------------------------------------------------------- source balance
   /** Corpus-concentration profile — the balance metric a dataset
@@ -401,16 +403,6 @@ object Pipelines {
        |FROM c""".stripMargin
 
   // ---------------------------------------------------------------- mixture sampling
-  /** Deterministic weighted mixture sampling — the corpus-mixing pass
-    * that up/down-weights sources before training (e.g. books at 1.0,
-    * low-quality web at 0.1). Each source gets a rate from its index
-    * (a stand-in for a per-source config table); a document is kept
-    * iff a salted md5 of its id falls under the rate. Keep/drop is a
-    * pure per-row projection — ZERO shuffles at any corpus size, no
-    * RNG state, reproducible across runs and engines, and stable
-    * under corpus growth (a doc's fate never depends on other rows).
-    * Basis points (integer) rather than a double rate keep the
-    * comparison exact cross-engine. */
   /** PUBLIC kernel: keep each row iff a salted md5 of its doc_id
     * falls under `bp` basis points (of 10000). `bp` may be any
     * integer expression — a literal rate, a per-source config-table
@@ -436,6 +428,16 @@ object Pipelines {
       .otherwise(1000)
   }
 
+  /** Deterministic weighted mixture sampling — the corpus-mixing pass
+    * that up/down-weights sources before training (e.g. books at 1.0,
+    * low-quality web at 0.1). Each source gets a rate from its index
+    * (a stand-in for a per-source config table); a document is kept
+    * iff a salted md5 of its id falls under the rate. Keep/drop is a
+    * pure per-row projection — ZERO shuffles at any corpus size, no
+    * RNG state, reproducible across runs and engines, and stable
+    * under corpus growth (a doc's fate never depends on other rows).
+    * Basis points (integer) rather than a double rate keep the
+    * comparison exact cross-engine. */
   def mixtureSample(spark: SparkSession, dir: String): DataFrame = {
     val bp = mixtureBp
     sampleWeighted(Tables.documents(spark, dir), bp, "mix")
@@ -457,6 +459,27 @@ object Pipelines {
        |ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- temperature mixture
+  /** PUBLIC kernel: the computed-rate draw over any (doc_id, source)
+    * frame — returns kept rows with their per-source keep weight.
+    * `mass` is what a source's size is measured in: lit(1) counts
+    * documents; the registered query passes `n_chars` because a
+    * mixture budget is spent in tokens, not docs (and doc-uniform
+    * synthetic sources would make every doc-count rate exactly
+    * 10000 bp — mass keeps the draw live on any real corpus). */
+  def temperatureSample(docs: DataFrame, mass: Column = lit(1L)): DataFrame = {
+    val counts = docs.groupBy(col("source")).agg(sum(mass).as("n"))
+    val nMin = counts.agg(min(col("n")).as("n_min")) // 1 row, broadcast
+    val rates = counts.crossJoin(broadcast(nMin))
+      .withColumn("bp", floor(lit(10000) *
+        sqrt(col("n_min").cast("double") / col("n").cast("double")))
+        .cast("int"))
+      .select(col("source"), col("bp"))
+    val withBp = docs.join(broadcast(rates), "source")
+    sampleWeighted(withBp, col("bp"), "mixt")
+      .select(col("doc_id"), col("source"),
+        (col("bp").cast("double") / 10000.0).as("weight"))
+  }
+
   /** Temperature-flattened source mixture (the mT5/XLM-R multilingual
     * recipe, Xue et al. NAACL 2021 §3.1: sample source i with
     * p_i ∝ n_i^α, α < 1, to keep big sources from drowning small
@@ -479,27 +502,6 @@ object Pipelines {
     * [[sampleWeighted]]'s per-row salted-hash predicate — zero
     * shuffles beyond the count at 100 TB, and a doc's fate depends
     * only on corpus-level counts, never on other rows' hashes. */
-  /** PUBLIC kernel: the computed-rate draw over any (doc_id, source)
-    * frame — returns kept rows with their per-source keep weight.
-    * `mass` is what a source's size is measured in: lit(1) counts
-    * documents; the registered query passes `n_chars` because a
-    * mixture budget is spent in tokens, not docs (and doc-uniform
-    * synthetic sources would make every doc-count rate exactly
-    * 10000 bp — mass keeps the draw live on any real corpus). */
-  def temperatureSample(docs: DataFrame, mass: Column = lit(1L)): DataFrame = {
-    val counts = docs.groupBy(col("source")).agg(sum(mass).as("n"))
-    val nMin = counts.agg(min(col("n")).as("n_min")) // 1 row, broadcast
-    val rates = counts.crossJoin(broadcast(nMin))
-      .withColumn("bp", floor(lit(10000) *
-        sqrt(col("n_min").cast("double") / col("n").cast("double")))
-        .cast("int"))
-      .select(col("source"), col("bp"))
-    val withBp = docs.join(broadcast(rates), "source")
-    sampleWeighted(withBp, col("bp"), "mixt")
-      .select(col("doc_id"), col("source"),
-        (col("bp").cast("double") / 10000.0).as("weight"))
-  }
-
   def mixtureTemperature(spark: SparkSession, dir: String): DataFrame =
     temperatureSample(Tables.documents(spark, dir), col("n_chars"))
       .orderBy(col("doc_id"))
@@ -523,6 +525,21 @@ object Pipelines {
     * as shards multiply). */
   private[graft] val ShuffleShards = 8
 
+  /** The seeded permutation hash — ONE definition under both the
+    * batch shuffle and the ingest-time stream router, so a document
+    * routes to the same shard whether it arrives in a backfill or on
+    * the live stream (the property that lets the two write paths
+    * share output files). */
+  private def shardHash(docId: Column, salt: String): Column =
+    md5Long(concat(lit(s"$salt:"), docId.cast("string")))
+
+  /** PUBLIC shard-routing expression: deterministic shard of one
+    * document — a pure projection, usable per-row in batch or
+    * streaming ([[graft.streaming.StreamingJobs.shardAssignStream]]). */
+  def shardOf(docId: Column, shards: Int = ShuffleShards,
+      salt: String = "shard1"): Column =
+    pmod(shardHash(docId, salt), lit(shards)).cast("int")
+
   /** Deterministic global shuffle into training shards — the LAST
     * pass of every corpus build: training wants documents in an
     * order uncorrelated with the curation order (source/time locality
@@ -540,21 +557,6 @@ object Pipelines {
     * exchange; no global sort anywhere). At 100 TB: shards number in
     * the thousands, each task sorts corpus/N ids — bounded by
     * choosing N, which is exactly the knob the loader dictates. */
-  /** The seeded permutation hash — ONE definition under both the
-    * batch shuffle and the ingest-time stream router, so a document
-    * routes to the same shard whether it arrives in a backfill or on
-    * the live stream (the property that lets the two write paths
-    * share output files). */
-  private def shardHash(docId: Column, salt: String): Column =
-    md5Long(concat(lit(s"$salt:"), docId.cast("string")))
-
-  /** PUBLIC shard-routing expression: deterministic shard of one
-    * document — a pure projection, usable per-row in batch or
-    * streaming ([[graft.streaming.StreamingJobs.shardAssignStream]]). */
-  def shardOf(docId: Column, shards: Int = ShuffleShards,
-      salt: String = "shard1"): Column =
-    pmod(shardHash(docId, salt), lit(shards)).cast("int")
-
   def shuffleShard(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val h = shardHash(col("doc_id"), "shard1")
@@ -567,17 +569,25 @@ object Pipelines {
       .orderBy(col("shard"), col("pos"))
   }
 
+  /** Oracle twin of [[shardHash]] over `doc_id` at the default salt. */
+  private val shardHashSql = md5LongSql("'shard1:' || cast(doc_id as varchar)")
+
   private val shuffleShardSql =
-    s"""WITH h AS (
-       |  SELECT doc_id,
-       |    ${md5LongSql("'shard1:' || cast(doc_id as varchar)")} AS h
-       |  FROM documents)
+    s"""WITH h AS (SELECT doc_id, $shardHashSql AS h FROM documents)
        |SELECT doc_id, cast(h % $ShuffleShards as int) AS shard,
        |  cast(row_number() OVER (PARTITION BY h % $ShuffleShards
        |    ORDER BY h, doc_id) as int) AS pos
        |FROM h ORDER BY shard, pos""".stripMargin
 
   // ---------------------------------------------------------------- eval split
+  /** PUBLIC split expression — one definition under the registered
+    * query and any composed pipeline (`pipeline_curate_v3`). */
+  def splitOf(docId: Column): Column = {
+    val b = pmod(md5Long(concat(lit("split1:"), docId.cast("string"))),
+      lit(10000))
+    when(b < 9800, "train").when(b < 9900, "val").otherwise("test")
+  }
+
   /** Deterministic train/validation/test split — the assignment every
     * training corpus needs exactly once, and the one place a
     * nondeterministic split silently corrupts downstream science
@@ -589,25 +599,101 @@ object Pipelines {
     * and runs, and subset-stable (a doc's split never depends on
     * other rows, so incremental corpus additions never move existing
     * documents between splits). */
-  /** PUBLIC split expression — one definition under the registered
-    * query and any composed pipeline (`pipeline_curate_v3`). */
-  def splitOf(docId: Column): Column = {
-    val b = pmod(md5Long(concat(lit("split1:"), docId.cast("string"))),
-      lit(10000))
-    when(b < 9800, "train").when(b < 9900, "val").otherwise("test")
-  }
-
   def evalSplit(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), splitOf(col("doc_id")).as("split"))
       .orderBy(col("doc_id"))
 
+  /** Oracle twin of [[splitOf]] over `doc_id`. */
+  private val splitSql = {
+    val b = s"${md5LongSql("'split1:' || cast(doc_id as varchar)")} % 10000"
+    s"CASE WHEN $b < 9800 THEN 'train' WHEN $b < 9900 THEN 'val' ELSE 'test' END"
+  }
+
   private val evalSplitSql =
-    s"""SELECT doc_id,
-       |  CASE WHEN ${md5LongSql("'split1:' || cast(doc_id as varchar)")} % 10000 < 9800 THEN 'train'
-       |       WHEN ${md5LongSql("'split1:' || cast(doc_id as varchar)")} % 10000 < 9900 THEN 'val'
-       |       ELSE 'test' END AS split
-       |FROM documents ORDER BY doc_id""".stripMargin
+    s"SELECT doc_id, $splitSql AS split FROM documents ORDER BY doc_id"
+
+  // ---------------------------------------------------------------- curation stages
+  /** Exact dedup: one row per distinct `text` (md5 group) — the
+    * smallest doc_id's — carrying only `cols` through the exchange.
+    * A keep-lowest-doc_id AGGREGATE, not a window: same single md5
+    * exchange, but min_by gets map-side partial aggregation (each
+    * input partition pre-reduces to one candidate per hash before the
+    * shuffle), where the row_number form had to shuffle every
+    * duplicate row and sort each hash group (round-7). */
+  private def exactDedup(docs: DataFrame, cols: String*): DataFrame =
+    docs.groupBy(md5(col("text")).as("__h"))
+      .agg(min_by(struct(cols.map(col): _*), col("doc_id")).as("__r"))
+      .select(cols.map(c => col(s"__r.$c")): _*)
+
+  /** Quality gate → exact dedup, the prefix of every gated curate
+    * chain. The gate is a per-row filter fused into the scan (r18):
+    * qualityKeep is stateless, so the former qualityRules→semi-join
+    * form paid a second corpus scan + one join for the same survivors.
+    * NO spreadHint on `docs` (r18, measured): the gate filter pushes
+    * below a repartition, so the hint would add a survivors-text
+    * shuffle while the gate work stays scan-side; the md5 groupBy
+    * re-exchanges immediately anyway. */
+  private def gatedDedup(docs: DataFrame, cols: String*): DataFrame =
+    exactDedup(docs.filter(TextAnalysis.qualityKeep), cols: _*)
+
+  /** Gate → dedup → [[Dedup.exciseDupSpans]] → the quality gate
+    * re-run on `cleaned_text`: the excise chain front shared by v6
+    * and v7. The rebuild is persisted because it feeds both the
+    * re-gate and the chain's later stages in the RETURNED lazy plan
+    * (unpersisting here would force the rebuild to run twice at
+    * action time). Repeated invocations do NOT accumulate cache: the
+    * plan is deterministic per corpus, so CacheManager's
+    * plan-equality lookup reuses the existing entry; eviction is the
+    * documented MEMORY_AND_DISK + block-manager LRU policy. */
+  private def excisedRegated(docs: DataFrame): DataFrame =
+    Dedup.exciseDupSpans(gatedDedup(docs, "doc_id", "text"), Dedup.SubstrLen)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(TextAnalysis.qualityKeepOn(col("cleaned_text")))
+
+  /** The per-(split, shard) manifest a training run consumes: stamp
+    * [[splitOf]] and [[shardOf]] (pure projections), then count plus
+    * `sum(column) AS name` for each of `sums` over ≤ splits × shards
+    * cells, ordered by (split, shard). */
+  private def shardManifest(df: DataFrame, sums: (String, String)*): DataFrame =
+    df.withColumn("split", splitOf(col("doc_id")))
+      .withColumn("shard", shardOf(col("doc_id")))
+      .groupBy(col("split"), col("shard"))
+      .agg(count(lit(1)).as("n_docs"),
+        sums.map { case (c, name) => sum(col(c)).as(name) }: _*)
+      .orderBy(col("split"), col("shard"))
+
+  /** Oracle twin of [[shardManifest]] over the relation `src`. */
+  private def manifestSql(src: String, sums: (String, String)*): String = {
+    val sumCols = sums.map { case (c, name) => s",\n  cast(sum($c) as bigint) AS $name" }
+    s"""SELECT $splitSql AS split,
+       |  cast($shardHashSql % $ShuffleShards as int) AS shard,
+       |  count(*) AS n_docs${sumCols.mkString}
+       |FROM $src GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  }
+
+  /** Oracle twin of [[gatedDedup]]: the quality gate + exact-dedup
+    * CTEs over the relation `src`, ending in `dedup`
+    * (doc_id, text, n_chars). */
+  private def keptDedupCtes(src: String): String =
+    s"""kept AS (
+       |  SELECT doc_id, text, n_chars FROM $src
+       |  WHERE ${TextAnalysis.QualityRuleSql.keep}),
+       |dedup AS (
+       |  SELECT doc_id, text, n_chars FROM (
+       |    SELECT doc_id, text, n_chars,
+       |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rk
+       |    FROM kept) WHERE rk = 1)""".stripMargin
+
+  /** Oracle twin of [[excisedRegated]]: CTEs over `src` ending in
+    * `regated` (doc_id, n_kept_tokens, text = the cleaned text). */
+  private def excisedRegatedCtes(src: String): String =
+    s"""${keptDedupCtes(src)},
+       |${Dedup.exciseSqlCtes("dedup")},
+       |regated AS (
+       |  SELECT doc_id, n_kept_tokens, text FROM (
+       |    SELECT doc_id, n_kept_tokens, cleaned_text AS text FROM excised)
+       |  WHERE ${TextAnalysis.QualityRuleSql.keep})""".stripMargin
 
   // ---------------------------------------------------------------- curate v3
   /** The round-8 corpus build end to end as ONE oracle-checked plan —
@@ -621,53 +707,18 @@ object Pipelines {
     * GATED + SPLIT + SHARDED chain, covering every round-8 pipeline
     * kernel in composition.
     *
-    * Plan shape: the gate is per-row expressions fused into the scan;
-    * one semi-join exchange brings keep decisions back to the full
-    * rows; one md5 exchange dedups (min_by — map-side combinable);
+    * Plan shape: the gate is a per-row filter fused into the scan;
+    * one md5 exchange dedups (min_by — map-side combinable);
     * split/shard are pure projections; one final (split, shard)
     * aggregate over ≤ splits × shards cells. No stage sees more than
     * the prior stage's survivors. */
-  def pipelineCurateV3(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir) // no spreadHint — see curateGatedDocs
-    // gate inlined as a per-row filter (r18): qualityKeep is stateless,
-    // so the qualityRules→semi-join form paid a second corpus scan +
-    // one join for the same survivors (plan: 4 scans/1 join → 1 scan)
-    val kept = docs.filter(TextAnalysis.qualityKeep)
-    val deduped = kept
-      .groupBy(md5(col("text")).as("__h"))
-      .agg(min_by(struct(col("doc_id"), col("n_chars")), col("doc_id"))
-        .as("__r"))
-      .select(col("__r.doc_id").as("doc_id"), col("__r.n_chars").as("n_chars"))
-    deduped
-      .withColumn("split", splitOf(col("doc_id")))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .groupBy(col("split"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("split"), col("shard"))
-  }
+  def pipelineCurateV3(spark: SparkSession, dir: String): DataFrame =
+    shardManifest(gatedDedup(Tables.documents(spark, dir), "doc_id", "n_chars"),
+      "n_chars" -> "sum_chars")
 
-  private val pipelineCurateV3Sql = {
-    val splitBp = md5LongSql("'split1:' || cast(doc_id as varchar)")
-    s"""WITH kept AS (
-       |  SELECT doc_id, text, n_chars FROM documents
-       |  WHERE ${TextAnalysis.QualityRuleSql.keep}),
-       |dedup AS (
-       |  SELECT doc_id, n_chars FROM (
-       |    SELECT doc_id, n_chars,
-       |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rk
-       |    FROM kept) WHERE rk = 1),
-       |cells AS (
-       |  SELECT CASE WHEN $splitBp % 10000 < 9800 THEN 'train'
-       |              WHEN $splitBp % 10000 < 9900 THEN 'val'
-       |              ELSE 'test' END AS split,
-       |    cast(${md5LongSql("'shard1:' || cast(doc_id as varchar)")} % $ShuffleShards as int)
-       |      AS shard,
-       |    n_chars
-       |  FROM dedup)
-       |SELECT split, shard, count(*) AS n_docs,
-       |  cast(sum(n_chars) as bigint) AS sum_chars
-       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+  private val pipelineCurateV3Sql =
+    s"""WITH ${keptDedupCtes("documents")}
+       |${manifestSql("dedup", "n_chars" -> "sum_chars")}""".stripMargin
 
   // ---------------------------------------------------------------- curate v4
   /** Docs whose duplicated-span coverage exceeds this share are
@@ -676,6 +727,18 @@ object Pipelines {
     * elsewhere in the (already exact-deduped) corpus — the
     * boilerplate / near-copy band exact dedup cannot touch. */
   private val CurateV4DupShareMax = 0.5
+
+  /** The v4 gate chain up to the substring gate's survivors
+    * (doc_id, text, n_chars) — shared by [[pipelineCurateV4]]'s
+    * manifest and [[pipelineCurateV5]]'s weighted draw. */
+  private def curateGatedDocs(spark: SparkSession, dir: String): DataFrame = {
+    val deduped = gatedDedup(Tables.documents(spark, dir), "doc_id", "text", "n_chars")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dropIds = Dedup.substringDupStats(deduped, Dedup.SubstrLen)
+      .filter(col("dup_token_share") > CurateV4DupShareMax)
+      .select(col("doc_id"))
+    deduped.join(dropIds, Seq("doc_id"), "left_anti")
+  }
 
   /** [[pipelineCurateV3]] plus the round-9 exact-substring
     * span-coverage gate — the full RefinedWeb-style chain: quality
@@ -694,61 +757,14 @@ object Pipelines {
     * shorter than the 8-token window have no shingles, no coverage
     * evidence, and are KEPT — the quality gate, not the dup gate,
     * owns short-doc policy. */
-  /** The v4 gate chain up to the substring gate's survivors
-    * (doc_id, text, n_chars) — shared by [[pipelineCurateV4]]'s
-    * manifest and [[pipelineCurateV5]]'s weighted draw. */
-  private def curateGatedDocs(spark: SparkSession, dir: String): DataFrame = {
-    // NO spreadHint here (r18, measured): the gate filter pushes below
-    // a repartition, so the hint would add a survivors-text shuffle
-    // while the gate work stays scan-side; the chain's md5 groupBy
-    // re-exchanges immediately anyway
-    val docs = Tables.documents(spark, dir)
-    // gate inlined as a filter — see pipelineCurateV3 (one scan, no join)
-    val kept = docs.filter(TextAnalysis.qualityKeep)
-    val deduped = kept
-      .groupBy(md5(col("text")).as("__h"))
-      .agg(min_by(struct(col("doc_id"), col("text"), col("n_chars")),
-        col("doc_id")).as("__r"))
-      .select(col("__r.doc_id").as("doc_id"), col("__r.text").as("text"),
-        col("__r.n_chars").as("n_chars"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dropIds = Dedup.substringDupStats(deduped, Dedup.SubstrLen)
-      .filter(col("dup_token_share") > CurateV4DupShareMax)
-      .select(col("doc_id"))
-    deduped.join(dropIds, Seq("doc_id"), "left_anti")
-  }
-
   def pipelineCurateV4(spark: SparkSession, dir: String): DataFrame =
-    curateGatedDocs(spark, dir)
-      .withColumn("split", splitOf(col("doc_id")))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .groupBy(col("split"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("split"), col("shard"))
+    shardManifest(curateGatedDocs(spark, dir), "n_chars" -> "sum_chars")
 
-  /** The gate chain's CTEs up to `gated` (doc_id, text, n_chars) —
-    * one definition under both composed-pipeline oracles. */
-  /** The quality gate + exact-dedup CTEs (ending in `dedup`:
-    * doc_id, text, n_chars) shared by the v4/v5 gate-chain oracle
-    * and the v6 excise-chain oracle. */
-  private def keptDedupCtes: String = keptDedupCtesFrom("documents")
-
-  /** The same gate+dedup CTE pair over an arbitrary source relation
-    * (v7 runs the chain on the train side of the decontamination
-    * split, not the whole table). */
-  private def keptDedupCtesFrom(src: String): String =
-    s"""kept AS (
-       |  SELECT doc_id, text, n_chars FROM $src
-       |  WHERE ${TextAnalysis.QualityRuleSql.keep}),
-       |dedup AS (
-       |  SELECT doc_id, text, n_chars FROM (
-       |    SELECT doc_id, text, n_chars,
-       |      row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rk
-       |    FROM kept) WHERE rk = 1)""".stripMargin
-
+  /** Oracle twin of [[curateGatedDocs]]: CTEs ending in `gated`
+    * (doc_id, text, n_chars), under both the v4 and v5 oracles. */
   private def curateGateCtes: String = {
     val k = Dedup.SubstrLen
-    s"""$keptDedupCtes,
+    s"""${keptDedupCtes("documents")},
        |t AS (SELECT doc_id, $toksSql AS tk FROM dedup),
        |d AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM t
        |      WHERE len(tk) >= $k),
@@ -771,21 +787,9 @@ object Pipelines {
        |  WHERE doc_id NOT IN (SELECT doc_id FROM dropped))""".stripMargin
   }
 
-  private val pipelineCurateV4Sql = {
-    val splitBp = md5LongSql("'split1:' || cast(doc_id as varchar)")
-    s"""WITH $curateGateCtes,
-       |cells AS (
-       |  SELECT CASE WHEN $splitBp % 10000 < 9800 THEN 'train'
-       |              WHEN $splitBp % 10000 < 9900 THEN 'val'
-       |              ELSE 'test' END AS split,
-       |    cast(${md5LongSql("'shard1:' || cast(doc_id as varchar)")} % $ShuffleShards as int)
-       |      AS shard,
-       |    n_chars
-       |  FROM gated)
-       |SELECT split, shard, count(*) AS n_docs,
-       |  cast(sum(n_chars) as bigint) AS sum_chars
-       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+  private val pipelineCurateV4Sql =
+    s"""WITH $curateGateCtes
+       |${manifestSql("gated", "n_chars" -> "sum_chars")}""".stripMargin
 
   // ---------------------------------------------------------------- curate v5
   /** Target document draw for the v5 token-budget stage. */
@@ -809,17 +813,11 @@ object Pipelines {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val drawn = ScalarOps.weightedSystematicSample(
       gated.select(col("doc_id"), col("text")), CurateV5Samples)
-    gated.join(drawn, Seq("doc_id"))
-      .withColumn("split", splitOf(col("doc_id")))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .groupBy(col("split"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        sum(col("n_hits")).as("sum_hits"))
-      .orderBy(col("split"), col("shard"))
+    shardManifest(gated.join(drawn, Seq("doc_id")),
+      "n_chars" -> "sum_chars", "n_hits" -> "sum_hits")
   }
 
-  private val pipelineCurateV5Sql = {
-    val splitBp = md5LongSql("'split1:' || cast(doc_id as varchar)")
+  private val pipelineCurateV5Sql =
     s"""WITH $curateGateCtes,
        |w AS (
        |  SELECT doc_id, n_chars, cast(len($toksSql) as bigint) AS w,
@@ -836,20 +834,8 @@ object Pipelines {
        |    (cb + w - 1 + stride) // stride - (cb - 1 + stride) // stride AS n_hits
        |  FROM cw, tot
        |  WHERE w > 0
-       |    AND (cb + w - 1 + stride) // stride > (cb - 1 + stride) // stride),
-       |cells AS (
-       |  SELECT CASE WHEN $splitBp % 10000 < 9800 THEN 'train'
-       |              WHEN $splitBp % 10000 < 9900 THEN 'val'
-       |              ELSE 'test' END AS split,
-       |    cast(${md5LongSql("'shard1:' || cast(doc_id as varchar)")} % $ShuffleShards as int)
-       |      AS shard,
-       |    n_chars, n_hits
-       |  FROM drawn)
-       |SELECT split, shard, count(*) AS n_docs,
-       |  cast(sum(n_chars) as bigint) AS sum_chars,
-       |  cast(sum(n_hits) as bigint) AS sum_hits
-       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+       |    AND (cb + w - 1 + stride) // stride > (cb - 1 + stride) // stride)
+       |${manifestSql("drawn", "n_chars" -> "sum_chars", "n_hits" -> "sum_hits")}""".stripMargin
 
   // ---------------------------------------------------------------- curate v6
   /** The curate chain that EXCISES instead of DROPS — the published
@@ -876,60 +862,18 @@ object Pipelines {
     *
     * Plan shape: the gate/dedup stages are v3's; the excise kernel
     * persists its token frame internally (it feeds the shingle pass
-    * and the rebuild); the rebuilt output is persisted here because
-    * it feeds both the re-gate and the manifest — at corpus scale
-    * re-deriving the rebuild is a full extra pass. The re-gate is
-    * per-row expressions + one semi-join; the manifest is the usual
-    * ≤ splits × shards aggregate. */
-  def pipelineCurateV6(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir) // no spreadHint — see curateGatedDocs
-    // gate inlined as a filter — see pipelineCurateV3 (one scan, no join)
-    val kept = docs.filter(TextAnalysis.qualityKeep)
-    val deduped = kept
-      .groupBy(md5(col("text")).as("__h"))
-      .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id"))
-        .as("__r"))
-      .select(col("__r.doc_id").as("doc_id"), col("__r.text").as("text"))
-    // persisted because it feeds both the re-gate and the final join
-    // in the RETURNED lazy plan (unpersisting here would force the
-    // rebuild to run twice at action time). Repeated invocations do
-    // NOT accumulate cache: the plan is deterministic per corpus, so
-    // CacheManager's plan-equality lookup reuses the existing entry
-    // (it refuses to re-cache an already-cached plan); eviction is
-    // the documented MEMORY_AND_DISK + block-manager LRU policy.
-    val cleaned = Dedup.exciseDupSpans(deduped, Dedup.SubstrLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // re-gate inlined on cleaned_text (r18): one pass over the persisted
-    // rebuild instead of a second read + semi-join for the same rows
-    cleaned.filter(TextAnalysis.qualityKeepOn(col("cleaned_text")))
-      .withColumn("split", splitOf(col("doc_id")))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .groupBy(col("split"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_kept_tokens")).as("sum_tokens"))
-      .orderBy(col("split"), col("shard"))
-  }
+    * and the rebuild); the rebuilt output is persisted
+    * ([[excisedRegated]]) because it feeds both the re-gate and the
+    * manifest — at corpus scale re-deriving the rebuild is a full
+    * extra pass. The re-gate is a per-row filter over the persisted
+    * rebuild; the manifest is the usual ≤ splits × shards aggregate. */
+  def pipelineCurateV6(spark: SparkSession, dir: String): DataFrame =
+    shardManifest(excisedRegated(Tables.documents(spark, dir)),
+      "n_kept_tokens" -> "sum_tokens")
 
-  private val pipelineCurateV6Sql = {
-    val splitBp = md5LongSql("'split1:' || cast(doc_id as varchar)")
-    s"""WITH $keptDedupCtes,
-       |${Dedup.exciseSqlCtes("dedup")},
-       |regated AS (
-       |  SELECT doc_id, n_kept_tokens FROM (
-       |    SELECT doc_id, n_kept_tokens, cleaned_text AS text FROM excised)
-       |  WHERE ${TextAnalysis.QualityRuleSql.keep}),
-       |cells AS (
-       |  SELECT CASE WHEN $splitBp % 10000 < 9800 THEN 'train'
-       |              WHEN $splitBp % 10000 < 9900 THEN 'val'
-       |              ELSE 'test' END AS split,
-       |    cast(${md5LongSql("'shard1:' || cast(doc_id as varchar)")} % $ShuffleShards as int)
-       |      AS shard,
-       |    n_kept_tokens
-       |  FROM regated)
-       |SELECT split, shard, count(*) AS n_docs,
-       |  cast(sum(n_kept_tokens) as bigint) AS sum_tokens
-       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+  private val pipelineCurateV6Sql =
+    s"""WITH ${excisedRegatedCtes("documents")}
+       |${manifestSql("regated", "n_kept_tokens" -> "sum_tokens")}""".stripMargin
 
   // ---------------------------------------------------------------- curate v7
   /** The COMPLETE published-pipeline composition — v6's excise chain
@@ -948,79 +892,37 @@ object Pipelines {
     * the decontamination stage adds zero exchanges on the train
     * side beyond the per-doc hit aggregate ([[decontaminateAgainst]],
     * the shared kernel with `pipeline_decontaminate`). Every stage
-    * runs at the previous stage's survivor count. */
+    * runs at the previous stage's survivor count; the persisted
+    * rebuild feeds the re-gate, the probe AND the manifest join. */
   def pipelineCurateV7(spark: SparkSession, dir: String): DataFrame = {
-    val isEval =
-      pmod(md5Long(concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
-    val all = Tables.documents(spark, dir) // no spreadHint — see curateGatedDocs
-    val evalDocs = all.filter(isEval).select(col("doc_id"), col("text"))
-    val docs = all.filter(!isEval)
-    // gate inlined as a filter — see pipelineCurateV3 (one scan, no join)
-    val kept = docs.filter(TextAnalysis.qualityKeep)
-    val deduped = kept
-      .groupBy(md5(col("text")).as("__h"))
-      .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id"))
-        .as("__r"))
-      .select(col("__r.doc_id").as("doc_id"), col("__r.text").as("text"))
-    // persisted for the same reason (and under the same CacheManager
-    // plan-dedup / LRU-eviction policy) as pipelineCurateV6's
-    // `cleaned`: it feeds the re-gate, the decontamination probe, AND
-    // the final manifest join in the returned lazy plan
-    val cleaned = Dedup.exciseDupSpans(deduped, Dedup.SubstrLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // re-gate inlined on cleaned_text — see pipelineCurateV6
-    val regated = cleaned.filter(TextAnalysis.qualityKeepOn(col("cleaned_text")))
+    val all = Tables.documents(spark, dir)
+    val regated = excisedRegated(all.filter(!isEval))
     val cleanIds = decontaminateAgainst(
-        regated.select(col("doc_id"), col("cleaned_text").as("text")), evalDocs)
+        regated.select(col("doc_id"), col("cleaned_text").as("text")),
+        all.filter(isEval).select(col("doc_id"), col("text")))
       .filter(!col("contaminated")).select(col("doc_id"))
-    regated.join(cleanIds, Seq("doc_id"), "left_semi")
-      .withColumn("split", splitOf(col("doc_id")))
-      .withColumn("shard", shardOf(col("doc_id")))
-      .groupBy(col("split"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_kept_tokens")).as("sum_tokens"))
-      .orderBy(col("split"), col("shard"))
+    shardManifest(regated.join(cleanIds, Seq("doc_id"), "left_semi"),
+      "n_kept_tokens" -> "sum_tokens")
   }
 
-  private val pipelineCurateV7Sql = {
-    val splitBp = md5LongSql("'split1:' || cast(doc_id as varchar)")
-    val fiveg = "list_distinct(list_filter(" +
-      "list_transform(tk, (x, i) -> CASE WHEN i + 4 <= len(tk) " +
-      "THEN x || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4] END), " +
-      "s -> s IS NOT NULL))"
+  private val pipelineCurateV7Sql =
     s"""WITH train AS (
        |  SELECT doc_id, text, n_chars FROM documents
-       |  WHERE ${md5LongSql("'decon:' || cast(doc_id as varchar)")} % 20 <> 0),
-       |${keptDedupCtesFrom("train")},
-       |${Dedup.exciseSqlCtes("dedup")},
-       |regated AS (
-       |  SELECT doc_id, n_kept_tokens, text FROM (
-       |    SELECT doc_id, n_kept_tokens, cleaned_text AS text FROM excised)
-       |  WHERE ${TextAnalysis.QualityRuleSql.keep}),
+       |  WHERE NOT ${isEvalSql("doc_id")}),
+       |${excisedRegatedCtes("train")},
        |ev5 AS (
-       |  SELECT DISTINCT unnest($fiveg) AS es
+       |  SELECT DISTINCT unnest($fivegramsSql) AS es
        |  FROM (SELECT $toksSql AS tk FROM documents
-       |        WHERE ${md5LongSql("'decon:' || cast(doc_id as varchar)")} % 20 = 0)),
+       |        WHERE ${isEvalSql("doc_id")})),
        |tr5 AS (
-       |  SELECT doc_id, unnest($fiveg) AS s
+       |  SELECT doc_id, unnest($fivegramsSql) AS s
        |  FROM (SELECT doc_id, $toksSql AS tk FROM regated)),
        |contaminated AS (
        |  SELECT DISTINCT tr5.doc_id FROM tr5 JOIN ev5 ON tr5.s = ev5.es),
        |final AS (
        |  SELECT doc_id, n_kept_tokens FROM regated
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
-       |cells AS (
-       |  SELECT CASE WHEN $splitBp % 10000 < 9800 THEN 'train'
-       |              WHEN $splitBp % 10000 < 9900 THEN 'val'
-       |              ELSE 'test' END AS split,
-       |    cast(${md5LongSql("'shard1:' || cast(doc_id as varchar)")} % $ShuffleShards as int)
-       |      AS shard,
-       |    n_kept_tokens
-       |  FROM final)
-       |SELECT split, shard, count(*) AS n_docs,
-       |  cast(sum(n_kept_tokens) as bigint) AS sum_tokens
-       |FROM cells GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated))
+       |${manifestSql("final", "n_kept_tokens" -> "sum_tokens")}""".stripMargin
 
   // ---------------------------------------------------------------- dataset card
   /** The corpus "dataset card" aggregate — the per-(lang, source)
@@ -1077,19 +979,7 @@ object Pipelines {
           col("n_chars")),
       strataCol = "source", keyCol = "doc_id", cap = 15)
       .drop("sample_rank")
-    // exact dedup as a keep-lowest-doc_id AGGREGATE, not a window:
-    // same single md5 exchange, but min_by gets map-side partial
-    // aggregation (each input partition pre-reduces to one candidate
-    // per hash before the shuffle), where the row_number form had to
-    // shuffle every duplicate row and sort each hash group (round-7)
-    val deduped = capped
-      .groupBy(md5(col("text")).as("__h"))
-      .agg(min_by(
-        struct(col("doc_id"), col("source"), col("lang"), col("text"),
-          col("n_chars")),
-        col("doc_id")).as("__r"))
-      .select(col("__r.doc_id"), col("__r.source"), col("__r.lang"),
-        col("__r.text"), col("__r.n_chars"))
+    val deduped = exactDedup(capped, "doc_id", "source", "lang", "text", "n_chars")
     val bp = when(col("lang") === "en", 8000)
       .when(col("lang") === "de", 5000).otherwise(2500)
     sampleWeighted(deduped, bp, "curate2")

@@ -974,9 +974,7 @@ object StreamingJobs {
     * of `pipeline_curate_v3`'s gate chain, proving the stream twins
     * COMPOSE into one job rather than merely existing side by side:
     * quality gate ([[graft.operators.TextAnalysis.qualityKeep]], the
-    * batch gate's exact predicate carried through as a filter so the
-    * stream keeps its other columns without the batch chain's
-    * doc_id semi-join — a stream cannot self-join) → per-source
+    * batch chain's exact per-row filter) → per-source
     * admission quota ([[capPerSourceStream]], the only stateful
     * stage: ONE long per source) → weighted mixture
     * ([[mixtureSampleStream]] at the batch `mixtureBp` rates, ONE

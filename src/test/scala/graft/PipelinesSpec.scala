@@ -350,6 +350,49 @@ class PipelinesSpec extends SparkSpec {
     cleaned.unpersist(); survivors.unpersist()
   }
 
+  test("curateV7: manifest totals are the decontaminated, regated excise survivors of the train side") {
+    // sf0.01: the smallest corpus whose cleaned train side still shares
+    // a 5-gram with the eval side, so the decontamination stage is live
+    val dir = "/root/testdata/sf0.01"
+    val v7 = Pipelines.pipelineCurateV7(spark, dir).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    assert(v7.nonEmpty)
+    assert(v7.forall(c => Set("train", "val", "test")(c._1) &&
+      c._2 >= 0 && c._2 < 8))
+    // recompute the chain from the public kernels: the train side of
+    // the decontamination split → gate → exact dedup → excise → re-gate
+    val docs = graft.Tables.documents(spark, dir)
+    val isEval = pmod(graft.functions.CrossEngine.md5Long(
+      concat(lit("decon:"), col("doc_id").cast("string"))), lit(20)) === 0
+    val train = docs.filter(!isEval)
+    val survivors = train.join(
+        TextAnalysis.qualityRules(train.select(col("doc_id"), col("text")))
+          .filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
+      .groupBy(md5(col("text")).as("h"))
+      .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id")).as("r"))
+      .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"))
+      .persist()
+    val cleaned = Dedup.exciseDupSpans(survivors, 8).persist()
+    val regated = cleaned.join(
+      TextAnalysis.qualityRules(
+          cleaned.select(col("doc_id"), col("cleaned_text").as("text")))
+        .filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi")
+    // → decontamination of the cleaned text against the eval side
+    val clean = Pipelines.decontaminateAgainst(
+        regated.select(col("doc_id"), col("cleaned_text").as("text")),
+        docs.filter(isEval).select(col("doc_id"), col("text")))
+      .filter(!col("contaminated")).select("doc_id")
+    val (nDocs, nToks) = regated.join(clean, Seq("doc_id"), "left_semi")
+      .agg(count(lit(1)), sum(col("n_kept_tokens"))).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).head
+    assert(v7.map(_._3).sum == nDocs,
+      s"v7 cells must partition the $nDocs decontaminated survivors")
+    assert(v7.map(_._4).sum == nToks,
+      "v7 token mass must equal the decontaminated survivors' kept tokens")
+    assert(regated.count() > nDocs, "decontamination must drop a regated doc")
+    cleaned.unpersist(); survivors.unpersist()
+  }
+
   test("exciseDupSpans: canonical keeps all, copies lose the span, full copies vanish") {
     val span = (1 to 8).map(i => s"S$i").mkString(" ")
     val uniq2 = (1 to 6).map(i => s"u$i").mkString(" ")

@@ -286,10 +286,11 @@ class PlanShapeSpec extends SparkSpec {
       s"unexpected non-equi join in: ${offenders.mkString(", ")}")
   }
 
+  private def hashExchanges(df: org.apache.spark.sql.DataFrame): Int =
+    "Exchange hashpartitioning".r
+      .findAllIn(df.queryExecution.executedPlan.toString).length
+
   test("round-8 scale claims are visible in the plans: exchange counts match the docs") {
-    def hashExchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange hashpartitioning".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
     // pure projections: no hash exchange anywhere (final orderBy is a
     // range exchange — oracle-compare support, not operator work)
     assert(hashExchanges(graft.operators.Pipelines.evalSplit(spark, sf)) == 0,
@@ -303,6 +304,23 @@ class PlanShapeSpec extends SparkSpec {
     // grouping sets: one exchange feeds all four rollup granularities
     assert(hashExchanges(graft.operators.Pipelines.datasetCard(spark, sf)) == 1,
       "dataset card claims a single grouping-sets exchange")
+  }
+
+  test("curate chains v2-v7 keep their pinned hash-exchange counts") {
+    // counted from a swept cache, as Verify runs each query: a chain's
+    // persisted stages print their cached sub-plans in the plan text
+    // once materialized, so without the sweep the count would depend on
+    // what ran before. A change to a shared curation stage that alters
+    // any chain's plan moves these figures.
+    Seq("pipeline_curate_v2" -> 4, "pipeline_curate_v3" -> 2,
+      "pipeline_curate_v4" -> 8, "pipeline_curate_v5" -> 31,
+      "pipeline_curate_v6" -> 16, "pipeline_curate_v7" -> 51)
+      .foreach { case (name, pinned) =>
+        CacheHygiene.sweep(spark)
+        val n = hashExchanges(SparkEntry.queries(name)(spark, sf))
+        assert(n == pinned, s"$name plans $n hash exchanges, pinned at $pinned")
+      }
+    CacheHygiene.sweep(spark)
   }
 
   test("q6's tight filters reach the parquet scan as pushed filters") {

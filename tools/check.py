@@ -6,8 +6,10 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query,query,...]
 Reads each <verifyOutDir>/<query> parquet dump (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the same
 sf tables, and compares rows / schema / a value hash after sorting columns
-by name. Exit 1 on any mismatch. Local-iteration tooling only — the
-driver runs its own equivalent.
+by name. Exit 1 on any mismatch, and on any expected name (the listed
+ones, else every oracle-paired query) without a dump: ENGINE_OUTPUT_MISSING
+if it has an oracle, UNKNOWN_QUERY if not. Local-iteration tooling only —
+the driver runs its own equivalent.
 """
 import json
 import os
@@ -44,7 +46,7 @@ def table_hash(con, rel_sql):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    only = {q for q in sys.argv[3].split(",") if q} if len(sys.argv) > 3 else None
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
 
     def fresh_con():
@@ -133,14 +135,17 @@ def main():
             failures += 1
             if sc != oc:
                 print(f"   spark cols: {sc}\n   oracle cols: {oc}")
-    # an oracle-paired query with NO engine dump (its Verify run
-    # failed) must not silently vanish from a full-registry sweep
-    if only is None:
-        for name in sorted(oracle):
-            if name not in results and not os.path.isdir(os.path.join(out_dir, name)):
-                print(f"{name}: ENGINE_OUTPUT_MISSING  <-- MISMATCH")
-                results[name] = {"err": "ENGINE_OUTPUT_MISSING"}
-                failures += 1
+    # every expected name needs an engine dump: an oracle-paired query
+    # with none failed in Verify (ENGINE_OUTPUT_MISSING), and a requested
+    # name with neither dump nor oracle was never a query (UNKNOWN_QUERY)
+    # — either way the run must fail, not report a check of nothing.
+    # Expected = the requested subset, or every oracle-paired query.
+    for name in sorted(only if only is not None else oracle):
+        if name not in results and not os.path.isdir(os.path.join(out_dir, name)):
+            label = "ENGINE_OUTPUT_MISSING" if name in oracle else "UNKNOWN_QUERY"
+            print(f"{name}: {label}  <-- MISMATCH")
+            results[name] = {"err": label}
+            failures += 1
     if json_out:
         doc = {}
         if os.path.exists(json_out):
