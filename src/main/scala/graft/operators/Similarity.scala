@@ -749,16 +749,6 @@ object Similarity {
   }
 
   // ---------------------------------------------------------------- kmeans
-  /** IVF centroid training: 2 deterministic Lloyd iterations
-    * (init = lowest-id vectors, cosine assignment with fixed
-    * tie-break, decimal-exact component means). This is how the
-    * `ann_ivf` centroids would actually be learned at scale — each
-    * iteration is one broadcast-assign (narrow) + one (cluster, dim)
-    * aggregate; nothing iterates on the driver.
-    *
-    * Cross-engine: component means are decimal-sum / count (exact,
-    * order-free); norms/dots are sequential folds over dim-ordered
-    * arrays → bit-identical doubles. */
   /** Reusable Lloyd trainer over (vec_id, v, nrm) rows: k clusters
     * (init = k lowest-id vectors), `iters` assign/update rounds.
     * Returns (centroids with c_id/cv, final assignment with
@@ -775,7 +765,13 @@ object Similarity {
     * that's how MLlib's own KMeans iterates too). The corpus frame is
     * persisted once and reused by all `iters+1` jobs. Collected
     * doubles round-trip exactly, so cross-engine bit-determinism is
-    * unaffected. */
+    * unaffected.
+    *
+    * Cross-engine: init = lowest-id vectors, cosine assignment with a
+    * fixed tie-break (norms/dots are sequential folds over dim-ordered
+    * arrays → bit-identical doubles), and component means computed by
+    * [[kmeansUpdate]] exactly as the oracle's decimal sum / count
+    * ([[lloydCtes]]) computes them. */
   def kmeansTrain(e0: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) =
     kmeansTrainImpl(e0, k, iters, twoLevel = false)
 
@@ -821,30 +817,6 @@ object Similarity {
       cents.iterator.flatMap(c => Option(c._2)).map(_.length)
         .find(_ > 0).getOrElse(1)
 
-    // centroid update: ONE groupBy(cluster) carrying `dim` decimal
-    // sums (map-side combined: 32 partitions × k clusters × dim
-    // partials cross the wire, never rows). The r1-r4 form exploded
-    // the corpus to n×dim rows and shuffled the expansion through TWO
-    // aggregates per Lloyd round — after the zero-shuffle assign
-    // landed, that explode had become the training bottleneck.
-    // Decimal sums are order-free exact, so component means stay
-    // bit-identical to the oracle's unnest/GROUP BY dim form.
-    // Malformed rows (null v, or width ≠ the probed dim) are excluded
-    // from the mean: a null component would be skipped by `sum` while
-    // still inflating a bare count(*) — dragging every component mean
-    // — and `element_at` past a short vector errors under ANSI. Such
-    // rows still appear in `assigned` (with whatever cluster the
-    // null-propagating argmax yields); they just don't train.
-    def update(assigned: DataFrame, dim: Int): DataFrame =
-      assigned
-        .filter(col("v").isNotNull && size(col("v")) === dim)
-        .groupBy(col("cluster"))
-        .agg(array((0 until dim).map { i =>
-          (sum(element_at(col("v"), i + 1).cast("decimal(28,12)")).cast("double")
-            / count(lit(1))).as(s"m$i")
-        }: _*).as("cv"))
-        .select(col("cluster").as("c_id"), col("cv"))
-
     // k×dim → driver triples; norms via driverNorm (bit-identical to
     // the in-engine L2Norm fold), so each round's plan stays flat
     var cents = collectCentroids(e.filter(col("vec_id") < k)
@@ -853,16 +825,40 @@ object Similarity {
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
       assigned = assign(cents)
-      cents = collectCentroids(update(assigned, dim))
+      cents = collectCentroids(kmeansUpdate(assigned, dim))
     }
     import spark.implicits._
     val centDf = cents.map { case (id, cv, _) => (id, cv) }.toDF("c_id", "cv")
     (centDf, assigned)
   }
 
+  /** One Lloyd centroid update: ONE groupBy(cluster) whose single
+    * native [[graft.functions.VectorMeanExact]] aggregate carries the
+    * `dim` component means (map-side combined: each partition ships
+    * k buffers of 128-bit sums, never rows).
+    *
+    * The means equal the oracle's decimal sum / count ([[lloydCtes]])
+    * bit for bit: every element goes through Spark's own double →
+    * decimal cast at the oracle's precision and scale, and only the
+    * accumulation is native — an exact 128-bit sum of the unscaled
+    * values, which, like a decimal sum, does not depend on row order
+    * or merge order.
+    *
+    * Malformed rows (null v, or width ≠ the probed dim) are filtered
+    * out before grouping, so they neither count toward a mean nor
+    * make a centroid of a cluster that holds only them. Those rows
+    * still appear in `assigned` (with whatever cluster the
+    * null-propagating argmax yields); they just don't train. */
+  private[graft] def kmeansUpdate(assigned: DataFrame, dim: Int): DataFrame =
+    assigned
+      .filter(col("v").isNotNull && size(col("v")) === dim)
+      .groupBy(col("cluster"))
+      .agg(graft.functions.VectorMeanExact.mean(dim, col("v")).as("cv"))
+      .select(col("cluster").as("c_id"), col("cv"))
+
   /** 5 Lloyd rounds (was 2 in round 1): with the flat-iteration
-    * trainer each extra round costs one corpus pass, not a replay of
-    * all prior rounds, so more rounds are now cheap — and prove it. */
+    * trainer each extra round costs one corpus pass plus one
+    * [[kmeansUpdate]] aggregate, not a replay of all prior rounds. */
   private val KmeansIters = 5
 
   def annKmeans(spark: SparkSession, dir: String): DataFrame = {
@@ -889,15 +885,25 @@ object Similarity {
   private def kmeansCtesFor(iters: Int): String =
     kmeansCtes(iters, NCentroids.toString)
 
-  private def kmeansCtes(iters: Int, kSql: String): String = {
-    val rounds = (1 to iters).map { i =>
+  private def kmeansCtes(iters: Int, kSql: String): String =
+    lloydCtes(iters, kSql) { i =>
       s"""a$i AS (
          |  SELECT vec_id, v, cluster FROM (
          |    SELECT en.vec_id, en.v, c.c_id AS cluster,
          |      row_number() OVER (PARTITION BY en.vec_id
          |        ORDER BY ${sqlDot("c.cv", "en.v")} / (${sqlNrm("c.cv")} * en.nrm) DESC, c.c_id) AS rn
          |    FROM en CROSS JOIN c${i - 1} c)
-         |  WHERE rn = 1),
+         |  WHERE rn = 1)""".stripMargin
+    }
+
+  /** The Lloyd CTE chain around a per-round assign block: `en` (the
+    * vectors), `c0` (the `kSql` lowest-id seeds), then per round i the
+    * `assign(i)` CTEs ending in `a$i` (vec_id, v, cluster) and the
+    * update `u$i`/`c$i` — the decimal sum / count that
+    * [[kmeansUpdate]]'s native aggregate reproduces bit for bit. */
+  private def lloydCtes(iters: Int, kSql: String)(assign: Int => String): String = {
+    val rounds = (1 to iters).map { i =>
+      s"""${assign(i)},
          |u$i AS (
          |  SELECT cluster, dim,
          |    cast(sum(cast(x as decimal(28,12))) as double) / count(*) AS m
@@ -962,22 +968,10 @@ object Similarity {
   /** Unrolled Lloyd chain like [[kmeansCtes]] but with the TWO-LEVEL
     * assign per round — the oracle twin of [[kmeansTrainTwoLevel]].
     * Ends with `c$iters` / `a$iters` (a$i = vec_id, v, cluster). */
-  private def kmeans2lCtes(iters: Int, kSql: String): String = {
-    val rounds = (1 to iters).map { i =>
-      val assign = kmeans2lAssignCtes(i.toString, s"c${i - 1}",
-        Seq("vec_id", "v"), s"a$i")
-      s"""$assign,
-         |u$i AS (
-         |  SELECT cluster, dim,
-         |    cast(sum(cast(x as decimal(28,12))) as double) / count(*) AS m
-         |  FROM (SELECT cluster, unnest(v) AS x, generate_subscripts(v, 1) AS dim FROM a$i)
-         |  GROUP BY cluster, dim),
-         |c$i AS MATERIALIZED (SELECT cluster AS c_id, list(m ORDER BY dim) AS cv FROM u$i GROUP BY cluster)""".stripMargin
-    }.mkString(",\n")
-    s"""en AS MATERIALIZED ($vecsSql),
-       |c0 AS MATERIALIZED (SELECT cast(vec_id as int) AS c_id, v AS cv FROM en WHERE vec_id < ($kSql)),
-       |$rounds""".stripMargin
-  }
+  private def kmeans2lCtes(iters: Int, kSql: String): String =
+    lloydCtes(iters, kSql) { i =>
+      kmeans2lAssignCtes(i.toString, s"c${i - 1}", Seq("vec_id", "v"), s"a$i")
+    }
 
   private val annKmeansSql = {
     val n = KmeansIters

@@ -16,6 +16,17 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
+/** Spark's own error for a decimal that does not fit its target type
+  * (NUMERIC_VALUE_OUT_OF_RANGE), for native expressions that mirror a
+  * decimal cast under ANSI. */
+object ErrorBridge {
+  import org.apache.spark.sql.errors.QueryExecutionErrors
+  import org.apache.spark.sql.types.Decimal
+
+  def decimalOutOfRange(value: Decimal, precision: Int, scale: Int): ArithmeticException =
+    QueryExecutionErrors.cannotChangeDecimalPrecisionError(value, precision, scale, null)
+}
+
 /** DataFrame ↔ LogicalPlan bridge for custom logical operators. */
 object DatasetBridge {
   import org.apache.spark.sql.{DataFrame, SparkSession}

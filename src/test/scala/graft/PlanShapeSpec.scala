@@ -409,6 +409,26 @@ class PlanShapeSpec extends SparkSpec {
     CacheHygiene.sweep(spark)
   }
 
+  test("kmeans update plans one vector_mean_exact aggregate and no decimal(28,12)") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val e = Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      .withColumn("cluster", (col("vec_id") % 3).cast("int"))
+    val dim = e.head().getSeq[Double](1).length
+    val upd = Similarity.kmeansUpdate(e, dim)
+    upd.collect()
+    val plan = upd.queryExecution.executedPlan
+    // partial and final aggregate each hold the one function
+    val fns = new AdaptiveSparkPlanHelper {}.collect(plan) { case a: BaseAggregateExec =>
+      a.aggregateExpressions.map(_.aggregateFunction.prettyName)
+    }
+    assert(fns.nonEmpty && fns.forall(_ == Seq("vector_mean_exact")),
+      s"expected one vector_mean_exact per aggregate, got $fns in:\n$plan")
+    assert(!plan.toString.contains("decimal(28,12)"), s"decimal cast left in:\n$plan")
+  }
+
   test("typed sampleFrames equals the oracle-checked mm_frame_sample query") {
     val s = spark
     import s.implicits._

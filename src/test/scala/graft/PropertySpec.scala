@@ -108,6 +108,114 @@ class PropertySpec extends SparkSpec {
     assert(got == expect)
   }
 
+  /** The k-means update before [[graft.functions.VectorMeanExact]]:
+    * `dim` decimal(28,12) sums plus a count, one per component. Kept
+    * as the reference its means must equal bit for bit. */
+  private def decimalMeanUpdate(assigned: org.apache.spark.sql.DataFrame, dim: Int) =
+    assigned
+      .filter(col("v").isNotNull && size(col("v")) === dim)
+      .groupBy(col("cluster"))
+      .agg(array((0 until dim).map { i =>
+        (sum(element_at(col("v"), i + 1).cast("decimal(28,12)")).cast("double")
+          / count(lit(1))).as(s"m$i")
+      }: _*).as("cv"))
+      .select(col("cluster").as("c_id"), col("cv"))
+
+  /** (cluster, v) rows over `parts` partitions, v an array<double>
+    * that may hold nulls. */
+  private def clusterVectors(rows: Seq[(Int, Seq[java.lang.Double])], parts: Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("cluster", IntegerType, nullable = false),
+      StructField("v", ArrayType(DoubleType, containsNull = true), nullable = true)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (c, v) => Row(c, v) }, parts), schema)
+  }
+
+  /** c_id → component means as raw double bits (None = null). */
+  private def meanBits(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Option[Long]]] =
+    df.collect().map { r =>
+      r.getInt(0) -> r.getSeq[java.lang.Double](1).map(d =>
+        Option(d).map(x => java.lang.Double.doubleToRawLongBits(x)))
+    }.toMap
+
+  private def assertSameMeans(rows: Seq[(Int, Seq[java.lang.Double])], dim: Int): Unit =
+    Seq(1, 7).foreach { parts =>
+      val df = clusterVectors(rows, parts)
+      val got = meanBits(graft.operators.Similarity.kmeansUpdate(df, dim))
+      val expect = meanBits(decimalMeanUpdate(df, dim))
+      assert(got == expect, s"parts=$parts dim=$dim rows=$rows")
+    }
+
+  test("property: VectorMeanExact equals the decimal(28,12) mean bit for bit") {
+    // HALF_UP ties: the shortest decimal string has 13 decimals ending
+    // in 5, so the cast rounds the string, not the binary value, up
+    val tie = for {
+      ip <- Gen.choose(-999, 999)
+      frac <- Gen.listOfN(12, Gen.numChar)
+    } yield s"$ip.${frac.mkString}5".toDouble
+    val elem: Gen[java.lang.Double] = Gen.frequency(
+      1 -> Gen.const(null),
+      9 -> Gen.frequency(
+        1 -> Gen.const(-0.0),
+        4 -> Gen.choose(-10.0, 10.0),
+        2 -> Gen.choose(-1e15, 1e15),
+        1 -> Gen.oneOf(9.999999999999998e15, -9.999999999999998e15, 1e15, 4.9e-324),
+        3 -> tie
+      ).map(Double.box))
+    val gen = for {
+      dim <- Gen.choose(1, 8)
+      n <- Gen.choose(0, 60)
+      rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 3), Gen.listOfN(dim, elem)))
+      // malformed rows the update must drop: a null vector, a too-wide one
+      bad <- Gen.listOfN(2, Gen.zip(Gen.choose(0, 3),
+        Gen.oneOf(Gen.const(null), Gen.listOfN(dim + 1, elem))))
+    } yield (dim, rows ++ bad)
+    forAll(gen, samples = 12) { case (dim, rows) =>
+      // cluster 0's first component is null in every row of its group
+      val withAllNull = rows.map {
+        case (0, v) if v != null => (0, null +: v.tail)
+        case r => r
+      }
+      assertSameMeans(withAllNull, dim)
+    }
+  }
+
+  test("VectorMeanExact on NaN, ±Inf and |x| >= 1e16 matches the decimal mean: null, or the same error under ANSI") {
+    val special: Seq[(Int, Seq[java.lang.Double])] = Seq(
+      (0, Seq(Double.NaN, 1.5, Double.PositiveInfinity)),
+      (0, Seq(2.0, Double.NegativeInfinity, Double.NaN)),
+      (1, Seq(Double.NaN, Double.NaN, 0.25)))
+    // NaN and ±Inf cast to null under either mode: skipped, row counted
+    assertSameMeans(special, 3)
+    val huge = special :+ ((1, Seq[java.lang.Double](1e16, -3.0, -1.7e300)))
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.getOption(key)
+    def conditionOf(body: => Any): String = {
+      val e = intercept[Exception](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: org.apache.spark.SparkThrowable if t.getCondition != null =>
+          t.getCondition }
+        .getOrElse(fail(s"no error condition in $e"))
+    }
+    try {
+      spark.conf.set(key, "true")
+      val df = clusterVectors(huge, 3)
+      val expect = conditionOf(decimalMeanUpdate(df, 3).collect())
+      assert(expect.startsWith("NUMERIC_VALUE_OUT_OF_RANGE"), expect)
+      assert(conditionOf(graft.operators.Similarity.kmeansUpdate(df, 3).collect()) == expect)
+      // without ANSI the out-of-range element casts to null instead
+      spark.conf.set(key, "false")
+      assertSameMeans(huge, 3)
+      assert(meanBits(graft.operators.Similarity.kmeansUpdate(clusterVectors(huge, 1), 3))(1)(0)
+        .isEmpty, "1e16 is skipped, the group's NaN elements too: component 0 is null")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("property: stateful sessionizer equals brute-force gap split") {
     val s = spark
     import s.implicits._

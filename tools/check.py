@@ -7,8 +7,10 @@ Reads each <verifyOutDir>/<query> parquet dump (written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the same
 sf tables, and compares rows / schema / a value hash after sorting columns
 by name. Exit 1 on any mismatch, and on any expected name (the listed
-ones, else every oracle-paired query) without a dump: ENGINE_OUTPUT_MISSING
-if it has an oracle, UNKNOWN_QUERY if not. Local-iteration tooling only —
+ones, else every registered query) without a dump: ENGINE_OUTPUT_MISSING
+if it is registered (registered.json, written by graft.Verify beside
+oracle_sql.json), UNKNOWN_QUERY if not. A dump dir without registered.json
+falls back to the oracle-paired names. Local-iteration tooling only —
 the driver runs its own equivalent.
 """
 import json
@@ -48,6 +50,8 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = {q for q in sys.argv[3].split(",") if q} if len(sys.argv) > 3 else None
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    reg_path = os.path.join(out_dir, "registered.json")
+    registered = set(json.load(open(reg_path))) if os.path.exists(reg_path) else set(oracle)
 
     def fresh_con():
         c = duckdb.connect()
@@ -135,14 +139,14 @@ def main():
             failures += 1
             if sc != oc:
                 print(f"   spark cols: {sc}\n   oracle cols: {oc}")
-    # every expected name needs an engine dump: an oracle-paired query
-    # with none failed in Verify (ENGINE_OUTPUT_MISSING), and a requested
-    # name with neither dump nor oracle was never a query (UNKNOWN_QUERY)
-    # — either way the run must fail, not report a check of nothing.
-    # Expected = the requested subset, or every oracle-paired query.
-    for name in sorted(only if only is not None else oracle):
+    # every expected name needs an engine dump: a registered query with
+    # none failed in Verify (ENGINE_OUTPUT_MISSING), and a requested name
+    # that is not registered was never a query (UNKNOWN_QUERY) — either
+    # way the run must fail, not report a check of nothing.
+    # Expected = the requested subset, or every registered query.
+    for name in sorted(only if only is not None else registered):
         if name not in results and not os.path.isdir(os.path.join(out_dir, name)):
-            label = "ENGINE_OUTPUT_MISSING" if name in oracle else "UNKNOWN_QUERY"
+            label = "ENGINE_OUTPUT_MISSING" if name in registered else "UNKNOWN_QUERY"
             print(f"{name}: {label}  <-- MISMATCH")
             results[name] = {"err": label}
             failures += 1
