@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Cross-engine-deterministic numeric helpers (SURVEY.md §3).
   *
@@ -21,9 +21,19 @@ object CrossEngine {
   /** Exact order-independent sum of a money/measure column:
     * decimal(18,6) accumulate → HALF_UP round in decimal space (both
     * engines' `round(decimal)` is half-away-from-zero; their decimal
-    * CASTs disagree on ties) → double. */
+    * CASTs disagree on ties) → double.
+    *
+    * The accumulate is [[DecimalSumExact]], which returns exactly
+    * `sum(cast(c as decimal(18,6)))` — [[dsumSql]]'s form — without a
+    * `Decimal` per row: each double's unscaled decimal(18,6) value comes
+    * from its binary value when frac(|x|·10^6) lies more than
+    * 10^6·ulp(x) + ulp(|x|·10^6) from ½ (then the HALF_UP rounding of
+    * Spark's shortest decimal string is decided), and from Spark's own
+    * cast otherwise (near-ties, |x| >= 2^53/10^6, NaN, ±Inf); the
+    * summands add in a signed 128-bit integer, whose sum does not
+    * depend on row order or on how partial aggregates merge. */
   def dsum(c: Column): Column =
-    round(sum(c.cast(DecimalType(18, 6))), 2).cast(DoubleType)
+    round(DecimalSumExact.sum(c), 2).cast(DoubleType)
 
   def dsumSql(e: String, as: String): String =
     s"cast(round(sum(cast($e as decimal(18,6))), 2) as double) AS $as"

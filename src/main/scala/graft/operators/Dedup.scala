@@ -1562,7 +1562,7 @@ object Dedup {
     * [[Calibration.recallAtCaps]] (minShared = 1 matches this kernel's
     * survival rule exactly) before choosing it over the lossless
     * agree-escalation of [[bandedHammingPairsAuto]]. MEASURED (r17,
-    * `graft.SimhashProbe --cap 1024`, sf10 documents corpus, 60 bits /
+    * `probe.SimhashProbe --cap 1024`, sf10 documents corpus, 60 bits /
     * 6 bands / hamming ≤ 4): recall 1.0000 — 15,536,528 of 15,536,528
     * uncapped pairs retained; no (sub, key) bucket exceeds df 1024 at
     * that SF, so the cap is pure insurance there (SCALING.md
@@ -2038,7 +2038,8 @@ object Dedup {
   // agree-2 — the probe prices agree-3 in the same pass, so the
   // NEXT saturation decade escalates the subset width (2²⁶-bucket
   // keys for a 35/15 explode step) instead of going quadratic;
-  // `graft.SimhashProbe` reproduces the decomposition on any corpus.
+  // `probe.SimhashProbe` (test scope) reproduces the decomposition
+  // on any corpus.
   def dedupSimhashWide(spark: SparkSession, dir: String): DataFrame =
     bandedHammingPairsAuto(
       simhashWideSigsForProbe(spark, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.CrossEngine.{dsum, dsumSql, rnd, rndSql}
+import graft.functions.DecimalSumExact
 
 /** The remaining TPC-H query shapes (Q2, Q4, Q7–Q22), adapted to the
   * driver's reduced schema (SURVEY.md §2 B). `Relational` carries
@@ -325,7 +326,7 @@ object TpchSuite {
     // independent — a plain FP sum could flip a boundary part between
     // engines/runs under the strict `>` filter below
     val total = value.agg(
-      sum(col("value").cast("decimal(18,6)")).cast("double").as("grand_total"),
+      DecimalSumExact.sum(col("value")).cast("double").as("grand_total"),
       count(lit(1)).as("n_parts"))
     value.crossJoin(broadcast(total))
       .filter(col("value") * col("n_parts") > col("grand_total") * lit(2.0))
@@ -733,7 +734,7 @@ object TpchSuite {
       .filter(col("n_name").isin(nations: _*))
     val stats = cust.filter(col("c_acctbal") > 0)
       .agg(
-        sum(col("c_acctbal").cast("decimal(18,6)")).cast("double").as("bal_sum"),
+        DecimalSumExact.sum(col("c_acctbal")).cast("double").as("bal_sum"),
         count(lit(1)).as("bal_n"))
     val recent = Tables.orders(spark, dir)
       .filter(col("o_orderdate") >= lit("2001-01-01").cast("timestamp"))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import graft.functions.CrossEngine.dsum
 
 /** Structured Streaming jobs (SURVEY.md §2 H). Each mirrors a batch
   * oracle query in operators.Events, so correctness is checked by
@@ -28,8 +28,7 @@ object StreamingJobs {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        round(sum(col("value").cast(DecimalType(18, 6))), 2)
-          .cast(DoubleType).as("total_value"))
+        dsum(col("value")).as("total_value"))
       .select(col("w.start").as("hour"), col("event_type"),
         col("n_events"), col("total_value"))
   }

@@ -16,15 +16,19 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 }
 
-/** Spark's own error for a decimal that does not fit its target type
-  * (NUMERIC_VALUE_OUT_OF_RANGE), for native expressions that mirror a
-  * decimal cast under ANSI. */
+/** Spark's own errors for a decimal that does not fit its target type
+  * (NUMERIC_VALUE_OUT_OF_RANGE) and for a decimal sum that overflows,
+  * for native expressions that mirror a decimal cast or sum under
+  * ANSI. */
 object ErrorBridge {
   import org.apache.spark.sql.errors.QueryExecutionErrors
   import org.apache.spark.sql.types.Decimal
 
   def decimalOutOfRange(value: Decimal, precision: Int, scale: Int): ArithmeticException =
     QueryExecutionErrors.cannotChangeDecimalPrecisionError(value, precision, scale, null)
+
+  def decimalSumOverflow(): ArithmeticException =
+    QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
 }
 
 /** DataFrame ↔ LogicalPlan bridge for custom logical operators. */

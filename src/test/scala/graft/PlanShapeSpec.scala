@@ -429,6 +429,33 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.toString.contains("decimal(28,12)"), s"decimal cast left in:\n$plan")
   }
 
+  test("q1 sums with decimal_sum_exact in codegen'd HashAggregates and no decimal(18,6) cast") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+    val q1 = graft.operators.Relational.q1PricingSummary(spark, sf)
+    q1.collect()
+    val plan = q1.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the operators one codegen stage compiles: its subtree down to its inputs
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case o => o +: o.children.flatMap(stage)
+    }
+    val aggs = helper.collect(plan) { case a: BaseAggregateExec => a }
+    val codegenAggs = helper.collect(plan) { case w: WholeStageCodegenExec =>
+      stage(w.child).collect { case h: HashAggregateExec => h }
+    }.flatten
+    assert(aggs.size == 2 && aggs.forall(_.isInstanceOf[HashAggregateExec]),
+      s"expected a partial and a final HashAggregate in:\n$plan")
+    assert(codegenAggs.size == aggs.size, s"an aggregate left whole-stage codegen:\n$plan")
+    aggs.foreach { a =>
+      assert(a.aggregateExpressions.map(_.aggregateFunction.prettyName) ==
+        Seq.fill(3)("decimal_sum_exact") :+ "count", s"in:\n$plan")
+    }
+    assert(!plan.toString.contains("decimal(18,6)"), s"decimal cast left in:\n$plan")
+  }
+
   test("typed sampleFrames equals the oracle-checked mm_frame_sample query") {
     val s = spark
     import s.implicits._

@@ -216,6 +216,163 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with `spark.sql.ansi.enabled` set to `on`, then
+    * restores the session's setting. */
+  private def withAnsi[A](on: Boolean)(body: => A): A = {
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The error condition `body` raises, from the first SparkThrowable
+    * in its cause chain. */
+  private def errorCondition(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case t: org.apache.spark.SparkThrowable if t.getCondition != null =>
+        t.getCondition }
+      .getOrElse(fail(s"no error condition in $e"))
+  }
+
+  /** (id, g, x) rows over `parts` partitions; x may be null. */
+  private def groupedDoubles(rows: Seq[(Int, java.lang.Double)], parts: Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("g", IntegerType, nullable = false),
+      StructField("x", DoubleType, nullable = true)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case ((g, x), i) => Row(i.toLong, g, x) }, parts), schema)
+  }
+
+  /** Doubles shaped like the lineitem money columns (quantity, price,
+    * discounted price), random bit patterns, HALF_UP ties planted at
+    * the seventh decimal (`…ddddd5`), ±0.0, subnormals, NaN, ±Inf and
+    * magnitudes at and past decimal(18,6)'s 1e12 limit. */
+  private val castCase: Gen[java.lang.Double] = {
+    val lineitem = for {
+      q <- Gen.choose(1, 50)
+      cents <- Gen.choose(90000L, 210000L)
+      disc <- Gen.choose(0, 10)
+      kind <- Gen.choose(0, 2)
+    } yield {
+      val ext = q * cents / 100.0
+      if (kind == 0) q.toDouble else if (kind == 1) ext else ext * (1.0 - disc / 100.0)
+    }
+    val bits = Gen.choose(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble)
+    val tie = for {
+      sign <- Gen.oneOf("", "-")
+      ip <- Gen.choose(0, 999999)
+      frac <- Gen.listOfN(6, Gen.numChar)
+    } yield s"$sign$ip.${frac.mkString}5".toDouble
+    val special = Gen.oneOf(0.0, -0.0, 4.9e-324, -4.9e-324, 2.2250738585072014e-308, 1e-7, 5e-7,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 9007199254.740991,
+      9007199254.740993, 999999999999.9999, 1e12, -1e12, 1.5e15, -3.7e200, Double.MaxValue)
+    Gen.frequency(
+      1 -> Gen.const(null),
+      5 -> Gen.frequency(4 -> lineitem, 2 -> bits, 3 -> tie, 1 -> special).map(Double.box))
+  }
+
+  private def unscaledCast(c: org.apache.spark.sql.Column, ansi: Boolean) = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(graft.functions.UnscaledDecimalCast(
+      ColumnBridge.expression(c), 18, 6, nullOnOverflow = !ansi))
+  }
+
+  test("property: the exact decimal(18,6) cast equals Spark's cast bit for bit, ANSI on and off") {
+    forAll(Gen.listOfN(1500, castCase), samples = 6) { xs =>
+      val df = groupedDoubles(xs.map((0, _)), 3)
+      def pairs(ansi: Boolean, d: org.apache.spark.sql.DataFrame) = withAnsi(ansi) {
+        d.select(col("x"), unscaledCast(col("x"), ansi).as("fast"),
+          col("x").cast("decimal(18,6)").as("spark")).collect().map { r =>
+          val fast = if (r.isNullAt(1)) None else Some(r.getLong(1))
+          val spark = Option(r.getDecimal(2)).map(_.unscaledValue.longValueExact)
+          (r.get(0), fast, spark)
+        }
+      }
+      val off = pairs(ansi = false, df)
+      off.foreach { case (x, fast, spark) => assert(fast == spark, s"x=$x, ANSI off") }
+      // the interpreted path agrees too
+      off.foreach { case (x, _, spark) => if (x != null) {
+        val u = graft.functions.ExactDecimal.unscaledLong(x.asInstanceOf[Double], 18, 6, true)
+        assert((if (u == graft.functions.ExactDecimal.Undecided) None else Some(u)) == spark, s"x=$x")
+      } }
+      // finite values that cast to null without ANSI overflow decimal(18,6)
+      val overflow = off.collect { case (x: Double, _, None) if !x.isNaN && !x.isInfinite => x }
+      val fits = col("x").isNull || isnan(col("x")) || abs(col("x")) < 1e11 ||
+        abs(col("x")) === Double.PositiveInfinity
+      pairs(ansi = true, df.filter(fits)).foreach { case (x, fast, spark) =>
+        assert(fast == spark, s"x=$x, ANSI on")
+      }
+      withAnsi(true) {
+        overflow.take(3).foreach { x =>
+          val one = groupedDoubles(Seq((0, Double.box(x))), 1)
+          val expect = errorCondition(one.select(col("x").cast("decimal(18,6)")).collect())
+          assert(expect.startsWith("NUMERIC_VALUE_OUT_OF_RANGE"), expect)
+          assert(errorCondition(one.select(unscaledCast(col("x"), ansi = true)).collect()) == expect)
+        }
+      }
+    }
+  }
+
+  test("property: DecimalSumExact equals sum(cast(x as decimal(18,6))) over 1 and 7 partitions") {
+    import graft.functions.DecimalSumExact
+    val gen = for {
+      n <- Gen.choose(0, 80)
+      rows <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 3), castCase))
+      big <- Gen.choose(9.0e11, 9.99999999e11)
+    } yield {
+      // group 4 is all null; groups 5 and 6 sum 30 summands near 1e18,
+      // past the 64-bit range, one up and one down
+      val planted = Seq.fill(3)((4, null: java.lang.Double)) ++
+        Seq.fill(30)((5, Double.box(big))) ++ Seq.fill(30)((6, Double.box(-big - 0.5)))
+      rows ++ planted
+    }
+    def sums(df: org.apache.spark.sql.DataFrame, exact: Boolean) = {
+      val s = if (exact) DecimalSumExact.sum(col("x")) else sum(col("x").cast("decimal(18,6)"))
+      val k = if (exact) DecimalSumExact.sum(col("g")) else sum(col("g").cast("decimal(18,6)"))
+      val out = df.groupBy(col("g")).agg(s.as("s"), k.as("k"))
+      (out.schema.map(_.dataType), out.collect().map(r => r.getInt(0) -> (r.get(1), r.get(2))).toMap)
+    }
+    def assertSame(rows: Seq[(Int, java.lang.Double)]): Unit = Seq(1, 7).foreach { parts =>
+      val df = groupedDoubles(rows, parts)
+      assert(sums(df, exact = true) == sums(df, exact = false), s"parts=$parts rows=$rows")
+    }
+    forAll(gen, samples = 8) { rows =>
+      withAnsi(false)(assertSame(rows))
+      withAnsi(true)(assertSame(rows.filter { case (_, x) =>
+        x == null || x.isNaN || x.isInfinite || math.abs(x) < 1e11 }))
+    }
+    // no rows: a global sum is null, a grouped one has no groups
+    val empty = groupedDoubles(Nil, 2)
+    Seq(false, true).foreach { ansi => withAnsi(ansi) {
+      assert(empty.agg(DecimalSumExact.sum(col("x"))).collect().toSeq ==
+        empty.agg(sum(col("x").cast("decimal(18,6)"))).collect().toSeq)
+      assert(empty.groupBy(col("g")).agg(DecimalSumExact.sum(col("x"))).count() == 0)
+    } }
+    // an out-of-range summand under ANSI: the cast's error from both
+    withAnsi(true) {
+      val df = groupedDoubles(Seq((0, 1.0), (0, 2e12)), 2)
+      val expect = errorCondition(df.agg(sum(col("x").cast("decimal(18,6)"))).collect())
+      assert(errorCondition(df.agg(DecimalSumExact.sum(col("x"))).collect()) == expect)
+    }
+    // a total past 28 digits (> 10^10 maximal summands): null, or an error under ANSI
+    val limit = java.math.BigInteger.TEN.pow(28)
+    def words(v: java.math.BigInteger) = (v.shiftRight(64).longValue, v.longValue)
+    val (h, l) = words(limit.subtract(java.math.BigInteger.ONE))
+    assert(graft.functions.ExactDecimal.toDecimal(h, l, 28, 6, nullOnOverflow = true)
+      .toJavaBigDecimal.unscaledValue == limit.subtract(java.math.BigInteger.ONE))
+    val (oh, ol) = words(limit.negate)
+    assert(graft.functions.ExactDecimal.toDecimal(oh, ol, 28, 6, nullOnOverflow = true) == null)
+    intercept[ArithmeticException](
+      graft.functions.ExactDecimal.toDecimal(oh, ol, 28, 6, nullOnOverflow = false))
+  }
+
   test("property: stateful sessionizer equals brute-force gap split") {
     val s = spark
     import s.implicits._

@@ -1,6 +1,7 @@
-package graft
+package probe
 
 import org.apache.spark.sql.SparkSession
+import graft.operators
 
 /** Banded-simhash scale decomposition probe (round 17 — VERDICT r16
   * #3: SCALING.md's r16 banding section attributes its candidate-mass
@@ -30,7 +31,9 @@ import org.apache.spark.sql.SparkSession
   *     raising agree; see Calibration.recallAtCaps for the general
   *     pricing API).
   *
-  * Usage: `tools/run_main.sh graft.SimhashProbe <sfDir> [--time] [--cap N]`
+  * Usage, after `sbt Test/compile` (it lives in test scope):
+  * `SPARK_GRAFT_CP=target/scala-2.13/classes:target/scala-2.13/test-classes
+  *  tools/run_main.sh probe.SimhashProbe <sfDir> [--time] [--cap N]`
   */
 object SimhashProbe {
 
