@@ -14,35 +14,43 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   * sorted by (score desc, id asc), never more than k entries. The
   * common case — a row that does not make the current top k — is one
   * O(1) compare against the worst kept entry; an accepted row is one
-  * O(k) in-place shift (k is small: 3-5 in every caller). No
-  * per-row allocation. */
+  * O(k) in-place shift (k is small: 3-100 in every caller). No
+  * per-row allocation. `nulls(i)` marks a null score; its
+  * `scores(i)` is unused. */
 final class TopKBuffer(val k: Int) {
   val ids = new Array[Long](k)
   val scores = new Array[Double](k)
+  val nulls = new Array[Boolean](k)
   var n = 0
 
-  /** True when (id1, s1) ranks strictly before (id2, s2).
-    * Double.compare, not > / ==: primitive NaN comparisons are always
-    * false, which would make NaN scores order-dependent. compare
-    * treats NaN as the LARGEST value, matching Spark's own descending
-    * sort order — the same contract as the row_number window
-    * oracle. */
-  @inline private def before(id1: Long, s1: Double, id2: Long, s2: Double): Boolean = {
-    val c = java.lang.Double.compare(s1, s2)
-    c > 0 || (c == 0 && id1 < id2)
-  }
+  /** True when (id1, s1) ranks strictly before (id2, s2), in the order
+    * of Spark's `ORDER BY score DESC NULLS LAST, id`: a null score
+    * ranks after every non-null one; `-0.0` and `0.0` are equal (the
+    * `s1 == s2` test), so they tie and break by id; otherwise
+    * `Double.compare`, which ranks NaN largest. That is
+    * `SQLOrderingUtil.compareDoubles`, the comparison the window
+    * oracle sorts by. */
+  @inline private def before(id1: Long, null1: Boolean, s1: Double,
+      id2: Long, null2: Boolean, s2: Double): Boolean =
+    if (null1 != null2) null2
+    else {
+      val c = if (null1 || s1 == s2) 0 else java.lang.Double.compare(s1, s2)
+      c > 0 || (c == 0 && id1 < id2)
+    }
 
-  def insert(id: Long, s: Double): Unit = {
+  /** Offer (id, s); `isNull` marks a null score. */
+  def insert(id: Long, s: Double, isNull: Boolean = false): Unit = {
     if (n == k) {
-      if (!before(id, s, ids(n - 1), scores(n - 1))) return
+      if (!before(id, isNull, s, ids(n - 1), nulls(n - 1), scores(n - 1))) return
       n -= 1 // evict the current worst
     }
     var i = n
-    while (i > 0 && before(id, s, ids(i - 1), scores(i - 1))) {
-      ids(i) = ids(i - 1); scores(i) = scores(i - 1); i -= 1
+    while (i > 0 && before(id, isNull, s, ids(i - 1), nulls(i - 1), scores(i - 1))) {
+      ids(i) = ids(i - 1); scores(i) = scores(i - 1); nulls(i) = nulls(i - 1); i -= 1
     }
     ids(i) = id
     scores(i) = s
+    nulls(i) = isNull
     n += 1
   }
 
@@ -50,7 +58,7 @@ final class TopKBuffer(val k: Int) {
     * per partition pair, never per row. */
   def mergeIn(other: TopKBuffer): Unit = {
     var i = 0
-    while (i < other.n) { insert(other.ids(i), other.scores(i)); i += 1 }
+    while (i < other.n) { insert(other.ids(i), other.scores(i), other.nulls(i)); i += 1 }
   }
 }
 
@@ -67,10 +75,11 @@ final class TopKBuffer(val k: Int) {
   * query's cost (21.5 s at sf1, guide §1/§4: no interpreted per-row
   * machinery in the hot path).
   *
-  * Ordering: score desc, then id asc; NaN sorts largest (see
-  * TopKBuffer.before). Null id or score: the row is ignored, the
-  * standard Spark aggregate null contract (the typed route crashed
-  * its encoder on nulls, so no declared query depends on them). */
+  * Ordering: that of `row_number() OVER (PARTITION BY g ORDER BY
+  * score DESC, id)` (see TopKBuffer.before): NaN ranks largest,
+  * `-0.0` ties `0.0`, and a null score is kept and ranks after every
+  * non-null one, with ties broken by id. A row with a null id is
+  * ignored; ids are meant to be non-null keys. */
 case class BoundedTopK(
     k: Int,
     id: Expression,
@@ -96,7 +105,7 @@ case class BoundedTopK(
 
   override def dataType: DataType = StructType(Seq(
     StructField("ids", ArrayType(LongType, containsNull = false)),
-    StructField("scores", ArrayType(DoubleType, containsNull = false))))
+    StructField("scores", ArrayType(DoubleType, containsNull = true))))
   override def nullable: Boolean = false
   override def prettyName: String = "bounded_topk"
 
@@ -106,7 +115,8 @@ case class BoundedTopK(
     val i = id.eval(input)
     if (i != null) {
       val s = score.eval(input)
-      if (s != null) buf.insert(i.asInstanceOf[Long], s.asInstanceOf[Double])
+      if (s == null) buf.insert(i.asInstanceOf[Long], 0.0, isNull = true)
+      else buf.insert(i.asInstanceOf[Long], s.asInstanceOf[Double])
     }
     buf
   }
@@ -117,15 +127,18 @@ case class BoundedTopK(
 
   override def eval(buf: TopKBuffer): Any = new GenericInternalRow(Array[Any](
     new GenericArrayData(java.util.Arrays.copyOf(buf.ids, buf.n)),
-    new GenericArrayData(java.util.Arrays.copyOf(buf.scores, buf.n))))
+    new GenericArrayData(Array.tabulate[Any](buf.n)(i =>
+      if (buf.nulls(i)) null else buf.scores(i)))))
 
   override def serialize(buf: TopKBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.n * 16)
+    val bb = java.nio.ByteBuffer.allocate(4 + buf.n * 17)
     bb.putInt(buf.n)
     var i = 0
     while (i < buf.n) { bb.putLong(buf.ids(i)); i += 1 }
     i = 0
     while (i < buf.n) { bb.putDouble(buf.scores(i)); i += 1 }
+    i = 0
+    while (i < buf.n) { bb.put(if (buf.nulls(i)) 1.toByte else 0.toByte); i += 1 }
     bb.array()
   }
 
@@ -137,6 +150,8 @@ case class BoundedTopK(
     while (i < n) { buf.ids(i) = bb.getLong(); i += 1 }
     i = 0
     while (i < n) { buf.scores(i) = bb.getDouble(); i += 1 }
+    i = 0
+    while (i < n) { buf.nulls(i) = bb.get() != 0; i += 1 }
     buf.n = n
     buf
   }
@@ -154,7 +169,7 @@ object BoundedTopK {
   /** Column-level API:
     * `df.groupBy("g").agg(BoundedTopK.topK(5, col("id"), col("score")))`
     * → struct<ids: array<long>, scores: array<double>>, ranked
-    * (score desc, id asc), ≤ k entries. */
+    * (score desc nulls last, id asc), ≤ k entries. */
   def topK(k: Int, id: Column, score: Column): Column =
     ColumnBridge.column(
       BoundedTopK(k, ColumnBridge.expression(id), ColumnBridge.expression(score))

@@ -616,25 +616,15 @@ object Advanced {
       .orderBy(col("c_mktsegment"))
 
   // ---------------------------------------------------------------- group topk
-  /** Top-3 customers per segment via the bounded
-    * native `BoundedTopK` aggregate — map-side combine ships ≤k rows per partition
-    * per group instead of window-sorting whole groups. The window
-    * formulation is the oracle. */
-  def qGroupTopk(spark: SparkSession, dir: String): DataFrame = {
-    Tables.customer(spark, dir)
-      .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"))
-      .groupBy(col("c_mktsegment"))
-      .agg(graft.functions.BoundedTopK
-        .topK(3, col("c_custkey"), col("c_acctbal")).as("topk"))
-      .select(col("c_mktsegment"),
-        posexplode(arrays_zip(col("topk.ids"), col("topk.scores"))).as(Seq("pos", "e")))
-      .select(
-        col("c_mktsegment"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("e.ids").as("c_custkey"),
-        col("e.scores").as("c_acctbal"))
+  /** Top-3 customers per segment through the bounded
+    * [[Similarity.topKPer]] stage — map-side combine ships ≤k rows per
+    * partition per group instead of window-sorting whole groups. Its
+    * DuckDB oracle is the row_number window. */
+  def qGroupTopk(spark: SparkSession, dir: String): DataFrame =
+    Similarity.topKPer(Tables.customer(spark, dir),
+        "c_mktsegment", "c_acctbal", "c_custkey", 3)
+      .select(col("c_mktsegment"), col("rank"), col("c_custkey"), col("c_acctbal"))
       .orderBy(col("c_mktsegment"), col("rank"))
-  }
 
   private val qGroupTopkSql =
     """SELECT c_mktsegment, cast(rn as int) AS rank, c_custkey, c_acctbal

@@ -5,16 +5,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.CrossEngine.{rnd, rndSql}
-import graft.functions.VectorFunctions
+import graft.functions.{BoundedTopK, VectorFunctions}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Similarity search over the embedding column (SURVEY.md §2 F).
   *
   * `ann_bruteforce` is the exact baseline: the (tiny) query set is
   * broadcast against the corpus — one scan, per-partition top-k via
-  * the rank window. `ann_ivf` is the scale path: vectors are
-  * assigned to deterministic centroids once (linear), and each query
-  * only scans its 2 closest clusters (~nprobe/nlist of the corpus).
+  * the bounded [[topKPer]] stage. `ann_ivf` is the scale path:
+  * vectors are assigned to deterministic centroids once (linear), and
+  * each query only scans its 2 closest clusters (~nprobe/nlist of the
+  * corpus).
   * At 100 TB the assignment is a write-once partitioning (cluster id
   * = partition key), making the probe a partition-pruned scan.
   *
@@ -258,20 +259,80 @@ object Similarity {
     s"sqrt(list_reduce(list_transform($a, x -> x * x), (x, y) -> x + y))"
   private def dotSql(a: String, b: String) = sqlDot(a, b)
 
+  // ---------------------------------------------------------------- per-key top-k
+  /** THE top-k stage of the ANN family: for each value of `key`, the
+    * `k` rows with the highest `score`, ties broken by the lower `id`.
+    * Returns (key, id, score, rank: int), rank from 1, in no order.
+    *
+    * It returns exactly the rows of `row_number() OVER (PARTITION BY
+    * key ORDER BY score DESC, id) <= k`, the form the tests check it
+    * against and the oracles spell out ([[rankedSql]]):
+    *  - NaN ranks largest;
+    *  - `-0.0` and `0.0` are equal, so ties between them break by id
+    *    (Spark's `SQLOrderingUtil.compareDoubles`);
+    *  - a null score ranks after every non-null one, ties broken by id
+    *    (the window's `DESC NULLS LAST`; the ADC shortlists'
+    *    `try_divide` yields one for a zero-norm reconstruction);
+    *  - `score` is a double column; `id` is a non-null integral key,
+    *    cast to long for the aggregate and back to its input type.
+    *
+    * Built on the native [[BoundedTopK]] aggregate plus `posexplode`:
+    * at most k rows per partition per key cross the wire, and no
+    * group is ever sorted whole. A caller that needs columns besides
+    * (key, id, score) joins them back on the key or the id. */
+  def topKPer(df: DataFrame, key: String, score: String, id: String,
+      k: Int): DataFrame =
+    df.groupBy(col(key))
+      .agg(BoundedTopK.topK(k, col(id).cast("long"), col(score)).as("_topk"))
+      .select(col(key), posexplode(arrays_zip(col("_topk.ids"), col("_topk.scores")))
+        .as(Seq("_pos", "_hit")))
+      .select(col(key), col("_hit.ids").cast(df.schema(id).dataType).as(id),
+        col("_hit.scores").as(score), (col("_pos") + 1).cast("int").as("rank"))
+
+  /** Per-query top-`k` of scored (q_id, vec_id, `score`) candidates as
+    * the family's output rows: (q_id, neighbor_id, rank, `name` = the
+    * score rounded once, after ranking). The Scala twin of
+    * [[rankedSql]]. */
+  private def topNeighbors(scored: DataFrame, k: Int, name: String,
+      score: String = "cos"): DataFrame =
+    topKPer(scored, "q_id", score, "vec_id", k)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
+        rnd(col(score), 6).as(name))
+
+  /** The oracles' per-query rank: by `score` desc, then vec_id. */
+  private def rankSql(score: String) =
+    s"row_number() OVER (PARTITION BY q_id ORDER BY $score DESC, vec_id)"
+
+  /** `rank` and the cosine rounded once as `name`: the usual output
+    * list of [[rankedSql]]. */
+  private def rankOut(name: String) = s"rank,\n  ${rndSql("cos", 6)} AS $name"
+
+  /** The oracles' per-query top-k tail, the SQL twin of
+    * [[topNeighbors]]: the `ranked` CTE over `from` (q_id, vec_id,
+    * `carry` columns, `score`), then `SELECT q_id, vec_id AS
+    * neighbor_id, <out>` for rank <= [[TopK]], ordered by (q_id,
+    * rank). Ends the statement: it goes last in the WITH list. */
+  private def rankedSql(from: String, out: String = rankOut("cos_sim"),
+      score: String = "cos", carry: String = ""): String =
+    s"""ranked AS (
+       |  SELECT q_id, vec_id, $carry$score,
+       |    cast(${rankSql(score)} as int) AS rank
+       |  FROM $from)
+       |SELECT q_id, vec_id AS neighbor_id, $out
+       |FROM ranked WHERE rank <= $TopK
+       |ORDER BY q_id, rank""".stripMargin
+
   // ---------------------------------------------------------------- brute force
-  /** Exact cosine top-k for each query vector (query set broadcast). */
+  /** Exact cosine top-k for each query vector: [[cosineTopKExact]] on
+    * the standard query set. Registered as both `ann_bruteforce` and
+    * `ann_bruteforce_agg`, which share one oracle. */
   def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    cosineTopKExact(
+      e.select(col("vec_id"), col("v")),
+      e.filter(col("vec_id") < NQueries)
+        .select(col("vec_id").as("q_id"), col("v").as("qv")),
+      TopK)
   }
 
   private val annBruteforceSql =
@@ -281,14 +342,7 @@ object Similarity {
        |  SELECT q.q_id, e.vec_id,
        |    ${dotSql("q.qv", "e.v")} / (q.qn * e.nrm) AS cos
        |  FROM e JOIN q ON e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   // ---------------------------------------------------------------- MIPS
   /** Exact max-inner-product top-k per query — the objective
@@ -297,7 +351,7 @@ object Similarity {
     * signal those models learn (a popular item's larger norm IS its
     * prior), so a cosine engine silently re-ranks their output.
     * Same plan as [[annBruteforce]] — broadcast query set, one scan,
-    * per-query window — with the score = the raw dot product.
+    * per-query [[topKPer]] — with the score = the raw dot product.
     * Determinism: the dot is the same pinned left-to-right fold on
     * both engines, ranking uses the unrounded value, output rounds
     * once (the annBruteforce discipline, minus the division). */
@@ -305,14 +359,9 @@ object Similarity {
     val e = vecs(spark, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("ip").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("ip", dot(col("qv"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("ip"), 6).as("ip"))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, TopK, "ip", score = "ip").orderBy(col("q_id"), col("rank"))
   }
 
   private val annMipsSql =
@@ -321,13 +370,7 @@ object Similarity {
        |scored AS (
        |  SELECT q.q_id, e.vec_id, ${dotSql("q.qv", "e.v")} AS ip
        |  FROM e JOIN q ON e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, ip,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY ip DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank, ${rndSql("ip", 6)} AS ip
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", s"rank, ${rndSql("ip", 6)} AS ip", score = "ip")}""".stripMargin
 
   /** Norm-augmentation MIPS→cosine reduction (Neyshabur & Srebro,
     * ICML 2015 "On Symmetric and Asymmetric LSHs for Inner Product
@@ -417,40 +460,20 @@ object Similarity {
 
   // ---------------------------------------------------------------- bounded topk kernel
   /** PUBLIC scalable exact top-k kernel: cosine top-k of `vectors`
-    * for each row of broadcast `queries`, ranked through the BOUNDED
-    * native `BoundedTopK` aggregate — ≤ k rows per partition per query cross the
-    * wire — instead of a per-query window that sorts the whole
-    * corpus. THIS is the brute-force form that holds at 100 TB with
-    * a broadcast-sized query set; `ann_bruteforce`'s window form
-    * stays the readable oracle twin (same oracle SQL hash-checks
-    * both). `vectors`: (vec_id, v array<double>); `queries`:
-    * (q_id, qv). Self-matches (vec_id == q_id) are excluded. */
+    * for each row of broadcast `queries`, ranked through the bounded
+    * [[topKPer]] stage — ≤ k rows per partition per query cross the
+    * wire, never a sort of the whole corpus. THIS is the brute-force
+    * form that holds at 100 TB with a broadcast-sized query set; its
+    * oracle twin is `ann_bruteforce`'s DuckDB SQL. `vectors`:
+    * (vec_id, v array<double>); `queries`: (q_id, qv). Self-matches
+    * (vec_id == q_id) are excluded. */
   def cosineTopKExact(vectors: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.withColumn("qn", VectorFunctions.norm(col("qv"))))
-    vectors
+    val scored = vectors
       .withColumn("nrm", VectorFunctions.norm(col("v")))
       .join(q, col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("cos"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.BoundedTopK.topK(k, col("vec_id"), col("cos")).as("topk"))
-      .select(col("q_id"),
-        posexplode(arrays_zip(col("topk.ids"), col("topk.scores"))).as(Seq("pos", "e")))
-      .select(col("q_id"), col("e.ids").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        rnd(col("e.scores"), 6).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
-
-  /** Query form of the kernel on the standard query set — same oracle
-    * as `ann_bruteforce` proves window form == bounded-agg form. */
-  def annBruteforceAgg(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    cosineTopKExact(
-      e.select(col("vec_id"), col("v")),
-      e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("q_id"), col("v").as("qv")),
-      TopK)
+    topNeighbors(scored, k, "cos_sim").orderBy(col("q_id"), col("rank"))
   }
 
   // ---------------------------------------------------------------- IVF
@@ -459,7 +482,7 @@ object Similarity {
     * as driver-side triples (seeded or kmeans-trained — a few KB at
     * any corpus scale). The corpus assign is the zero-shuffle
     * [[nearestCentroid]] projection; each query probes its `nprobe`
-    * closest centroids (a window over the broadcast-sized query × k
+    * closest centroids (a top-k over the broadcast-sized query × k
     * frame, never the corpus) and candidates are ranked exactly
     * inside probed clusters only — the probe scans ~nprobe/nlist of
     * the corpus. Self-matches (vec_id == q_id) are excluded. At
@@ -475,22 +498,51 @@ object Similarity {
     rankProbed(assigned, probeClusters(queries, cents, nprobe), k)
   }
 
-  /** Each query's `nprobe` closest centroids — a window over the
-    * broadcast-sized query × k frame, never the corpus. SHARED by
-    * [[ivfTopK]] and [[probeIvfIndex]] so their documented result
-    * equivalence cannot drift. */
+  /** Each query's `nprobe` closest centroids (q_id, qv, qn,
+    * probe_cluster) — a [[topKPer]] over the broadcast-sized query × k
+    * frame, never the corpus; qv/qn join back on q_id. SHARED by
+    * [[ivfTopK]], [[probeIvfIndex]] and the IVF-PQ paths so their
+    * documented result equivalences cannot drift; [[probesSql]] is its
+    * oracle twin. */
   private def probeClusters(queries: DataFrame,
       cents: Seq[(Int, Seq[Double], Double)], nprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val centDf = cents.toDF("c_id", "cv", "cn")
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("c_id"))
-    queries.join(broadcast(centDf), lit(true))
+    val q = queries.select(col("q_id"), col("qv"), col("qn"))
+    val scored = q.join(broadcast(cents.toDF("c_id", "cv", "cn")), lit(true))
       .withColumn("qcos", dot(col("cv"), col("qv")) / (col("cn") * col("qn")))
-      .withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= nprobe)
+    topKPer(scored, "q_id", "qcos", "c_id", nprobe)
+      // always true, but Spark prunes a cluster-partitioned index scan
+      // dynamically only when the probe side carries such a predicate
+      .filter(col("rank") <= nprobe)
+      .join(broadcast(q), "q_id")
       .select(col("q_id"), col("qv"), col("qn"), col("c_id").as("probe_cluster"))
   }
+
+  /** The oracles' `probes` CTE over `q` and `cent`, the SQL twin of
+    * [[probeClusters]]. */
+  private def probesSql: String =
+    s"""probes AS (
+       |  SELECT q_id, qv, qn, probe_cluster FROM (
+       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
+       |      row_number() OVER (PARTITION BY q.q_id
+       |        ORDER BY ${sqlDot("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
+       |        AS prank
+       |    FROM q CROSS JOIN cent)
+       |  WHERE prank <= $NProbe)""".stripMargin
+
+  /** The oracles' `assigned` CTE: each (vec_id, v, nrm) row of `src`
+    * with the id of its nearest `cent` row (cosine desc, then c_id) as
+    * `cluster`, the SQL twin of [[nearestCentroid]]. */
+  private def assignedSql(src: String): String =
+    s"""assigned AS (
+       |  SELECT vec_id, v, nrm, cluster FROM (
+       |    SELECT $src.vec_id, $src.v, $src.nrm, cent.c_id AS cluster,
+       |      row_number() OVER (PARTITION BY $src.vec_id
+       |        ORDER BY ${sqlDot("cent.cv", s"$src.v")} / (cent.cn * $src.nrm) DESC, cent.c_id)
+       |        AS crank
+       |    FROM $src CROSS JOIN cent)
+       |  WHERE crank = 1)""".stripMargin
 
   /** Exact rank of (vec_id, v, nrm, cluster) candidates inside probed
     * clusters only — the shared tail of [[ivfTopK]]/[[probeIvfIndex]].
@@ -498,15 +550,10 @@ object Similarity {
     * off when the candidate side is a cluster-partitioned scan. */
   private def rankProbed(candidates: DataFrame, probes: DataFrame,
       k: Int): DataFrame = {
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    candidates.join(broadcast(probes),
+    val scored = candidates.join(broadcast(probes),
         col("cluster") === col("probe_cluster") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, k, "cos_sim").orderBy(col("q_id"), col("rank"))
   }
 
   /** Materialize an IVF index as a CLUSTER-PARTITIONED parquet
@@ -585,7 +632,7 @@ object Similarity {
   }
 
   /** Probe a materialized IVF index: each query's `nprobe` closest
-    * clusters come from the same broadcast-sized window as
+    * clusters come from the same broadcast-sized top-k as
     * [[ivfTopK]], and the index scan is DYNAMICALLY partition-pruned
     * by the broadcast equi-join on the partition column — Spark reads
     * only the probed clusters' directories (~nprobe/nlist of the
@@ -627,36 +674,15 @@ object Similarity {
   private val annIvfSql =
     s"""WITH e AS ($vecsSql),
        |cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM e WHERE vec_id < $NCentroids),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cluster FROM (
-       |    SELECT e.vec_id, e.v, e.nrm, cent.c_id AS cluster,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${dotSql("cent.cv", "e.v")} / (cent.cn * e.nrm) DESC, cent.c_id)
-       |        AS crank
-       |    FROM e CROSS JOIN cent)
-       |  WHERE crank = 1),
+       |${assignedSql("e")},
        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM e WHERE vec_id < $NQueries),
-       |probes AS (
-       |  SELECT q_id, qv, qn, probe_cluster FROM (
-       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${dotSql("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
-       |        AS prank
-       |    FROM q CROSS JOIN cent)
-       |  WHERE prank <= $NProbe),
+       |$probesSql,
        |scored AS (
        |  SELECT p.q_id, a.vec_id,
        |    ${dotSql("p.qv", "a.v")} / (p.qn * a.nrm) AS cos
        |  FROM assigned a JOIN probes p
        |    ON a.cluster = p.probe_cluster AND a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
 
   // ---------------------------------------------------------------- LSH
   /** Random-hyperplane LSH near-dup candidates: an 8-bit signature
@@ -1008,36 +1034,15 @@ object Similarity {
     val cN = "c2" // 2 training rounds
     s"""WITH ${kmeansCtesFor(2)},
        |cent AS (SELECT c_id, cv, ${sqlNrm("cv")} AS cn FROM $cN),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cluster FROM (
-       |    SELECT en.vec_id, en.v, en.nrm, cent.c_id AS cluster,
-       |      row_number() OVER (PARTITION BY en.vec_id
-       |        ORDER BY ${sqlDot("cent.cv", "en.v")} / (cent.cn * en.nrm) DESC, cent.c_id)
-       |        AS crank
-       |    FROM en CROSS JOIN cent)
-       |  WHERE crank = 1),
+       |${assignedSql("en")},
        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM en WHERE vec_id < $NQueries),
-       |probes AS (
-       |  SELECT q_id, qv, qn, probe_cluster FROM (
-       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${sqlDot("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
-       |        AS prank
-       |    FROM q CROSS JOIN cent)
-       |  WHERE prank <= $NProbe),
+       |$probesSql,
        |scored AS (
        |  SELECT p.q_id, a.vec_id,
        |    ${sqlDot("p.qv", "a.v")} / (p.qn * a.nrm) AS cos
        |  FROM assigned a JOIN probes p
        |    ON a.cluster = p.probe_cluster AND a.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
   }
 
   // ---------------------------------------------------------------- semantic dedup
@@ -1214,7 +1219,7 @@ object Similarity {
     * rounds, corpus-scaled k = ⌈n / [[DedupClusterRows]]⌉ — blocks
     * stay ~2.5k rows), assign with the zero-shuffle two-level probe,
     * then ONE hash equi-join on cluster id scores each vector
-    * against its cluster-mates and the BOUNDED native `BoundedTopK`
+    * against its cluster-mates and the bounded [[topKPer]] stage
     * ranks per query (≤ k rows per partition per query cross the
     * wire — never a corpus-sized window sort). Total pair work is
     * ∝ n · [[DedupClusterRows]] (linear), shuffle = the one cluster
@@ -1239,7 +1244,7 @@ object Similarity {
   /** PUBLIC parameterized kNN-join kernel over a (vec_id, v, nrm)
     * frame: clusters = max(kFloor, ⌈n/clusterRows⌉) via the shared
     * two-level trainer, neighbors ranked in-cluster through the
-    * bounded aggregator. `annKnnJoin` is its registered query form;
+    * bounded [[topKPer]] stage. `annKnnJoin` is its registered query form;
     * SimilarityRecallSpec measures its recall against
     * `cosineTopKExact` truth on a planted-cluster corpus. */
   def knnJoin(e0: DataFrame, topK: Int, kFloor: Int,
@@ -1254,17 +1259,10 @@ object Similarity {
       col("v").as("qv"), col("nrm").as("qn"))
     val b = m.select(col("vec_id"), col("cluster").as("cluster_b"),
       col("v"), col("nrm"))
-    a.join(b, col("cluster") === col("cluster_b") && col("vec_id") =!= col("q_id"))
+    val scored = a.join(b,
+        col("cluster") === col("cluster_b") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("cos"))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.BoundedTopK.topK(topK, col("vec_id"), col("cos")).as("topk"))
-      .select(col("q_id"),
-        posexplode(arrays_zip(col("topk.ids"), col("topk.scores"))).as(Seq("pos", "e")))
-      .select(col("q_id"), col("e.ids").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        rnd(col("e.scores"), 6).as("cos_sim"))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, topK, "cos_sim").orderBy(col("q_id"), col("rank"))
   }
 
   private val annKnnJoinSql = {
@@ -1277,14 +1275,7 @@ object Similarity {
        |    ${sqlDot("a.v", "b.v")} / (a.nrm * b.nrm) AS cos
        |  FROM assigned a JOIN assigned b
        |    ON a.cluster = b.cluster AND a.vec_id <> b.vec_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored")}""".stripMargin
   }
 
   // ---------------------------------------------------------------- product quantization
@@ -1392,29 +1383,33 @@ object Similarity {
     val enc = vecs
       .select(col("vec_id"), pqReconstruct(cb, col("v")).as("rv"))
       .withColumn("rn", VectorFunctions.norm(col("rv")))
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val shortlist = enc.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+    val adc = enc.join(broadcast(qs), col("vec_id") =!= col("q_id"))
       .withColumn("adc", try_divide(dot(col("qv"), col("rv")), col("qn") * col("rn")))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wExact = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    // broadcast the bounded shortlist, never shuffle the vector store
-    // (same shape note as ivfPqTopKRerank)
-    broadcast(shortlist)
+    exactRerank(topKPer(adc, "q_id", "adc", "vec_id", k * rerank), vecs, qs, k)
+  }
+
+  /** The exact re-rank tail of [[pqTopKRerank]] and [[ivfPqTopKRerank]]:
+    * the (q_id, vec_id) `shortlist` fetches its raw vectors from `vecs`
+    * (vec_id, v, nrm) and its query vectors from `qs` (q_id, qv, qn),
+    * and each query keeps its top `k` by exact cosine. The shortlist
+    * (≤ |q|·k·rerank rows) is BROADCAST against the vector store's
+    * scan — the raw-vector fetch costs one corpus scan and zero
+    * exchanges of the corpus side, the point-lookup shape the
+    * production read path has (shuffling the store to co-locate with
+    * a few thousand shortlist rows would invert the size
+    * relationship). */
+  private def exactRerank(shortlist: DataFrame, vecs: DataFrame,
+      qs: DataFrame, k: Int): DataFrame = {
+    val fetched = broadcast(shortlist.select(col("q_id"), col("vec_id"))
+        .join(broadcast(qs.select(col("q_id"), col("qv"), col("qn"))), "q_id"))
       .join(vecs.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_sim"))
+    topNeighbors(fetched, k, "cos_sim")
   }
 
   /** PQ top-k: brute-force ADC scan over the RECONSTRUCTED corpus —
     * same plan as `ann_bruteforce` (broadcast query set, per-query
-    * window over corpus rows), but the corpus side is codes + a
+    * [[topKPer]] over corpus rows), but the corpus side is codes + a
     * codebook literal, never raw vectors. Encode is a per-row
     * projection (zero exchanges on any layout); the only shuffle is
     * the per-query top-k. At 100 TB this is the scan you actually
@@ -1428,14 +1423,9 @@ object Similarity {
       .withColumn("rn", VectorFunctions.norm(col("rv")))
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    enc.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = enc.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("rv")) / (col("qn") * col("rn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_pq"))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, TopK, "cos_pq").orderBy(col("q_id"), col("rank"))
   }
 
   private val annPqSql = {
@@ -1464,13 +1454,7 @@ object Similarity {
        |  SELECT q.q_id, r.vec_id,
        |    ${sqlDot("q.qv", "r.rv")} / (q.qn * r.rn) AS cos
        |  FROM r CROSS JOIN q WHERE r.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank, ${rndSql("cos", 6)} AS cos_pq
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", s"rank, ${rndSql("cos", 6)} AS cos_pq")}""".stripMargin
   }
 
   // ---------------------------------------------------------------- IVF-PQ
@@ -1524,16 +1508,10 @@ object Similarity {
     * query scores candidates only where cluster == probe_cluster. */
   private def adcRankProbed(enc: DataFrame, probes: DataFrame,
       k: Int, cosName: String = "cos_ivfpq"): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    enc.join(probes,
+    val scored = enc.join(probes,
         col("cluster") === col("probe_cluster") && col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("rhat")) / (col("qn") * col("rn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as(cosName))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, k, cosName).orderBy(col("q_id"), col("rank"))
   }
 
   private val annIvfPqSql = {
@@ -1542,14 +1520,7 @@ object Similarity {
       "(x, i) -> (x - cb.cv[i]) * (x - cb.cv[i])), (a, b) -> a + b)"
     s"""WITH ${kmeansCtesFor(2)},
        |cent AS (SELECT c_id, cv, ${sqlNrm("cv")} AS cn FROM c2),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cluster FROM (
-       |    SELECT en.vec_id, en.v, en.nrm, cent.c_id AS cluster,
-       |      row_number() OVER (PARTITION BY en.vec_id
-       |        ORDER BY ${sqlDot("cent.cv", "en.v")} / (cent.cn * en.nrm) DESC, cent.c_id)
-       |        AS crank
-       |    FROM en CROSS JOIN cent)
-       |  WHERE crank = 1),
+       |${assignedSql("en")},
        |r AS (
        |  SELECT a.vec_id, a.cluster, cent.cv AS ccv,
        |    list_transform(a.v, (x, i) -> x - cent.cv[i]) AS res
@@ -1575,27 +1546,13 @@ object Similarity {
        |  FROM r JOIN recon ON r.vec_id = recon.vec_id),
        |rh AS (SELECT vec_id, cluster, rhat, ${sqlNrm("rhat")} AS rn FROM rhat),
        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM en WHERE vec_id < $NQueries),
-       |probes AS (
-       |  SELECT q_id, qv, qn, probe_cluster FROM (
-       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${sqlDot("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
-       |        AS prank
-       |    FROM q CROSS JOIN cent)
-       |  WHERE prank <= $NProbe),
+       |$probesSql,
        |scored AS (
        |  SELECT p.q_id, rh.vec_id,
        |    ${sqlDot("p.qv", "rh.rhat")} / (p.qn * rh.rn) AS cos
        |  FROM rh JOIN probes p
        |    ON rh.cluster = p.probe_cluster AND rh.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_ivfpq
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", rankOut("cos_ivfpq"))}""".stripMargin
   }
 
   // ---------------------------------------------------------------- IVF-SQ
@@ -1640,14 +1597,7 @@ object Similarity {
       " * (m.mxs[i] - m.mns[i]) / 255.0 ELSE m.mns[i] END"
     s"""WITH ${kmeansCtesFor(2)},
        |cent AS (SELECT c_id, cv, ${sqlNrm("cv")} AS cn FROM c2),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cluster FROM (
-       |    SELECT en.vec_id, en.v, en.nrm, cent.c_id AS cluster,
-       |      row_number() OVER (PARTITION BY en.vec_id
-       |        ORDER BY ${sqlDot("cent.cv", "en.v")} / (cent.cn * en.nrm) DESC, cent.c_id)
-       |        AS crank
-       |    FROM en CROSS JOIN cent)
-       |  WHERE crank = 1),
+       |${assignedSql("en")},
        |r AS (
        |  SELECT a.vec_id, a.cluster, cent.cv AS ccv,
        |    list_transform(a.v, (x, i) -> x - cent.cv[i]) AS res
@@ -1661,27 +1611,13 @@ object Similarity {
        |  FROM r, m),
        |rh AS (SELECT vec_id, cluster, rhat, ${sqlNrm("rhat")} AS rn FROM rhat),
        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM en WHERE vec_id < $NQueries),
-       |probes AS (
-       |  SELECT q_id, qv, qn, probe_cluster FROM (
-       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${sqlDot("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
-       |        AS prank
-       |    FROM q CROSS JOIN cent)
-       |  WHERE prank <= $NProbe),
+       |$probesSql,
        |scored AS (
        |  SELECT p.q_id, rh.vec_id,
        |    ${sqlDot("p.qv", "rh.rhat")} / (p.qn * rh.rn) AS cos
        |  FROM rh JOIN probes p
        |    ON rh.cluster = p.probe_cluster AND rh.vec_id <> p.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_ivfsq
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", rankOut("cos_ivfsq"))}""".stripMargin
   }
 
   /** IVF-PQ search as production deploys it (Jégou et al. TPAMI 2011
@@ -1719,30 +1655,11 @@ object Similarity {
         VectorFunctions.vecAdd(col("cv"), pqReconstruct(cb, col("res"))))
       .withColumn("rn", VectorFunctions.norm(col("rhat")))
       .select(col("vec_id"), col("cluster"), col("rhat"), col("rn"))
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").desc, col("vec_id"))
-    val shortlist = enc.join(broadcast(probeClusters(qs, cents, nprobe)),
+    val adc = enc.join(broadcast(probeClusters(qs, cents, nprobe)),
         col("cluster") === col("probe_cluster") && col("vec_id") =!= col("q_id"))
       .withColumn("adc",
         try_divide(dot(col("qv"), col("rhat")), col("qn") * col("rn")))
-      .withColumn("arank", row_number().over(wAdc))
-      .filter(col("arank") <= k * rerank)
-      .select(col("q_id"), col("vec_id"), col("qv"), col("qn"))
-    val wExact = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    // the shortlist (≤ |q|·k·rerank rows) is BROADCAST against the
-    // vector store's scan — the raw-vector fetch costs one corpus
-    // scan and zero exchanges of the corpus side, the point-lookup
-    // shape the production read path has (shuffling the store to
-    // co-locate with a few thousand shortlist rows would invert the
-    // size relationship)
-    broadcast(shortlist)
-      .join(vecs.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_sim"))
+    exactRerank(topKPer(adc, "q_id", "adc", "vec_id", k * rerank), vecs, qs, k)
   }
 
   /** How many ADC-shortlist candidates per returned neighbor the
@@ -1782,14 +1699,7 @@ object Similarity {
       "(x, i) -> (x - cb.cv[i]) * (x - cb.cv[i])), (a, b) -> a + b)"
     s"""WITH ${kmeansCtesFor(2)},
        |cent AS (SELECT c_id, cv, ${sqlNrm("cv")} AS cn FROM c2),
-       |assigned AS (
-       |  SELECT vec_id, v, nrm, cluster FROM (
-       |    SELECT en.vec_id, en.v, en.nrm, cent.c_id AS cluster,
-       |      row_number() OVER (PARTITION BY en.vec_id
-       |        ORDER BY ${sqlDot("cent.cv", "en.v")} / (cent.cn * en.nrm) DESC, cent.c_id)
-       |        AS crank
-       |    FROM en CROSS JOIN cent)
-       |  WHERE crank = 1),
+       |${assignedSql("en")},
        |r AS (
        |  SELECT a.vec_id, a.cluster, cent.cv AS ccv,
        |    list_transform(a.v, (x, i) -> x - cent.cv[i]) AS res
@@ -1815,14 +1725,7 @@ object Similarity {
        |  FROM r JOIN recon ON r.vec_id = recon.vec_id),
        |rh AS (SELECT vec_id, cluster, rhat, ${sqlNrm("rhat")} AS rn FROM rhat),
        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM en WHERE vec_id < $NQueries),
-       |probes AS (
-       |  SELECT q_id, qv, qn, probe_cluster FROM (
-       |    SELECT q.q_id, q.qv, q.qn, cent.c_id AS probe_cluster,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${sqlDot("cent.cv", "q.qv")} / (cent.cn * q.qn) DESC, cent.c_id)
-       |        AS prank
-       |    FROM q CROSS JOIN cent)
-       |  WHERE prank <= $NProbe),
+       |$probesSql,
        |adc AS (
        |  SELECT p.q_id, rh.vec_id,
        |    ${sqlDot("p.qv", "rh.rhat")} / (p.qn * rh.rn) AS adc
@@ -1831,7 +1734,7 @@ object Similarity {
        |shortlist AS (
        |  SELECT q_id, vec_id FROM (
        |    SELECT q_id, vec_id,
-       |      row_number() OVER (PARTITION BY q_id ORDER BY adc DESC, vec_id) AS arank
+       |      ${rankSql("adc")} AS arank
        |    FROM adc)
        |  WHERE arank <= ${TopK * IvfPqRerankFactor}),
        |exact AS (
@@ -1840,14 +1743,7 @@ object Similarity {
        |  FROM shortlist s
        |  JOIN q ON s.q_id = q.q_id
        |  JOIN en ON s.vec_id = en.vec_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM exact)
-       |SELECT q_id, vec_id AS neighbor_id, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("exact")}""".stripMargin
   }
 
   // ------------------------------------------------- materialized IVF-PQ index
@@ -1994,14 +1890,13 @@ object Similarity {
     * ↔ embeddings linkage doc_id == vec_id) are fused by
     * Σ 1/(60 + rank), missing-in-one-list contributing 0.
     *
-    * Plan shape: each shortlist is an `orderBy().limit(K)` — a
-    * TakeOrdered, ≤ K rows per partition cross the wire, never a
-    * global sort — and the rank window then runs on the K-row result,
-    * not the corpus. The fusion join and final top-N touch ≤ 2K rows
-    * regardless of corpus size. At 100 TB the two shortlist scans are
-    * the only corpus-sized work, and they are independent single
-    * passes (the semantic one IVF/PQ-replaceable by the kernels in
-    * this file).
+    * Plan shape: each shortlist is one [[topKPer]] group under a
+    * constant key — ≤ K rows per partition cross the wire, never a
+    * global sort, and the stage hands back the ranks. The fusion join
+    * and final top-N touch ≤ 2K rows regardless of corpus size. At
+    * 100 TB the two shortlist scans are the only corpus-sized work,
+    * and they are independent single passes (the semantic one
+    * IVF/PQ-replaceable by the kernels in this file).
     *
     * Cross-engine: ranks are integers; each RRF term is one double
     * division `1/(60+rank)` (DuckDB's bare `1.0` is DECIMAL, so the
@@ -2014,20 +1909,18 @@ object Similarity {
   def pipelineHybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
     val rrfTerm: Column => Column =
       r => coalesce(lit(1.0) / (lit(RrfK) + r), lit(0.0))
-    val lexW = Window.orderBy(col("bm25_raw").desc, col("doc_id"))
-    val lex = TextAnalysis.bm25Frame(spark, dir)
-      .select(col("doc_id"), col("bm25_raw"))
-      .orderBy(col("bm25_raw").desc, col("doc_id")).limit(HybridK)
-      .withColumn("lex_rank", row_number().over(lexW).cast("int"))
+    // one shortlist = the top HybridK of one constant-key group
+    def shortlist(df: DataFrame, score: String, id: String): DataFrame =
+      topKPer(df.withColumn("_all", lit(0)), "_all", score, id, HybridK)
+    val lex = shortlist(TextAnalysis.bm25Frame(spark, dir), "bm25_raw", "doc_id")
+      .select(col("doc_id"), col("rank").as("lex_rank"))
     val e = vecs(spark, dir)
     val q = broadcast(e.filter(col("vec_id") === 0)
       .select(col("v").as("qv"), col("nrm").as("qn")))
-    val semW = Window.orderBy(col("cos").desc, col("vec_id"))
-    val sem = e.filter(col("vec_id") =!= 0).crossJoin(q)
-      .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .orderBy(col("cos").desc, col("vec_id")).limit(HybridK)
-      .withColumn("sem_rank", row_number().over(semW).cast("int"))
-      .select(col("vec_id").as("doc_id"), col("sem_rank"))
+    val sem = shortlist(e.filter(col("vec_id") =!= 0).crossJoin(q)
+        .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm"))),
+        "cos", "vec_id")
+      .select(col("vec_id").as("doc_id"), col("rank").as("sem_rank"))
     // cut AND present in the same order, on the same quantity — the
     // RAW rrf — in both engines (the oracle mirrors this two-step
     // shape); rounding to 9 decimals happens strictly after ordering,
@@ -2035,8 +1928,7 @@ object Similarity {
     // order. (Distinct RRF sums differ by ≥ 1/(K+HybridK)⁴ ≈ 1.5e-9
     // > the 1e-9 rounding grid, so rounded-order would coincide
     // anyway — but equality should not rest on that thin margin.)
-    lex.select(col("doc_id"), col("lex_rank"))
-      .join(sem, Seq("doc_id"), "full_outer")
+    lex.join(sem, Seq("doc_id"), "full_outer")
       .withColumn("rrf_raw",
         rrfTerm(col("lex_rank")) + rrfTerm(col("sem_rank")))
       .orderBy(col("rrf_raw").desc, col("doc_id")).limit(HybridTopN)
@@ -2121,7 +2013,7 @@ object Similarity {
     * store exposes; Faiss's IndexScalarQuantizer shape): each float32
     * dimension is coded to 8 bits against global per-dim [min, max],
     * and queries ADC-score the dequantized corpus — same plan as
-    * `ann_pq` (broadcast query set, per-query top-k window) with 1
+    * `ann_pq` (broadcast query set, per-query [[topKPer]]) with 1
     * byte/dim candidates in flight instead of 8. SQ8 trades 4× less
     * compression than PQ (64 B vs 8 B here) for near-lossless recall
     * and a trivially cheap train step (one min/max pass — no kmeans),
@@ -2137,14 +2029,9 @@ object Similarity {
       .withColumn("rn", VectorFunctions.norm(col("rv")))
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    enc.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    val scored = enc.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("rv")) / (col("qn") * col("rn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("rank"),
-        rnd(col("cos"), 6).as("cos_sq"))
-      .orderBy(col("q_id"), col("rank"))
+    topNeighbors(scored, TopK, "cos_sq").orderBy(col("q_id"), col("rank"))
   }
 
   private val annSqSql = {
@@ -2167,13 +2054,7 @@ object Similarity {
        |  SELECT q.q_id, r2.vec_id,
        |    ${sqlDot("q.qv", "r2.rv")} / (q.qn * r2.rn) AS cos
        |  FROM r2 CROSS JOIN q WHERE r2.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, rank, ${rndSql("cos", 6)} AS cos_sq
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", s"rank, ${rndSql("cos", 6)} AS cos_sq")}""".stripMargin
   }
 
   // ---------------------------------------------------------------- hard negatives
@@ -2196,7 +2077,7 @@ object Similarity {
     *
     * This registered form is the exact brute-force miner (the
     * oracle-checkable configuration — broadcast anchor set, one
-    * corpus scan, per-anchor top-k window). At 100 TB with a
+    * corpus scan, per-anchor [[topKPer]]). At 100 TB with a
     * corpus-sized anchor set, swap the scorer: mine inside IVF cells
     * ([[ivfTopK]]'s probed equi-join) or over SQ8/PQ codes — the
     * label filter and dup ceiling are per-row predicates that compose
@@ -2213,20 +2094,24 @@ object Similarity {
   /** The mining kernel behind [[pipelineHardNegatives]] (public so
     * planted-corpus specs can drive it): `corpus` needs (vec_id,
     * label, v, nrm); `anchors` (q_id, q_label, qv, qn), broadcast-
-    * sized. Returns the top-`k` cross-label candidates per anchor
-    * under the `maxCos` near-duplicate ceiling. */
+    * sized, with vec_id a key of `corpus`. Returns the top-`k`
+    * cross-label candidates per anchor under the `maxCos`
+    * near-duplicate ceiling. */
   def hardNegatives(corpus: DataFrame, anchors: DataFrame, k: Int,
       maxCos: Double): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    corpus.join(broadcast(anchors),
+    val scored = corpus.join(broadcast(anchors),
         col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
       .filter(col("cos") < maxCos)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    withLabel(topKPer(scored, "q_id", "cos", "vec_id", k), corpus)
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
         col("label").as("neg_label"), col("rank"), rnd(col("cos"), 6).as("cos_sim"))
   }
+
+  /** A [[topKPer]] result over vec_id with each row's `label` joined
+    * back from `corpus` — the broadcast top-k side is ≤ |q|·k rows. */
+  private def withLabel(top: DataFrame, corpus: DataFrame): DataFrame =
+    broadcast(top).join(corpus.select(col("vec_id"), col("label")), "vec_id")
 
   private val pipelineHardNegativesSql =
     s"""WITH e AS ($vecsSql),
@@ -2236,14 +2121,8 @@ object Similarity {
        |  SELECT q.q_id, e.vec_id, e.label,
        |    ${dotSql("q.qv", "e.v")} / (q.qn * e.nrm) AS cos
        |  FROM e JOIN q ON e.vec_id <> q.q_id AND e.label <> q.q_label),
-       |ranked AS (
-       |  SELECT q_id, vec_id, label, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored WHERE cos < $HardNegMaxCos)
-       |SELECT q_id, vec_id AS neighbor_id, label AS neg_label, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql(s"scored WHERE cos < $HardNegMaxCos",
+             "label AS neg_label, " + rankOut("cos_sim"), carry = "label, ")}""".stripMargin
 
   // ---------------------------------------------------------------- filtered search
   /** Label predicate of the registered `ann_filtered` (~30% of the
@@ -2268,12 +2147,10 @@ object Similarity {
     val e = vecs(spark, dir)
     val q = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    e.filter(col("label").isin(FilterLabels: _*))
+    val scored = e.filter(col("label").isin(FilterLabels: _*))
       .join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    withLabel(topKPer(scored, "q_id", "cos", "vec_id", TopK), e)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("label"),
         col("rank"), rnd(col("cos"), 6).as("cos_sim"))
       .orderBy(col("q_id"), col("rank"))
@@ -2287,14 +2164,7 @@ object Similarity {
        |    ${dotSql("q.qv", "e.v")} / (q.qn * e.nrm) AS cos
        |  FROM e JOIN q ON e.vec_id <> q.q_id
        |  WHERE e.label IN (${FilterLabels.mkString(", ")})),
-       |ranked AS (
-       |  SELECT q_id, vec_id, label, cos,
-       |    cast(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) as int) AS rank
-       |  FROM scored)
-       |SELECT q_id, vec_id AS neighbor_id, label, rank,
-       |  ${rndSql("cos", 6)} AS cos_sim
-       |FROM ranked WHERE rank <= $TopK
-       |ORDER BY q_id, rank""".stripMargin
+       |${rankedSql("scored", "label, " + rankOut("cos_sim"), carry = "label, ")}""".stripMargin
 
   // ---------------------------------------------------------------- MMR rerank
   /** MMR parameters of the registered `ann_mmr`: shortlist size,
@@ -2368,15 +2238,15 @@ object Similarity {
   def annMmr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = vecs(spark, dir)
-    val w = Window.partitionBy(col("qId")).orderBy(col("cos").desc, col("vec_id"))
-    val shortlist = e.join(broadcast(
+    val scored = e.join(broadcast(
         e.filter(col("vec_id") < NQueries)
-          .select(col("vec_id").as("qId"), col("v").as("qv"), col("nrm").as("qn"))),
-        col("vec_id") =!= col("qId"))
+          .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))),
+        col("vec_id") =!= col("q_id"))
       .withColumn("cos", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= MmrShortlist)
-      .select(col("qId"), col("vec_id").as("vecId"), col("cos").as("rel"),
+    // v/nrm ride back on the id: ≤ MmrShortlist rows per query
+    val shortlist = broadcast(topKPer(scored, "q_id", "cos", "vec_id", MmrShortlist))
+      .join(e.select(col("vec_id"), col("v"), col("nrm")), "vec_id")
+      .select(col("q_id").as("qId"), col("vec_id").as("vecId"), col("cos").as("rel"),
         col("v"), col("nrm"))
       .as[MmrCand]
     shortlist.groupByKey(_.qId)
@@ -2405,8 +2275,8 @@ object Similarity {
     QueryDef("ann_ivfpq_indexed", annIvfPqIndexed _, Some(annIvfPqSql)),
     QueryDef("ann_bruteforce", annBruteforce _, Some(annBruteforceSql)),
     QueryDef("ann_mips", annMips _, Some(annMipsSql)),
-    QueryDef("ann_bruteforce_agg", annBruteforceAgg _,
-      Some(annBruteforceSql)), // same oracle: bounded-agg == window form
+    // a second name for the same function and oracle
+    QueryDef("ann_bruteforce_agg", annBruteforce _, Some(annBruteforceSql)),
     QueryDef("ann_ivf", annIvf _, Some(annIvfSql)),
     QueryDef("ann_ivf_trained", annIvfTrained _, Some(annIvfTrainedSql)),
     QueryDef("ann_kmeans", annKmeans _, Some(annKmeansSql)),

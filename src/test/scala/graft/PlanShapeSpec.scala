@@ -79,20 +79,42 @@ class PlanShapeSpec extends SparkSpec {
       "cap must flatten every stratum to exactly cap rows")
   }
 
-  test("hybrid retrieval shortlists are TakeOrdered, never a global sort") {
+  test("hybrid retrieval shortlists are bounded top-k stages, never a global sort") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     val plan = graft.operators.Similarity.pipelineHybridRetrieval(spark, sf)
-      .queryExecution.executedPlan.toString
-    // both corpus-sized ranking stages must be TakeOrdered (<= K rows
-    // per partition cross the wire); the remaining Sorts in the plan
-    // all sit above limits (the <= 100-row shortlist windows, the
-    // <= 200-row fusion join, the <= 50-row output order)
-    val shortlists = "TakeOrderedAndProject\\(limit=100".r
-      .findAllIn(plan).size
-    assert(shortlists >= 2,
-      s"expected 2 TakeOrdered shortlists, found $shortlists in:\n$plan")
-    assert(!plan.contains("Window [") ||
-      !plan.contains("windowspecdefinition(doc"), // no corpus-wide window
-      s"unexpected corpus window in:\n$plan")
+      .queryExecution.executedPlan
+    // both corpus-sized ranking stages are one bounded_topk group each
+    // (a partial and a final aggregate apiece: <= K rows per partition
+    // cross the wire); the only global order left is the <= 50-row
+    // TakeOrdered over the <= 200-row fusion join
+    val topks = new AdaptiveSparkPlanHelper {}.collect(plan) { case a: BaseAggregateExec =>
+      a.aggregateExpressions.map(_.aggregateFunction.prettyName)
+    }.flatten.count(_ == "bounded_topk")
+    assert(topks == 4, s"expected 2 bounded_topk shortlists (partial + final), found $topks in:\n$plan")
+    assert("TakeOrderedAndProject\\(limit=100".r.findFirstIn(plan.toString).isEmpty,
+      s"a shortlist is still a TakeOrdered in:\n$plan")
+  }
+
+  test("every routed top-k plans a bounded_topk stage and no Window operator") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // the names whose per-key top-k goes through Similarity.topKPer;
+    // dedup_semantic keeps its keep-first window and is not listed
+    val routed = Seq("ann_bruteforce", "ann_bruteforce_agg", "ann_mips", "ann_ivf",
+      "ann_ivf_trained", "mm_feature_knn", "ann_pq", "ann_ivfpq", "ann_ivfpq_indexed",
+      "ann_ivfpq_rerank", "ann_sq", "ann_ivfsq", "ann_filtered", "pipeline_hard_negatives",
+      "ann_mmr", "pipeline_hybrid_retrieval", "ann_knn_join", "q_group_topk")
+    val helper = new AdaptiveSparkPlanHelper {}
+    routed.foreach { name =>
+      CacheHygiene.sweep(spark)
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+      assert(plan.toString.contains("bounded_topk"), s"$name plans no bounded_topk:\n$plan")
+      val windows = helper.collectWithSubqueries(plan) {
+        case w if w.nodeName.contains("Window") => w.nodeName
+      }
+      assert(windows.isEmpty, s"$name plans $windows:\n$plan")
+    }
+    CacheHygiene.sweep(spark)
   }
 
   test("domain cap plans the same range exchange as the stratified sampler") {

@@ -66,46 +66,71 @@ class PropertySpec extends SparkSpec {
 
   test("property: BoundedTopK buffer equals sort-take (with merge halves)") {
     // the buffer behind the native BoundedTopK aggregate: score desc,
-    // then id asc, and merging two halves gives the same top k
-    forAll(Gen.listOf(Gen.zip(Gen.choose(0L, 30L), Gen.choose(-100.0, 100.0)))) {
-      (pairs: List[(Long, Double)]) =>
-        val buf = new graft.functions.TopKBuffer(3)
-        pairs.foreach { case (id, s) => buf.insert(id, s) }
-        val expect = pairs.sortBy(t => (-t._2, t._1)).take(3)
-        assert(buf.ids.take(buf.n).zip(buf.scores.take(buf.n)).toList == expect)
-        val (h1, h2) = pairs.splitAt(pairs.length / 2)
-        val b1 = new graft.functions.TopKBuffer(3)
-        h1.foreach { case (id, s) => b1.insert(id, s) }
-        val b2 = new graft.functions.TopKBuffer(3)
-        h2.foreach { case (id, s) => b2.insert(id, s) }
-        b1.mergeIn(b2)
-        assert(b1.ids.take(b1.n).zip(b1.scores.take(b1.n)).toList == expect)
+    // then id asc, and merging two halves gives the same top k. Scores
+    // draw ±0.0, which are equal and so tie on id; lists of up to 100
+    // and of up to 12 pairs, where those ties reach the cut.
+    val score = Gen.frequency(
+      3 -> Gen.choose(-100.0, 100.0), 2 -> Gen.const(0.0), 2 -> Gen.const(-0.0))
+    def ranksBefore(a: (Long, Double), b: (Long, Double)): Boolean = {
+      val c = if (a._2 == b._2) 0 else java.lang.Double.compare(a._2, b._2)
+      c > 0 || (c == 0 && a._1 < b._1)
     }
+    def bits(xs: Seq[(Long, Double)]) =
+      xs.map { case (id, s) => (id, java.lang.Double.doubleToLongBits(s)) }
+    def topOf(pairs: Seq[(Long, Double)]) = {
+      val buf = new graft.functions.TopKBuffer(3)
+      pairs.foreach { case (id, s) => buf.insert(id, s) }
+      buf
+    }
+    for (maxLen <- Seq(100, 12))
+      forAll(Gen.choose(0, maxLen).flatMap(Gen.listOfN(_, Gen.zip(Gen.choose(0L, 30L), score)))) {
+        (pairs: List[(Long, Double)]) =>
+          val expect = bits(pairs.sortWith(ranksBefore).take(3))
+          val buf = topOf(pairs)
+          assert(bits(buf.ids.take(buf.n).zip(buf.scores.take(buf.n))) == expect)
+          val (h1, h2) = pairs.splitAt(pairs.length / 2)
+          val b1 = topOf(h1)
+          b1.mergeIn(topOf(h2))
+          assert(bits(b1.ids.take(b1.n).zip(b1.scores.take(b1.n))) == expect)
+      }
   }
 
   test("BoundedTopK aggregate equals row_number window (ties, NaN, partitions)") {
-    val s = spark
-    import s.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // Similarity.topKPer (BoundedTopK + posexplode) against the
+    // row_number window it must equal, over 1 and 7 partitions. 500 groups of ~40 rows tie
+    // on a 1/4 grid with NaN and null scores; 150 groups of 1-7 rows
+    // (most smaller than k) score from {0.0, -0.0, null, NaN, -1.0}, so
+    // ±0.0 ties and nulls reach the cut. The id column is an int.
     val rnd = new scala.util.Random(7)
-    val rows = (0 until 20000).map { i =>
-      val g = rnd.nextInt(500).toLong
-      val score = if (rnd.nextInt(400) == 0) Double.NaN else rnd.nextInt(16) / 4.0
-      (g, i.toLong, score)
+    def big(): java.lang.Double = rnd.nextInt(400) match {
+      case 0 => Double.NaN
+      case 1 | 2 => null
+      case _ => rnd.nextInt(16) / 4.0
     }
-    val df = rows.toDF("g", "id", "sc").repartition(13)
+    val small = Array[java.lang.Double](0.0, -0.0, null, Double.NaN, -1.0)
+    val rows = (0 until 20000).map(i => Row(rnd.nextInt(500).toLong, i, big())) ++
+      (0 until 150).flatMap { g =>
+        (0 to g % 7).map(j => Row(500L + g, 20000 + 8 * g + j, small(rnd.nextInt(5))))
+      }
+    val schema = StructType(Seq(StructField("g", LongType, nullable = false),
+      StructField("id", IntegerType, nullable = false),
+      StructField("sc", DoubleType, nullable = true)))
+    def byRank(rs: Array[Row]) = rs.map { r =>
+      (r.getAs[Long]("g"), r.getAs[Int]("rank")) -> (r.getAs[Int]("id"),
+        Option(r.getAs[java.lang.Double]("sc")).map(d => java.lang.Double.doubleToLongBits(d)))
+    }.toMap
     val k = 5
-    val got = df.groupBy(col("g"))
-      .agg(graft.functions.BoundedTopK.topK(k, col("id"), col("sc")).as("topk"))
-      .select(col("g"), posexplode(arrays_zip(col("topk.ids"), col("topk.scores")))
-        .as(Seq("pos", "e")))
-      .select(col("g"), (col("pos") + 1).cast("long").as("rank"), col("e.ids").as("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g")).orderBy(col("sc").desc, col("id"))
-    val expect = df.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .collect().map(r => (r.getLong(0), r.getInt(3).toLong) -> r.getLong(1)).toMap
-    assert(got == expect)
+    Seq(1, 7).foreach { parts =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+      val top = graft.operators.Similarity.topKPer(df, "g", "sc", "id", k)
+      assert(top.schema("id").dataType == IntegerType && top.schema("rank").dataType == IntegerType)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("g")).orderBy(col("sc").desc, col("id"))
+      val expect = df.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      assert(byRank(top.collect()) == byRank(expect.collect()), s"over $parts partitions")
+    }
   }
 
   /** The k-means update before [[graft.functions.VectorMeanExact]]:

@@ -452,6 +452,45 @@ class SimilarityRecallSpec extends SparkSpec {
     assert(got == Seq(1, 0)) // 8.5 nearer 9.0 -> code 1; singleton -> 0
   }
 
+  test("ADC rerank shortlists keep zero-norm reconstructions last and survive too few candidates") {
+    val s = spark
+    import s.implicits._
+    // A reconstruction of norm 0 gives a null ADC score (try_divide).
+    // The shortlist ranks it after every real score and cuts among
+    // such rows by vec_id, the row_number window's DESC NULLS LAST.
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("q_id", "rank").collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
+    val vecs = Seq(
+        1L -> Seq(1.0, 0.0, 0.0, 0.1), 2L -> Seq(1.0, 0.2, 0.0, 0.0),
+        3L -> Seq(0.0, 0.0, 1.0, 0.3), 4L -> Seq(0.1, 0.0, 1.0, 0.0),
+        5L -> Seq(2.0, 0.0, 0.0, 1.0))
+      .toDF("vec_id", "v").withColumn("nrm", VectorFunctions.norm(col("v")))
+    def query(qv: Seq[Double]) = Seq(100L -> qv).toDF("q_id", "qv")
+      .withColumn("qn", VectorFunctions.norm(col("qv")))
+
+    // flat PQ: 3 and 4 sit nearer (0, 0) than (1, 0) in subspace 0, so
+    // they reconstruct to 0 and score null, while 1, 2 and 5 tie at
+    // 0.0; the k·rerank = 4 shortlist is 1, 2, 5, 3, and 4 (the best
+    // exact cosine) misses it
+    val pqCb = Seq(Seq(Seq(0.0, 0.0), Seq(1.0, 0.0)), Seq(Seq(0.0, 0.0)))
+    assert(ids(Similarity.pqTopKRerank(vecs, query(Seq(0.0, 0.0, 1.0, 0.0)), pqCb,
+      k = 2, rerank = 2)) == Seq(3L -> 1, 1L -> 2))
+
+    // IVF-PQ: every residual codes to (-1, 0, 0, 0), so the cell of
+    // (1, 0, 0, 0) — vectors 1, 2, 5 — reconstructs to 0 and scores
+    // null, while 3 and 4 tie at -0.5 / (1.5·√2)
+    val cents = Seq(0 -> Seq(1.0, 0.0, 0.0, 0.0), 1 -> Seq(0.0, 0.0, 1.0, 0.0))
+      .map { case (c, cv) => (c, cv, Similarity.driverNorm(cv)) }
+    val ivfCb = Seq(Seq(Seq(-1.0, 0.0)), Seq(Seq(0.0, 0.0)))
+    val q = query(Seq(1.0, 0.0, 0.5, 1.0))
+    // both cells probed: shortlist 3, 4, then nulls 1, 2; 5 is cut
+    assert(ids(Similarity.ivfPqTopKRerank(vecs, q, cents, ivfCb,
+      nprobe = 2, k = 2, rerank = 2)) == Seq(1L -> 1, 2L -> 2))
+    // one cell probed: 3 candidates for a shortlist of 4, all null
+    assert(ids(Similarity.ivfPqTopKRerank(vecs, q, cents, ivfCb,
+      nprobe = 1, k = 2, rerank = 2)) == Seq(5L -> 1, 1L -> 2))
+  }
+
   test("multi-table LSH recall on planted near-duplicates above 0.9; banding beats one band") {
     val s = spark
     import s.implicits._

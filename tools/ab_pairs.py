@@ -1,24 +1,34 @@
 #!/usr/bin/env python3
-"""Alternating A/B pairs of perfbench runs from two checkouts, each started idle.
+"""Alternating A/B pairs of perfbench or graft.Bench runs from two checkouts, each started idle.
 
 Usage:
   python3 tools/ab_pairs.py --base DIR --change DIR --workload etl \\
       --seeds 41-45 [--seconds 8] [--trace 0] [--max-wait 600] [--json OUT]
+  python3 tools/ab_pairs.py --base DIR --change DIR \\
+      --queries q1,q2 --sf-dir SF_DIR [--pairs 5] [--max-wait 600] [--json OUT]
 
-Pair i runs `perfbench/run.py --workload W --seed S_i` once in each
-checkout, base first in even pairs and change first in odd ones, so a
-drift of the box over the campaign lands on both sides. Before every
-run it waits, at most --max-wait seconds, for the 1-minute load average
-to fall below 0.25 x nproc (perfbench's idle rule: the previous run
-leaves load1 at 2-4 on a 4-core box), and records load1 at the start
-and whether the wait succeeded.
+perfbench mode: pair i runs `perfbench/run.py --workload W --seed S_i`
+once in each checkout. Bench mode (--queries): pair i runs
+`tools/run_main.sh graft.Bench` once per side with
+SPARK_GRAFT_QUERIES set to the list, SPARK_GRAFT_SF_DIR to --sf-dir,
+SPARK_GRAFT_CPUS to nproc unless already set, and SPARK_GRAFT_CP to
+that side's `target/scala-2.13/classes` (compile both checkouts
+first); its metrics are each query's seconds (the min of Bench's two
+timed runs) and their `total`. In both modes the base runs first in
+even pairs and the change first in odd ones, so a drift of the box
+over the campaign lands on both sides. Before every run it waits, at
+most --max-wait seconds, for the 1-minute load average to fall below
+0.25 x nproc (perfbench's idle rule: the previous run leaves load1 at
+2-4 on a 4-core box), and records load1 at the start and whether the
+wait succeeded.
 
 It prints, per metric: both medians, change/base, the base runs'
 interquartile range, and in how many pairs the change was better (the
-direction each metric improves in comes from BENCHMARK.json). A gain
-is claimed only when the change wins nearly every pair and its median
-moves by more than the base IQR. Per-operation medians follow, read
-from each run's report.json. Exit 1 if any run fails or is incorrect.
+direction each metric improves in comes from BENCHMARK.json; Bench
+seconds are lower-better). A gain is claimed only when the change wins
+nearly every pair and its median moves by more than the base IQR. In
+perfbench mode per-operation medians follow, read from each run's
+report.json. Exit 1 if any run fails or is incorrect.
 """
 import argparse
 import json
@@ -57,7 +67,7 @@ def wait_idle(max_wait, poll=5.0):
         time.sleep(poll)
 
 
-def run_one(checkout, args, seed):
+def run_perfbench(checkout, args, seed):
     cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
            "--seed", str(seed), "--seconds", str(args.seconds), "--trace", str(args.trace)]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -76,6 +86,26 @@ def run_one(checkout, args, seed):
     return {"ok": p.returncode == 0 and last.get("correct", False),
             "metrics": {k: v["value"] for k, v in last["metrics"].items()},
             "per_op": per_op}
+
+
+def run_bench(checkout, args, _pair):
+    """One graft.Bench subset run from `checkout`'s compiled classes."""
+    env = dict(os.environ, SPARK_GRAFT_QUERIES=args.queries,
+               SPARK_GRAFT_SF_DIR=args.sf_dir,
+               SPARK_GRAFT_CP=os.path.join(checkout, "target", "scala-2.13", "classes"))
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    p = subprocess.run([os.path.join(ROOT, "tools", "run_main.sh"), "graft.Bench"],
+                       env=env, capture_output=True, text=True)
+    lines = [l for l in p.stdout.splitlines() if l.startswith("{") and '"metric"' in l]
+    try:
+        last = json.loads(lines[-1])
+    except (IndexError, ValueError):
+        sys.stderr.write(p.stderr[-3000:])
+        return None
+    times = last.get("queries", {})
+    ok = (p.returncode == 0 and not last.get("failed")
+          and all(q in times for q in args.queries.split(",")))
+    return {"ok": ok, "metrics": dict(times, total=last["value"]), "per_op": {}}
 
 
 def directions():
@@ -106,36 +136,49 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--base", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", type=seeds_arg, required=True)
+    ap.add_argument("--workload", help="perfbench workload")
+    ap.add_argument("--seeds", type=seeds_arg, help="perfbench seeds, one pair each")
+    ap.add_argument("--queries", help="Bench mode: comma-separated registered queries")
+    ap.add_argument("--sf-dir", help="Bench mode: the sf directory the queries run at")
+    ap.add_argument("--pairs", type=int, default=5, help="Bench mode: number of pairs")
     ap.add_argument("--seconds", type=float, default=8)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--max-wait", type=float, default=600,
                     help="longest wait for an idle box before each run, seconds")
     ap.add_argument("--json", help="also write every run's metrics here")
     args = ap.parse_args()
+    if args.queries:
+        if not args.sf_dir:
+            ap.error("--queries needs --sf-dir")
+        run, keys, head = run_bench, list(range(1, args.pairs + 1)), "total"
+        title = f"graft.Bench {args.queries} at {args.sf_dir}"
+    else:
+        if not (args.workload and args.seeds):
+            ap.error("give --workload and --seeds, or --queries and --sf-dir")
+        run, keys, head = run_perfbench, args.seeds, "pass_s"
+        title = f"{args.workload}, seeds {args.seeds[0]}..{args.seeds[-1]}"
 
     sides = {"base": os.path.abspath(args.base), "change": os.path.abspath(args.change)}
     runs, bad = [], 0
-    for i, seed in enumerate(args.seeds):
+    for i, key in enumerate(keys):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
-        pair = {"seed": seed}
+        pair = {"seed": key}
         for side in order:
             l1, idle = wait_idle(args.max_wait)
-            r = run_one(sides[side], args, seed)
+            r = run(sides[side], args, key)
             if r is None or not r["ok"]:
                 bad += 1
-                print(f"pair {i + 1} seed {seed} {side}: run failed or incorrect", file=sys.stderr)
+                print(f"pair {i + 1} ({key}) {side}: run failed or incorrect", file=sys.stderr)
                 r = r or {"ok": False, "metrics": {}, "per_op": {}}
             r.update(load1_start=l1, idle_start=idle)
             pair[side] = r
-            ps = r["metrics"].get("pass_s")
-            print(f"pair {i + 1} seed {seed} {side:6s} load1 {l1:5.2f} "
-                  f"idle {str(idle):5s} pass_s {ps if ps is None else round(ps, 3)}",
+            hv = r["metrics"].get(head)
+            print(f"pair {i + 1} ({key}) {side:6s} load1 {l1:5.2f} "
+                  f"idle {str(idle):5s} {head} {hv if hv is None else round(hv, 3)}",
                   flush=True)
         runs.append(pair)
 
-    print(f"\n{args.workload}: {len(runs)} pairs, seeds {args.seeds[0]}..{args.seeds[-1]}, "
+    print(f"\n{title}: {len(runs)} pairs, "
           f"{sum(r[s]['idle_start'] for r in runs for s in sides)}/{2 * len(runs)} runs started idle")
     print(f"{'metric':34s} {'base':>12s} {'change':>12s} {'ratio':>7s} {'base IQR':>10s} wins")
     for n, b, c, iqr, wins, k in summarize(runs, directions()):
@@ -150,7 +193,8 @@ def main():
             print(f"{o:34s} {med['base']:12.4f} {med['change']:12.4f}")
     if args.json:
         with open(args.json, "w") as f:
-            json.dump({"workload": args.workload, "seconds": args.seconds,
+            json.dump({"workload": args.workload, "queries": args.queries,
+                       "sf_dir": args.sf_dir, "seconds": args.seconds,
                        "trace": args.trace, "pairs": runs}, f, indent=1)
     sys.exit(1 if bad else 0)
 
