@@ -6,6 +6,19 @@ import org.apache.spark.sql.SparkSession
   * defaults the library is tuned for. `cores` is local-mode
   * parallelism; on a real cluster pass `master = None` and submit
   * normally (spark-submit --conf spark.sql.extensions=graft.GraftExtensions).
+  *
+  * It also serves `file:` with graft's local filesystem
+  * ([[graft.sources.LocalFs.sparkConf]]): `spark.hadoop.fs.file.impl`
+  * for the `FileSystem` API and `spark.hadoop.fs.AbstractFileSystem.file.impl`
+  * for `FileContext`, which streaming checkpoints and state stores use.
+  * Without `libhadoop` Hadoop's stock local filesystem forks a shell
+  * for `chmod` on every file it creates and for `readlink` on every
+  * rename; graft's does both through `java.nio` with the same results.
+  * spark-submit users who do not call `build` pass both keys with
+  * `--conf`. Hadoop caches a `FileSystem` per scheme for the JVM, so
+  * a `file:` FileSystem that code in the driver JVM created before the
+  * first session starts keeps its class; the `FileContext` side is
+  * resolved afresh from each session's configuration.
   */
 object GraftSession {
   def build(
@@ -32,6 +45,7 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS); read nanos as long
       // (Tables.events rebuilds micros) instead of failing the scan
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(graft.sources.LocalFs.sparkConf)
       .withExtensions(new GraftExtensions)
     // Only force a master when the caller asked for one AND nothing is
     // already configured: under spark-submit the launcher sets

@@ -19,6 +19,9 @@ class ExtensionsSpec extends AnyFunSuite {
         .master("local[2]")
         .appName("graft-ext-test")
         .config("spark.sql.ui.enabled", "false")
+        // as TestSpark: this builder may be the one that starts the
+        // shared SparkContext
+        .config(graft.sources.LocalFs.sparkConf)
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       f(s) // do NOT stop: it would stop the shared SparkContext

@@ -12,6 +12,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.sources.LocalFs.sparkConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

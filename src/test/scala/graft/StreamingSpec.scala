@@ -265,6 +265,56 @@ class StreamingSpec extends SparkSpec {
         s"(stream ${batch2.size} vs batch ${expected.size} rows)")
   }
 
+  test("cdc checkpoint restarts across stock and graft LocalFs, both ways") {
+    // a checkpoint written through one local FileContext class must
+    // restart under the other: batch 1 under the first, batch 2 from
+    // the same checkpoint under the second
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val (t1, t2) = (1705276800000000L, 1706140800000000L) // Jan 15 / Jan 25
+    val evDF = Tables.events(s, sf)
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        col("value"), unix_micros(col("ts")).as("us"))
+    val ev = evDF.as[StreamingJobs.CdcEv].collect()
+    val expected = Events.asOfDiff(evDF, t1, t2).collect().map { r =>
+      (r.getLong(0), r.getString(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)), r.getLong(3),
+        if (r.isNullAt(4)) None else Some(r.getString(4)), r.getString(5))
+    }.toSet
+    val key = "fs.AbstractFileSystem.file.impl"
+    val stock = classOf[org.apache.hadoop.fs.local.LocalFs]
+    val nio = classOf[graft.sources.NioLocalFs]
+    for ((first, second) <- Seq(stock -> nio, nio -> stock)) {
+      val ckpt = java.nio.file.Files.createTempDirectory("cdc-ckpt").toString
+      val in = MemoryStream[StreamingJobs.CdcEv](s)
+      val out = scala.collection.mutable.ArrayBuffer.empty[StreamingJobs.CdcOut]
+      val sink: (Dataset[StreamingJobs.CdcOut], Long) => Unit =
+        (ds, _) => out.synchronized(out ++= ds.collect())
+      def run(impl: Class[_], batch: Seq[StreamingJobs.CdcEv]): Unit = {
+        s.conf.set(key, impl.getName)
+        try {
+          assert(LocalFsSpec.checkpointFs(s, ckpt) == impl)
+          val q = StreamingJobs.cdcStream(in.toDS()).writeStream
+            .option("checkpointLocation", ckpt).foreachBatch(sink).start()
+          in.addData(batch)
+          q.processAllAvailable()
+          q.stop()
+        } finally s.conf.unset(key)
+      }
+      run(first, ev.filter(_.us < t1).toSeq)
+      assert(out.nonEmpty && out.forall(_.change == "added"))
+      out.clear()
+      run(second, ev.filter(e => e.us >= t1 && e.us < t2).toSeq)
+      val batch2 = out.map(o => (o.user_id, o.change, o.old_event_id, o.new_event_id,
+        o.old_type, o.new_type)).toSet
+      assert(batch2 == expected,
+        s"${first.getSimpleName} -> ${second.getSimpleName}: restarted batch 2 " +
+          s"(${batch2.size} rows) must equal the batch as-of diff (${expected.size})")
+    }
+  }
+
   test("streaming ewma: O(1) state agrees with the 32-horizon batch within the tail bound") {
     val s = spark
     import s.implicits._
