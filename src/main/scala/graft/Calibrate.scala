@@ -39,6 +39,8 @@ object Calibrate {
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the local filesystem GraftSession.build serves file: with
+      .config(graft.sources.LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -16,6 +16,8 @@ object Explain {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the local filesystem GraftSession.build serves file: with
+      .config(graft.sources.LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.allDefs

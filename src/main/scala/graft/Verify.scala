@@ -18,6 +18,8 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the local filesystem GraftSession.build serves file: with
+      .config(graft.sources.LocalFs.sparkConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional broadcast-threshold override. The no-broadcast sweep

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.{File, FileNotFoundException, IOException}
 import java.net.URI
-import java.nio.file.{FileSystems, Files, NoSuchFileException}
+import java.nio.file.Files
 import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, PosixFilePermission, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
@@ -33,60 +33,46 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    status, from one `unix:mode,owner,group` read through links (the
   *    stock class runs `ls -ld` on the canonical path), so listings
   *    that never ask for them pay nothing.
-  *  - `getFileLinkStatus` and `getLinkTarget` read the link with
-  *    `Files.readSymbolicLink`.
-  * A default filesystem without the `unix` attribute view (no POSIX
-  * modes to read) leaves every call to the stock class.
+  *  - `getFileLinkStatus` reads the link with `Files.readSymbolicLink`.
+  * It needs a POSIX default filesystem (NIO's `unix` attribute view),
+  * which Linux, graft's one supported platform, has.
   *
   * [[NioLocalFileSystem]] and [[NioLocalFs]] put it under Hadoop's two
   * APIs with `.crc` checksums kept; [[LocalFs.sparkConf]] registers
   * both for `file:`.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
-  import LocalFs.{nio, posixPermissions}
+  import LocalFs.posixPermissions
 
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (!nio || permission.getStickyBit) super.setPermission(p, permission)
+    if (permission.getStickyBit) super.setPermission(p, permission)
     else Files.setPosixFilePermissions(pathToFile(p).toPath, posixPermissions(permission))
 
-  override def getFileStatus(f: Path): FileStatus =
-    if (!nio) super.getFileStatus(f)
-    else {
-      val file = pathToFile(f)
-      val attrs = try Files.readAttributes(file.toPath, classOf[BasicFileAttributes])
-      catch {
-        // the stock class asks `File.exists`, false on any failed stat
-        case _: java.nio.file.FileSystemException =>
-          throw new FileNotFoundException(s"File $f does not exist")
-      }
-      new NioFileStatus(attrs, getDefaultBlockSize(f),
-        new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
+  override def getFileStatus(f: Path): FileStatus = {
+    val file = pathToFile(f)
+    val attrs = try Files.readAttributes(file.toPath, classOf[BasicFileAttributes])
+    catch {
+      // the stock class asks `File.exists`, false on any failed stat
+      case _: java.nio.file.FileSystemException =>
+        throw new FileNotFoundException(s"File $f does not exist")
     }
+    new NioFileStatus(attrs, getDefaultBlockSize(f),
+      new Path(file.getPath).makeQualified(getUri, getWorkingDirectory))
+  }
 
   override def listStatus(f: Path): Array[FileStatus] =
     // a directory's entries already come through getFileStatus
-    if (!nio || pathToFile(f).isDirectory) super.listStatus(f)
+    if (pathToFile(f).isDirectory) super.listStatus(f)
     else Array(getFileStatus(f))
 
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (!nio) super.getFileLinkStatus(f)
-    else {
-      val fi = linkStatus(f)
-      if (fi.isSymlink)
-        fi.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, fi.getPath, fi.getSymlink))
-      fi
-    }
-
-  override def getLinkTarget(f: Path): Path =
-    if (!nio) super.getLinkTarget(f) else linkStatus(f).getSymlink
-
-  /** The stock link status with an unqualified target. Like the stock
-    * class, it reads the link at `new File(f.toString)`, so a
-    * scheme-qualified path never reports a link. */
-  private def linkStatus(f: Path): FileStatus = {
-    val link = new File(f.toString).toPath
-    val target = if (Files.isSymbolicLink(link)) Files.readSymbolicLink(link).toString else ""
-    try {
+  /** The stock link status. Like the stock class, it reads the link at
+    * `new File(f.toString)`, so a scheme-qualified path never reports a
+    * link, and a path that is no link (or is gone by the time it is
+    * read) has the empty target. */
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val target = try Files.readSymbolicLink(new File(f.toString).toPath).toString
+    catch { case _: IOException => "" }
+    val fi = try {
       val fs = getFileStatus(f)
       if (target.isEmpty) fs
       else new FileStatus(fs.getLen, false, fs.getReplication, fs.getBlockSize,
@@ -97,6 +83,9 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
       case _: FileNotFoundException if target.nonEmpty =>
         new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", new Path(target), f)
     }
+    if (fi.isSymlink)
+      fi.setSymlink(FSLinkResolver.qualifySymlinkTarget(getUri, fi.getPath, fi.getSymlink))
+    fi
   }
 }
 
@@ -118,10 +107,8 @@ private final class NioFileStatus(attrs: BasicFileAttributes, blockSize: Long, p
       setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
       setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
     } catch {
-      // deleted since the status was taken: the default permission and
-      // an empty owner, which the stock status sets for a missing path
-      case _: NoSuchFileException =>
-        setPermission(null); setOwner(null); setGroup(null)
+      // a path deleted since the status was taken fails too: the stock
+      // `ls -ld` exits 2 for it, which the stock status also throws on
       case e: IOException =>
         throw new RuntimeException(s"Error while reading the permissions of $getPath", e)
     }
@@ -161,14 +148,10 @@ object LocalFs {
   /** Spark settings that serve `file:` with graft's classes through
     * both Hadoop APIs: `FileSystem` (parquet, `ManifestTable`, RocksDB
     * file listing) and `FileContext` (streaming checkpoints and state
-    * stores). `GraftSession.build` applies them. */
+    * stores). `GraftSession.build` and graft's mains apply them. */
   val sparkConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
-
-  /** Whether NIO reports full POSIX modes here (the `unix` view). */
-  private[sources] val nio: Boolean =
-    FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
 
   // PosixFilePermission's order is OWNER_READ .. OTHERS_EXECUTE, the
   // mode bits 0400 .. 0001

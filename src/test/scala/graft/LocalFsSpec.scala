@@ -71,7 +71,6 @@ class LocalFsSpec extends AnyFunSuite {
       }
       val link = new Path(s"${d.getPath}/link")
       assert(nio.getFileLinkStatus(link).getSymlink == new Path(s"file:${d.getPath}/data.bin"))
-      assert(nio.getLinkTarget(link) == stock.getLinkTarget(link))
       val dangling = new Path(s"${d.getPath}/dangling")
       assert(fields(nio.getFileLinkStatus(dangling)) == fields(stock.getFileLinkStatus(dangling)))
       // a qualified path reads as the link's target, with no link
@@ -87,6 +86,20 @@ class LocalFsSpec extends AnyFunSuite {
       intercept[FileNotFoundException](stock.getFileLinkStatus(missing))
       intercept[FileNotFoundException](nio.getFileLinkStatus(missing))
       intercept[FileNotFoundException](nio.listStatus(missing))
+    }
+  }
+
+  test("a path deleted after its status was taken fails the lazy permission load as stock does") {
+    withDir { d =>
+      val (stock, nio) = raws()
+      val f = new File(d, "brief")
+      write(f, "x")
+      val p = new Path(s"${d.getPath}/brief")
+      val (stockSt, nioSt) = (stock.getFileStatus(p), nio.getFileStatus(p))
+      assert(f.delete())
+      intercept[RuntimeException](stockSt.getPermission)
+      intercept[RuntimeException](nioSt.getPermission)
+      intercept[RuntimeException](nioSt.getOwner)
     }
   }
 
