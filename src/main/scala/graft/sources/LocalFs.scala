@@ -6,7 +6,7 @@ import java.nio.file.Files
 import java.nio.file.attribute.{BasicFileAttributes, GroupPrincipal, PosixFilePermission, UserPrincipal}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream, FsConstants, FsServerDefaults, FSLinkResolver, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -36,6 +36,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   *  - `getFileLinkStatus` reads the link with `Files.readSymbolicLink`.
   * It needs a POSIX default filesystem (NIO's `unix` attribute view),
   * which Linux, graft's one supported platform, has.
+  *
+  * One answer differs from stock on purpose: [[NioLocalFs]] verifies
+  * the `.crc` sidecar on the one-argument `open(path)` too. Stock
+  * `LocalFs` inherits `FilterFs.open(path)`, which reads the raw file
+  * past the checksum checker, and that is the call Spark's checkpoint
+  * file manager makes, so a corrupted offset log, commit log or state
+  * file would be read back without an error.
   *
   * [[NioLocalFileSystem]] and [[NioLocalFs]] put it under Hadoop's two
   * APIs with `.crc` checksums kept; [[LocalFs.sparkConf]] registers
@@ -139,9 +146,13 @@ class NioRawLocalFs(uri: URI, conf: Configuration)
 
 /** `FileContext` API: what Hadoop's `LocalFs` is (`.crc` sidecars
   * written and verified), over [[NioRawLocalFs]]. Like `LocalFs` it
-  * always serves `file:///`. */
+  * always serves `file:///`. Unlike it, `open(path)` verifies the
+  * checksums, as `open(path, bufferSize)` does. */
 class NioLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new NioRawLocalFs(FsConstants.LOCAL_FS_URI, conf))
+    extends ChecksumFs(new NioRawLocalFs(FsConstants.LOCAL_FS_URI, conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
 

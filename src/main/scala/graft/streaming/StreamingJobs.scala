@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.CrossEngine.dsum
@@ -14,8 +16,35 @@ import graft.functions.CrossEngine.dsum
   * watermark (late state GC'd); the sessionizer keeps one small
   * state record per active user and emits a session as soon as the
   * gap closes it — state size is O(active users), not O(events).
+  *
+  * Every other head that keeps its own per-key state (not a Spark
+  * aggregate's, join's or dedup's) is a per-key fold run by
+  * [[keyedFold]]: a key function and a step `(key, events,
+  * Option[state]) => (Option[next state], rows)`, called once per key
+  * per micro-batch with the state that key holds (`None` before its
+  * first write).
+  * The step is a plain function, so a spec can replay it over any
+  * split of the input without Spark. On a batch Dataset the same
+  * call hands the step each key's complete group once with no state,
+  * which is the reference semantics the streamed runs are checked
+  * against. `sessionize` keeps the raw `flatMapGroupsWithState`: it
+  * is the one head with an event-time timeout.
   */
 object StreamingJobs {
+
+  /** Runs `step` as a stateful head keyed by `key` (no timeout):
+    * `step` gets one key's events of one micro-batch and the state
+    * that key holds, and returns the state to hold next (`None` leaves
+    * the held state as it is) and the rows to emit. */
+  private def keyedFold[K: Encoder, E, S: Encoder, O: Encoder](events: Dataset[E],
+      key: E => K, mode: OutputMode = OutputMode.Append)(
+      step: (K, Iterator[E], Option[S]) => (Option[S], Iterator[O])): Dataset[O] =
+    events.groupByKey(key).flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout) {
+      (k: K, it: Iterator[E], state: GroupState[S]) =>
+        val (next, out) = step(k, it, state.getOption)
+        next.foreach(state.update)
+        out
+    }
 
   /** Hourly tumbling windows per event_type — streaming twin of
     * Events.qTumblingWindow. Works on any DataFrame with
@@ -100,11 +129,11 @@ object StreamingJobs {
     * by the same user in the preceding hour. Watermarks bound both
     * sides' state: a view older than (watermark − 1 h) can never
     * match a future purchase and is dropped. Works identically on
-    * batch frames (no watermark needed). */
-  /** One shared definition with the batch side (the oracle-paired
-    * `q_interval_join` aggregates it): see
-    * [[graft.operators.Events.purchaseViewJoin]] — on a streaming
-    * frame it attaches the two-sided watermarks for state GC. */
+    * batch frames (no watermark needed). One shared definition with
+    * the batch side (the oracle-paired `q_interval_join` aggregates
+    * it): see [[graft.operators.Events.purchaseViewJoin]] — on a
+    * streaming frame it attaches the two-sided watermarks for state
+    * GC. */
   def purchaseViewJoin(events: DataFrame): DataFrame =
     graft.operators.Events.purchaseViewJoin(events)
 
@@ -149,26 +178,28 @@ object StreamingJobs {
     // shared bucket-key projection (Dedup.minhashBandRows) — the
     // stream and the incremental batch index probe the SAME buckets
     val bands = graft.operators.Dedup.minhashBandRows(docs).as[BandHit]
-    bands
-      .groupByKey(b => (b.band, b.h0, b.h1))
-      .flatMapGroupsWithState[BucketState, DupOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long, Long), it: Iterator[BandHit], state: GroupState[BucketState]) =>
-          // doc_id order within the batch: deterministic on any arrival
-          // interleaving, and on a batch frame = the global bucket order
-          val ds = it.map(_.doc_id).toArray.sorted
-          val out = scala.collection.mutable.ArrayBuffer.empty[DupOut]
-          var canon = state.getOption.map(_.minDoc).getOrElse(Long.MaxValue)
-          ds.foreach { d =>
-            if (canon == Long.MaxValue) canon = d
-            else if (d != canon) {
-              out += DupOut(d, canon, key._1)
-              canon = math.min(canon, d)
-            }
-          }
-          state.update(BucketState(canon))
-          out.iterator
+    keyedFold(bands, (b: BandHit) => (b.band, b.h0, b.h1)) {
+      (key, it, st: Option[BucketState]) => admitDocs(key._1, it.map(_.doc_id), st)
+    }
+  }
+
+  /** One bucket's stateful step, shared by both minhash heads: each
+    * doc of the batch that is not the bucket's canonical (the min
+    * doc_id admitted so far) is emitted against it. Docs are taken in
+    * doc_id order within the batch: deterministic on any arrival
+    * interleaving, and on a batch frame = the global bucket order. */
+  private[graft] def admitDocs(band: Int, docs: Iterator[Long],
+      st: Option[BucketState]): (Option[BucketState], Iterator[DupOut]) = {
+    val out = ArrayBuffer.empty[DupOut]
+    var canon = st.map(_.minDoc).getOrElse(Long.MaxValue)
+    docs.toArray.sorted.foreach { d =>
+      if (canon == Long.MaxValue) canon = d
+      else if (d != canon) {
+        out += DupOut(d, canon, band)
+        canon = math.min(canon, d)
       }
+    }
+    (Some(BucketState(canon)), out.iterator)
   }
 
   case class BandHitIdx(doc_id: Long, band: Int, h0: Long, h1: Long,
@@ -199,34 +230,18 @@ object StreamingJobs {
       .select(col("doc_id"), col("band"), col("h0"), col("h1"),
         col("idx_canon").as("canon"))
       .as[BandHitIdx]
-    bands
-      .groupByKey(b => (b.band, b.h0, b.h1))
-      .flatMapGroupsWithState[BucketState, DupOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long, Long), it: Iterator[BandHitIdx],
-            state: GroupState[BucketState]) =>
-          val hits = it.toArray
-          hits.headOption.flatMap(_.canon) match {
-            case Some(histCanon) =>
-              // history bucket: canonical is the snapshot's — stateless
-              // (state is never created, the bounded-state guarantee)
-              hits.iterator.map(_.doc_id).filter(_ != histCanon).toArray
-                .sorted.iterator.map(d => DupOut(d, histCanon, key._1))
-            case None =>
-              val ds = hits.map(_.doc_id).sorted
-              val out = scala.collection.mutable.ArrayBuffer.empty[DupOut]
-              var canon = state.getOption.map(_.minDoc).getOrElse(Long.MaxValue)
-              ds.foreach { d =>
-                if (canon == Long.MaxValue) canon = d
-                else if (d != canon) {
-                  out += DupOut(d, canon, key._1)
-                  canon = math.min(canon, d)
-                }
-              }
-              state.update(BucketState(canon))
-              out.iterator
-          }
-      }
+    keyedFold(bands, (b: BandHitIdx) => (b.band, b.h0, b.h1)) {
+      (key, it, st: Option[BucketState]) =>
+        val hits = it.toArray
+        hits.headOption.flatMap(_.canon) match {
+          case Some(histCanon) =>
+            // history bucket: canonical is the snapshot's — stateless
+            // (state is never created, the bounded-state guarantee)
+            (None, hits.map(_.doc_id).filter(_ != histCanon).sorted.iterator
+              .map(d => DupOut(d, histCanon, key._1)))
+          case None => admitDocs(key._1, hits.iterator.map(_.doc_id), st)
+        }
+    }
   }
 
   // ------------------------------------------------------------- video near-dup
@@ -271,13 +286,10 @@ object StreamingJobs {
     val bands = graft.operators.Multimodal
       .frameBandPostings(hashes.toDF("doc_id", "frame_no", "phash"))
       .as[FrameBandHit]
-    bands.groupByKey(b => (b.band, b.bv))
-      .flatMapGroupsWithState[FrameBucketState, FrameDupOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long), it: Iterator[FrameBandHit],
-            state: GroupState[FrameBucketState]) =>
-          admitFrames(key._1, it.toArray, state, maxHamming, bucketCap)
-      }
+    keyedFold(bands, (b: FrameBandHit) => (b.band, b.bv)) {
+      (key, it, st: Option[FrameBucketState]) =>
+        admitFrames(maxHamming, bucketCap)(key._1, it, st)
+    }
   }
 
   /** One bucket's stateful step, shared by both video heads. Hits are
@@ -292,13 +304,12 @@ object StreamingJobs {
     * still requires a ≤maxHamming canonical match. StreamingSpec pins
     * both: the single-batch == batch equality and the two-batch
     * late-canonical contract. */
-  private def admitFrames(band: Int, hits: Array[FrameBandHit],
-      state: GroupState[FrameBucketState], maxHamming: Int,
-      bucketCap: Long): Iterator[FrameDupOut] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[FrameDupOut]
-    var st = state.getOption
-      .getOrElse(FrameBucketState(Long.MaxValue, 0, 0L, 0L))
-    hits.sortBy(h => (h.doc_id, h.frame_no)).foreach { h =>
+  private[graft] def admitFrames(maxHamming: Int, bucketCap: Long)(band: Int,
+      hits: Iterator[FrameBandHit], held: Option[FrameBucketState])
+      : (Option[FrameBucketState], Iterator[FrameDupOut]) = {
+    val out = ArrayBuffer.empty[FrameDupOut]
+    var st = held.getOrElse(FrameBucketState(Long.MaxValue, 0, 0L, 0L))
+    hits.toArray.sortBy(h => (h.doc_id, h.frame_no)).foreach { h =>
       if (st.seen < bucketCap) {
         if (st.minDoc == Long.MaxValue)
           st = st.copy(minDoc = h.doc_id, minFrame = h.frame_no,
@@ -315,8 +326,7 @@ object StreamingJobs {
       }
       st = st.copy(seen = st.seen + 1)
     }
-    state.update(st)
-    out.iterator
+    (Some(st), out.iterator)
   }
 
   case class FrameBandHitIdx(doc_id: Long, frame_no: Int, phash: Long,
@@ -355,30 +365,24 @@ object StreamingJobs {
       .join(index.select(col("band"), col("bv"), col("canon_doc"),
         col("canon_phash")), Seq("band", "bv"), "left_outer")
       .as[FrameBandHitIdx]
-    bands.groupByKey(b => (b.band, b.bv))
-      .flatMapGroupsWithState[FrameBucketState, FrameDupOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long), it: Iterator[FrameBandHitIdx],
-            state: GroupState[FrameBucketState]) =>
-          val hits = it.toArray.sortBy(h => (h.doc_id, h.frame_no))
-          hits.headOption.flatMap(h =>
-              h.canon_doc.zip(h.canon_phash)) match {
-            case Some((histDoc, histHash)) =>
-              // history bucket: verify against the snapshot canonical,
-              // stateless (state is never created — the bounded split)
-              hits.iterator.filter(_.doc_id != histDoc).flatMap { h =>
-                val ham = java.lang.Long.bitCount(h.phash ^ histHash)
-                if (ham <= maxHamming)
-                  Iterator.single(FrameDupOut(h.doc_id, h.frame_no,
-                    histDoc, key._1, ham))
-                else Iterator.empty
-              }
-            case None =>
-              admitFrames(key._1, hits.map(h =>
-                FrameBandHit(h.doc_id, h.frame_no, h.phash, h.band, h.bv)),
-                state, maxHamming, bucketCap)
-          }
-      }
+    keyedFold(bands, (b: FrameBandHitIdx) => (b.band, b.bv)) {
+      (key, it, st: Option[FrameBucketState]) =>
+        val hits = it.toArray.sortBy(h => (h.doc_id, h.frame_no))
+        hits.headOption.flatMap(h => h.canon_doc.zip(h.canon_phash)) match {
+          case Some((histDoc, histHash)) =>
+            // history bucket: verify against the snapshot canonical,
+            // stateless (state is never created — the bounded split)
+            (None, hits.iterator.filter(_.doc_id != histDoc).flatMap { h =>
+              val ham = java.lang.Long.bitCount(h.phash ^ histHash)
+              if (ham <= maxHamming)
+                Iterator.single(FrameDupOut(h.doc_id, h.frame_no, histDoc, key._1, ham))
+              else Iterator.empty
+            })
+          case None =>
+            admitFrames(maxHamming, bucketCap)(key._1, hits.iterator.map(h =>
+              FrameBandHit(h.doc_id, h.frame_no, h.phash, h.band, h.bv)), st)
+        }
+    }
   }
 
 
@@ -394,7 +398,7 @@ object StreamingJobs {
 
   /** Streaming CDC changelog — the ingest-time twin of
     * `Events.qTableDiff`/`asOfDiff`: per-key "profile" state (the
-    * latest event's id/type/value) kept in flatMapGroupsWithState;
+    * latest event's id/type/value) kept by [[keyedFold]];
     * each micro-batch emits ONE net change row per key that advanced
     * ('added' on first sight, 'changed' after — intermediate events
     * inside a batch collapse, the CDC compaction every changelog
@@ -410,28 +414,24 @@ object StreamingJobs {
     * space compose a GroupStateTimeout TTL like the sessionizer's. */
   def cdcStream(events: Dataset[CdcEv]): Dataset[CdcOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CdcState, CdcOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[CdcEv], state: GroupState[CdcState]) =>
-          var latest = state.getOption.orNull
-          it.foreach { e =>
-            if (latest == null || e.us > latest.us ||
-                (e.us == latest.us && e.event_id > latest.event_id))
-              latest = CdcState(e.event_id, e.event_type, e.value, e.us)
-          }
-          val old = state.getOption
-          if (latest == null || old.contains(latest)) Iterator.empty
-          else {
-            state.update(latest)
-            Iterator.single(CdcOut(uid,
-              if (old.isEmpty) "added" else "changed",
-              old.map(_.event_id), latest.event_id,
-              old.map(_.event_type), latest.event_type,
-              old.map(_.value), latest.value))
-          }
-      }
+    keyedFold(events, (e: CdcEv) => e.user_id)(cdcStep)
+  }
+
+  /** [[cdcStream]]'s step: writes state only when the profile moved. */
+  private[graft] def cdcStep(uid: Long, it: Iterator[CdcEv], old: Option[CdcState])
+      : (Option[CdcState], Iterator[CdcOut]) = {
+    var latest = old.orNull
+    it.foreach { e =>
+      if (latest == null || e.us > latest.us ||
+          (e.us == latest.us && e.event_id > latest.event_id))
+        latest = CdcState(e.event_id, e.event_type, e.value, e.us)
+    }
+    if (latest == null || old.contains(latest)) (None, Iterator.empty)
+    else (Some(latest), Iterator.single(CdcOut(uid,
+      if (old.isEmpty) "added" else "changed",
+      old.map(_.event_id), latest.event_id,
+      old.map(_.event_type), latest.event_type,
+      old.map(_.value), latest.value)))
   }
 
   // ------------------------------------------------------------- as-of enrich
@@ -459,27 +459,25 @@ object StreamingJobs {
     * sessionizer's TTL for unbounded key spaces). */
   def asofEnrichStream(events: Dataset[AsOfEv]): Dataset[AsOfOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, AsOfOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[AsOfEv], state: GroupState[Long]) =>
-          // views sort before purchases at equal us (tie rule above)
-          val evs = it.toArray
-            .sortBy(e => (e.us, if (e.event_type == "view") 0 else 1))
-          var lastView = state.getOption.getOrElse(Long.MinValue)
-          val out = scala.collection.mutable.ArrayBuffer.empty[AsOfOut]
-          evs.foreach { e =>
-            if (e.event_type == "view") {
-              if (e.us > lastView) lastView = e.us
-            } else if (e.event_type == "purchase") {
-              out += AsOfOut(uid, e.event_id, e.us,
-                if (lastView == Long.MinValue) None else Some(lastView))
-            }
-          }
-          if (lastView != Long.MinValue) state.update(lastView)
-          out.iterator
+    keyedFold(events, (e: AsOfEv) => e.user_id)(asofStep)
+  }
+
+  /** [[asofEnrichStream]]'s step: holds no state until a view. */
+  private[graft] def asofStep(uid: Long, it: Iterator[AsOfEv], st: Option[Long])
+      : (Option[Long], Iterator[AsOfOut]) = {
+    // views sort before purchases at equal us (tie rule above)
+    val evs = it.toArray.sortBy(e => (e.us, if (e.event_type == "view") 0 else 1))
+    var lastView = st.getOrElse(Long.MinValue)
+    val out = ArrayBuffer.empty[AsOfOut]
+    evs.foreach { e =>
+      if (e.event_type == "view") {
+        if (e.us > lastView) lastView = e.us
+      } else if (e.event_type == "purchase") {
+        out += AsOfOut(uid, e.event_id, e.us,
+          if (lastView == Long.MinValue) None else Some(lastView))
       }
+    }
+    (Some(lastView).filter(_ != Long.MinValue), out.iterator)
   }
 
   // ------------------------------------------------------------------ ewma
@@ -511,25 +509,16 @@ object StreamingJobs {
     * unbounded key spaces. */
   def ewmaStream(events: Dataset[EwmaEv]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[EwmaEv], state: GroupState[EwmaState]) =>
-          val evs = it.toArray.sortBy(e => (e.us, e.event_id))
-          if (evs.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              EwmaState(Double.NaN, Long.MinValue, Long.MinValue, 0L))
-            evs.foreach { e =>
-              st = EwmaState(
-                if (st.n == 0L) e.v else (st.s + e.v) / 2.0,
-                e.us, e.event_id, st.n + 1L)
-            }
-            state.update(st)
-            Iterator.single(EwmaOut(uid, st.n, st.s))
-          }
-      }
+    keyedFold(events, (e: EwmaEv) => e.user_id)(ewmaStep)
+  }
+
+  private[graft] def ewmaStep(uid: Long, it: Iterator[EwmaEv], held: Option[EwmaState])
+      : (Option[EwmaState], Iterator[EwmaOut]) = {
+    var st = held.getOrElse(EwmaState(Double.NaN, Long.MinValue, Long.MinValue, 0L))
+    it.toArray.sortBy(e => (e.us, e.event_id)).foreach { e =>
+      st = EwmaState(if (st.n == 0L) e.v else (st.s + e.v) / 2.0, e.us, e.event_id, st.n + 1L)
+    }
+    (Some(st), Iterator.single(EwmaOut(uid, st.n, st.s)))
   }
 
   // ------------------------------------------------------------------ cusum
@@ -556,35 +545,28 @@ object StreamingJobs {
     * latest. */
   def cusumStream(events: Dataset[CusumEv], mu0Micro: Long): Dataset[CusumOut] = {
     import events.sparkSession.implicits._
+    keyedFold(events, (e: CusumEv) => e.user_id)(cusumStep(mu0Micro))
+  }
+
+  private[graft] def cusumStep(mu0Micro: Long)(uid: Long, it: Iterator[CusumEv],
+      held: Option[CusumState]): (Option[CusumState], Iterator[CusumOut]) = {
     val kappa = graft.operators.Events.CusumSlackMicro
-    val h = graft.operators.Events.CusumH
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[CusumEv], state: GroupState[CusumState]) =>
-          val evs = it.toArray.sortBy(e => (e.us, e.event_id))
-          if (evs.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.getOrElse(
-              CusumState(0L, 0L, Long.MinValue, Long.MinValue, 0L))
-            evs.foreach { e =>
-              val s = st.s + (e.v - kappa - mu0Micro)
-              val minS = math.min(st.minS, s) // min includes S₀ = 0
-              val c = s - math.min(0L, minS)
-              // batch tie rule: the MIN event_id among rows attaining
-              // the max (min(when(c === cmax, event_id)) in cusumOf)
-              val (cmax, at) =
-                if (c > st.cmax) (c, e.event_id)
-                else if (c == st.cmax) (st.cmax, math.min(st.atEvent, e.event_id))
-                else (st.cmax, st.atEvent)
-              st = CusumState(s, minS, cmax, at, st.n + 1L)
-            }
-            state.update(st)
-            val units = math.floor(st.cmax.toDouble / 1e6 * 1e4 + 0.5) / 1e4
-            Iterator.single(CusumOut(uid, st.n, units, st.atEvent, units > h))
-          }
-      }
+    var st = held.getOrElse(CusumState(0L, 0L, Long.MinValue, Long.MinValue, 0L))
+    it.toArray.sortBy(e => (e.us, e.event_id)).foreach { e =>
+      val s = st.s + (e.v - kappa - mu0Micro)
+      val minS = math.min(st.minS, s) // min includes S₀ = 0
+      val c = s - math.min(0L, minS)
+      // batch tie rule: the MIN event_id among rows attaining
+      // the max (min(when(c === cmax, event_id)) in cusumOf)
+      val (cmax, at) =
+        if (c > st.cmax) (c, e.event_id)
+        else if (c == st.cmax) (st.cmax, math.min(st.atEvent, e.event_id))
+        else (st.cmax, st.atEvent)
+      st = CusumState(s, minS, cmax, at, st.n + 1L)
+    }
+    val units = math.floor(st.cmax.toDouble / 1e6 * 1e4 + 0.5) / 1e4
+    (Some(st), Iterator.single(
+      CusumOut(uid, st.n, units, st.atEvent, units > graft.operators.Events.CusumH)))
   }
 
   case class Ev(user_id: Long, us: Long)
@@ -773,28 +755,6 @@ object StreamingJobs {
   case class MgSnap(shard: Int, token: String, min_count: Long, n_seen: Long)
   case class MgState(counts: Map[String, Long], n: Long)
 
-  /** Streaming heavy hitters — the Misra-Gries sketch
-    * (`functions.MisraGries`, same [[graft.functions.MgCore]] buffer
-    * ops, so the batch aggregate and this job share ONE decrement
-    * step and ONE guarantee) kept as flatMapGroupsWithState state:
-    * ≤ k counters per shard, emitted as a full snapshot per
-    * micro-batch (Update mode — downstream keeps the latest
-    * n_seen per shard).
-    *
-    * State/scale shape: tokens are hash-sharded upstream, so each
-    * shard's state is one ≤ k-entry map — total state = shards × k
-    * counters, independent of the corpus vocabulary (the entire point
-    * of MG over a counting dedup: "which tokens dominate this ingest
-    * stream" with bounded memory). Because shards partition the token
-    * space disjointly, a token's shard count IS its global count, and
-    * the per-shard guarantee (every token with count > n_shard/(k+1)
-    * survives; reported counts within n_shard/(k+1) of true) implies
-    * the global heavy-hitter guarantee with the SMALLER n_shard
-    * error. State is intentionally un-TTL'd like the minhash dedup
-    * bucket state: the sketch summarizes the whole ingest history.
-    *
-    * On a batch Dataset the same fold runs per complete group —
-    * StreamingSpec proves streamed == batch == guarantee. */
   /** One arriving document for the streaming source quota: `seq` is
     * the deterministic arrival order within its source (admission is
     * order-dependent by design — "first N win"). */
@@ -820,41 +780,29 @@ object StreamingJobs {
   def capPerSourceStream(docs: Dataset[CapDoc], cap: Int): Dataset[CapKept] = {
     import docs.sparkSession.implicits._
     require(cap >= 0, s"bad cap $cap")
-    def fold(src: String, it: Iterator[CapDoc], st: Option[Long])
-        : (Long, Iterator[CapKept]) = {
-      val n = st.getOrElse(0L)
-      val room = math.max(0L, cap - n).toInt
-      if (room == 0) { it.foreach(_ => ()); return (n, Iterator.empty) }
-      // only the `room` smallest seqs can be admitted, so keep a
-      // size-bounded max-heap instead of materializing and sorting
-      // the whole group: on the batch path a group is an ENTIRE
-      // source's documents, and O(group) working memory would
-      // contradict the operator's own bounded-state claim
-      val pq = scala.collection.mutable.PriorityQueue.empty[CapDoc](
-        Ordering.by(_.seq))
-      it.foreach { d =>
-        if (pq.size < room) pq.enqueue(d)
-        else if (d.seq < pq.head.seq) { pq.dequeue(); pq.enqueue(d) }
-      }
-      val kept = pq.dequeueAll.reverse // ascending seq = arrival order
-      (n + kept.size,
-        kept.iterator.zipWithIndex.map { case (d, i) =>
-          CapKept(d.doc_id, src, n + i + 1)
-        })
+    keyedFold(docs, (d: CapDoc) => d.source)(capStep(cap))
+  }
+
+  /** [[capPerSourceStream]]'s step: writes the admitted count on every
+    * batch, also when the source is already full. */
+  private[graft] def capStep(cap: Int)(src: String, it: Iterator[CapDoc], st: Option[Long])
+      : (Option[Long], Iterator[CapKept]) = {
+    val n = st.getOrElse(0L)
+    val room = math.max(0L, cap - n).toInt
+    if (room == 0) { it.foreach(_ => ()); return (Some(n), Iterator.empty) }
+    // only the `room` smallest seqs can be admitted, so keep a
+    // size-bounded max-heap instead of materializing and sorting
+    // the whole group: on the batch path a group is an ENTIRE
+    // source's documents, and O(group) working memory would
+    // contradict the operator's own bounded-state claim
+    val pq = scala.collection.mutable.PriorityQueue.empty[CapDoc](Ordering.by(_.seq))
+    it.foreach { d =>
+      if (pq.size < room) pq.enqueue(d)
+      else if (d.seq < pq.head.seq) { pq.dequeue(); pq.enqueue(d) }
     }
-    if (docs.isStreaming)
-      docs.groupByKey(_.source)
-        .flatMapGroupsWithState[Long, CapKept](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (src: String, it: Iterator[CapDoc], state: GroupState[Long]) =>
-            val (n, out) = fold(src, it, state.getOption)
-            state.update(n)
-            out
-        }
-    else
-      docs.groupByKey(_.source).flatMapGroups { (src, it) =>
-        fold(src, it, None)._2
-      }
+    val kept = pq.dequeueAll.reverse // ascending seq = arrival order
+    (Some(n + kept.size),
+      kept.iterator.zipWithIndex.map { case (d, i) => CapKept(d.doc_id, src, n + i + 1) })
   }
 
   /** One observed token for the streaming CMS (same hash-disjoint
@@ -872,7 +820,7 @@ object StreamingJobs {
   case class CmsState(cells: Seq[Long], n: Long)
 
   /** Streaming Count-Min frequency estimates — the
-    * `functions.CountMinMatrix` sketch as flatMapGroupsWithState
+    * `functions.CountMinMatrix` sketch as [[keyedFold]]
     * state, one depth×width counter matrix per hash-disjoint token
     * shard (same [[graft.functions.CmsCore]] bucket hash, so the
     * batch aggregate, the Column probes, the DuckDB oracle, and this
@@ -896,11 +844,17 @@ object StreamingJobs {
     require(depth >= 1 && depth <= CmsCore.MaxDepth,
       s"cms depth must be in [1, ${CmsCore.MaxDepth}], got $depth")
     require(width >= 2, s"cms width must be >= 2, got $width")
+    keyedFold(toks, (t: CmsTok) => t.shard, OutputMode.Update)(cmsStep(depth, width, probes))
+  }
+
+  /** [[cmsStream]]'s step; the probe buckets are hashed once, here. */
+  private[graft] def cmsStep(depth: Int, width: Int, probes: Seq[String])
+      : (Int, Iterator[CmsTok], Option[CmsState]) => (Option[CmsState], Iterator[CmsCell]) = {
+    import graft.functions.CmsCore
     val probeBuckets: Seq[(String, Seq[Int])] = probes.map { p =>
       p -> (0 until depth).map(i => CmsCore.bucket(i, CmsCore.baseMod(p), width))
     }
-    def fold(shard: Int, it: Iterator[CmsTok], st: Option[CmsState])
-        : (CmsState, Iterator[CmsCell]) = {
+    (shard, it, st) => {
       val cells = st.map(_.cells.toArray).getOrElse(new Array[Long](depth * width))
       var n = st.map(_.n).getOrElse(0L)
       it.foreach { t =>
@@ -912,56 +866,53 @@ object StreamingJobs {
         }
         n += 1
       }
-      val next = CmsState(cells.toSeq, n)
-      (next, probeBuckets.iterator.flatMap { case (p, bks) =>
-        bks.zipWithIndex.map { case (b, i) =>
-          CmsCell(shard, p, i, cells(i * width + b), n)
-        }
+      (Some(CmsState(cells.toSeq, n)), probeBuckets.iterator.flatMap { case (p, bks) =>
+        bks.zipWithIndex.map { case (b, i) => CmsCell(shard, p, i, cells(i * width + b), n) }
       })
     }
-    if (toks.isStreaming)
-      toks.groupByKey(_.shard)
-        .flatMapGroupsWithState[CmsState, CmsCell](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (shard: Int, it: Iterator[CmsTok], state: GroupState[CmsState]) =>
-            val (next, out) = fold(shard, it, state.getOption)
-            state.update(next)
-            out
-        }
-    else
-      toks.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-        fold(shard, it, None)._2
-      }
   }
 
+  /** Streaming heavy hitters — the Misra-Gries sketch
+    * (`functions.MisraGries`, same [[graft.functions.MgCore]] buffer
+    * ops, so the batch aggregate and this job share ONE decrement
+    * step and ONE guarantee) kept as [[keyedFold]] state:
+    * ≤ k counters per shard, emitted as a full snapshot per
+    * micro-batch (Update mode — downstream keeps the latest
+    * n_seen per shard).
+    *
+    * State/scale shape: tokens are hash-sharded upstream, so each
+    * shard's state is one ≤ k-entry map — total state = shards × k
+    * counters, independent of the corpus vocabulary (the entire point
+    * of MG over a counting dedup: "which tokens dominate this ingest
+    * stream" with bounded memory). Because shards partition the token
+    * space disjointly, a token's shard count IS its global count, and
+    * the per-shard guarantee (every token with count > n_shard/(k+1)
+    * survives; reported counts within n_shard/(k+1) of true) implies
+    * the global heavy-hitter guarantee with the SMALLER n_shard
+    * error. State is intentionally un-TTL'd like the minhash dedup
+    * bucket state: the sketch summarizes the whole ingest history.
+    *
+    * On a batch Dataset the same fold runs per complete group (the
+    * final snapshot, one emission with n_seen = shard total) —
+    * StreamingSpec proves streamed == batch == guarantee. `k` is
+    * checked here, as the batch aggregate checks it, so a bad value
+    * fails at plan time and not inside an executor task mid-stream. */
   def mgTopkStream(toks: Dataset[MgTok], k: Int): Dataset[MgSnap] = {
     import toks.sparkSession.implicits._
+    require(k >= 1, s"mg_topk needs k >= 1, got $k")
+    keyedFold(toks, (t: MgTok) => t.shard, OutputMode.Update)(mgStep(k))
+  }
+
+  private[graft] def mgStep(k: Int)(shard: Int, it: Iterator[MgTok], st: Option[MgState])
+      : (Option[MgState], Iterator[MgSnap]) = {
     import graft.functions.MgCore
-    def fold(shard: Int, it: Iterator[MgTok], st: Option[MgState])
-        : (MgState, Iterator[MgSnap]) = {
-      val buf = scala.collection.mutable.HashMap.empty[String, Long]
-      st.foreach(s => s.counts.foreach { case (t, c) => buf.update(t, c) })
-      var n = st.map(_.n).getOrElse(0L)
-      // seq-sorted fold: the group iterator's order is unspecified
-      it.toArray.sortBy(_.seq).foreach { t => MgCore.add(buf, t.tok, k); n += 1 }
-      val next = MgState(buf.toMap, n)
-      (next, MgCore.top(buf).iterator.map { case (t, c) => MgSnap(shard, t, c, n) })
-    }
-    if (toks.isStreaming)
-      toks.groupByKey(_.shard)
-        .flatMapGroupsWithState[MgState, MgSnap](
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (shard: Int, it: Iterator[MgTok], state: GroupState[MgState]) =>
-            val (next, out) = fold(shard, it, state.getOption)
-            state.update(next)
-            out
-        }
-    else
-      // batch twin: each shard is one complete group — the final
-      // snapshot (one emission, n_seen = shard total)
-      toks.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-        fold(shard, it, None)._2
-      }
+    val buf = scala.collection.mutable.HashMap.empty[String, Long]
+    st.foreach(s => s.counts.foreach { case (t, c) => buf.update(t, c) })
+    var n = st.map(_.n).getOrElse(0L)
+    // seq-sorted fold: the group iterator's order is unspecified
+    it.toArray.sortBy(_.seq).foreach { t => MgCore.add(buf, t.tok, k); n += 1 }
+    (Some(MgState(buf.toMap, n)),
+      MgCore.top(buf).iterator.map { case (t, c) => MgSnap(shard, t, c, n) })
   }
 
   /** One arriving document for the composed streaming curate head:

@@ -164,8 +164,9 @@ class LocalFsSpec extends AnyFunSuite {
     try out.write(s.getBytes(UTF_8)) finally out.close()
   }
 
-  /** Reads through `ChecksumFs`'s checker: `FilterFs.open(path)`
-    * without a buffer size bypasses it and verifies nothing. */
+  /** Reads through `ChecksumFs`'s checker: stock `LocalFs` inherits
+    * `FilterFs.open(path)`, which without a buffer size bypasses it
+    * and verifies nothing. */
   private def fcRead(fc: FileContext, p: Path): String = {
     val in = fc.open(p, 4096)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
@@ -200,6 +201,11 @@ class LocalFsSpec extends AnyFunSuite {
       val raf = new RandomAccessFile(new File(d, "data"), "rw")
       try { raf.seek(1000); raf.write('X') } finally raf.close()
       intercept[ChecksumException](fcRead(fc, p))
+      // the one-argument open, the call Spark's checkpoint reads make:
+      // stock reads the corrupted bytes, graft's verifies them
+      def openRead(): Int = { val in = fc.open(p); try in.readAllBytes().length finally in.close() }
+      if (impl == StockFs) assert(openRead() == text.length)
+      else intercept[ChecksumException](openRead())
     }
     withDir { d =>
       val c = conf()

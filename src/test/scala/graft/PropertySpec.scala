@@ -429,6 +429,167 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // ------------------------------------------------ stream folds under random splits
+  // Each stateful stream head's step, replayed over a random split of
+  // one key's events as the keyed-fold runner feeds micro-batches,
+  // against one call over the key's whole history (the batch form).
+
+  /** `xs` cut in order into contiguous non-empty chunks at boundaries
+    * `cuttable` allows: none, all of them, or each with a random
+    * probability. */
+  private def randomSplit[A](xs: Seq[A], rng: scala.util.Random,
+      cuttable: (A, A) => Boolean): Seq[Seq[A]] = {
+    val p = rng.nextInt(3) match { case 0 => 0.0; case 1 => 1.0; case _ => rng.nextDouble() }
+    val cuts = (1 until xs.size).filter(i => rng.nextDouble() < p && cuttable(xs(i - 1), xs(i)))
+    (0 +: cuts :+ xs.size).sliding(2).map { case Seq(a, b) => xs.slice(a, b) }.toSeq
+  }
+
+  /** 1-3 keys' event lists, each put in `order` and randomly split:
+    * `body(key, events, chunks)`. */
+  private def forAllSplits[E](event: Gen[E], order: Seq[E] => Seq[E] = (xs: Seq[E]) => xs,
+      cuttable: (E, E) => Boolean = (_: E, _: E) => true)(
+      body: (Int, Seq[E], Seq[Seq[E]]) => Unit): Unit = {
+    val keyed = Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.choose(1, 40).flatMap(Gen.listOfN(_, event))))
+    forAll(Gen.zip(keyed, Gen.long), samples = 40) { case (keys, seed) =>
+      val rng = new scala.util.Random(seed)
+      keys.zipWithIndex.foreach { case (evs, key) =>
+        val all = order(evs)
+        val chunks = randomSplit(all, rng, cuttable)
+        assert(chunks.flatten == all && chunks.forall(_.nonEmpty))
+        body(key, all, chunks)
+      }
+    }
+  }
+
+  /** Replays `chunks` through `step` as the runner does (`None` keeps
+    * the held state): the final state and each call's rows. One chunk
+    * is the whole-history call. */
+  private def replay[K, E, S, O](step: (K, Iterator[E], Option[S]) => (Option[S], Iterator[O]),
+      key: K, chunks: Seq[Seq[E]]): (Option[S], Seq[List[O]]) =
+    chunks.foldLeft((Option.empty[S], Vector.empty[List[O]])) { case ((held, outs), c) =>
+      val (next, out) = step(key, c.iterator, held)
+      (next.orElse(held), outs :+ out.toList)
+    }
+
+  private val tokGen = Gen.oneOf("a", "b", "c", "d", "e", "f", "g", "h")
+  private val usGen = Gen.choose(0L, 12L) // narrow: equal-us ties are common
+  private def idsUnique[E](evs: Seq[E])(withId: (E, Long) => E): Seq[E] =
+    evs.zipWithIndex.map { case (e, i) => withId(e, i.toLong) }
+
+  test("property: cms fold: final cells equal for any split of shuffled events") {
+    import StreamingJobs.CmsTok
+    val step = StreamingJobs.cmsStep(3, 8, Seq("a", "c", "zz"))
+    forAllSplits(tokGen.map(CmsTok(0, _))) { (key, all, chunks) =>
+      // the chunks see the generated (random) order, the whole call a sorted one
+      val (st, outs) = replay(step, key, chunks)
+      val (wSt, Seq(wOut)) = replay(step, key, Seq(all.sortBy(_.tok)))
+      assert(st.map(x => (x.cells, x.n)) == wSt.map(x => (x.cells, x.n)))
+      assert(outs.last == wOut)
+    }
+  }
+
+  test("property: cusum fold: final row bit-equal on time-ordered splits") {
+    import StreamingJobs.CusumEv
+    val step = StreamingJobs.cusumStep(250000L) _
+    val ev = Gen.zip(usGen, Gen.choose(-3000000L, 3000000L)).map { case (us, v) => CusumEv(0L, 0L, us, v) }
+    forAllSplits(ev, (evs: Seq[CusumEv]) =>
+        idsUnique(evs)((e, i) => e.copy(event_id = i)).sortBy(e => (e.us, e.event_id))) {
+      (key, all, chunks) =>
+        val (st, outs) = replay(step, key.toLong, chunks)
+        val (wSt, Seq(wOut)) = replay(step, key.toLong, Seq(all))
+        assert(st == wSt && outs.forall(_.size == 1) && outs.last == wOut)
+    }
+  }
+
+  test("property: ewma fold: final (n, ewma) bit-equal on time-ordered splits") {
+    import StreamingJobs.EwmaEv
+    val ev = Gen.zip(usGen, Gen.choose(-1000.0, 1000.0)).map { case (us, v) => EwmaEv(0L, 0L, us, v) }
+    forAllSplits(ev, (evs: Seq[EwmaEv]) =>
+        idsUnique(evs)((e, i) => e.copy(event_id = i)).sortBy(e => (e.us, e.event_id))) {
+      (key, all, chunks) =>
+        val (_, outs) = replay(StreamingJobs.ewmaStep _, key.toLong, chunks)
+        val (_, Seq(wOut)) = replay(StreamingJobs.ewmaStep _, key.toLong, Seq(all))
+        def bits(o: StreamingJobs.EwmaOut) = (o.n, java.lang.Double.doubleToRawLongBits(o.ewma))
+        assert(bits(outs.last.head) == bits(wOut.head))
+    }
+  }
+
+  test("property: mg fold: final snapshot equal on seq-ordered splits") {
+    import StreamingJobs.MgTok
+    for (k <- Seq(1, 2, 4)) {
+      val step = StreamingJobs.mgStep(k) _
+      forAllSplits(tokGen.map(MgTok(0, 0L, _)),
+          (ts: Seq[MgTok]) => idsUnique(ts)((t, i) => t.copy(seq = i))) { (key, all, chunks) =>
+        val (st, outs) = replay(step, key, chunks)
+        val (wSt, Seq(wOut)) = replay(step, key, Seq(all))
+        assert(st == wSt && outs.last == wOut)
+      }
+    }
+  }
+
+  test("property: cap fold: final count and concatenated admissions equal on seq-ordered splits") {
+    import StreamingJobs.CapDoc
+    for (cap <- Seq(0, 1, 3, 100)) {
+      val step = StreamingJobs.capStep(cap) _
+      forAllSplits(Gen.choose(0L, 1000L).map(CapDoc("src", 0L, _)),
+          (ds: Seq[CapDoc]) => idsUnique(ds)((d, i) => d.copy(seq = i))) { (key, all, chunks) =>
+        val (st, outs) = replay(step, s"s$key", chunks)
+        val (wSt, Seq(wOut)) = replay(step, s"s$key", Seq(all))
+        assert(st == wSt && outs.flatten == wOut)
+      }
+    }
+  }
+
+  test("property: asof fold: concatenated emissions equal on time-ordered splits keeping equal-us runs") {
+    import StreamingJobs.AsOfEv
+    val ev = Gen.zip(usGen, Gen.oneOf("view", "purchase", "click"))
+      .map { case (us, t) => AsOfEv(0L, 0L, t, us) }
+    forAllSplits(ev, (evs: Seq[AsOfEv]) => idsUnique(evs)((e, i) => e.copy(event_id = i)).sortBy(_.us),
+        (a: AsOfEv, b: AsOfEv) => a.us != b.us) { (key, all, chunks) =>
+      val (st, outs) = replay(StreamingJobs.asofStep _, key.toLong, chunks)
+      val (wSt, Seq(wOut)) = replay(StreamingJobs.asofStep _, key.toLong, Seq(all))
+      assert(st == wSt && outs.flatten == wOut)
+    }
+  }
+
+  test("property: cdc fold: final profile equal for any split, at most one row per chunk") {
+    import StreamingJobs.CdcEv
+    val ev = Gen.zip(usGen, Gen.oneOf("view", "purchase"), Gen.choose(0.0, 9.0))
+      .map { case (us, t, v) => CdcEv(0L, 0L, t, v, us) }
+    forAllSplits(ev, (evs: Seq[CdcEv]) => idsUnique(evs)((e, i) => e.copy(event_id = i))) {
+      (key, all, chunks) =>
+        val (st, outs) = replay(StreamingJobs.cdcStep _, key.toLong, chunks)
+        val (wSt, Seq(wOut)) = replay(StreamingJobs.cdcStep _, key.toLong, Seq(all))
+        assert(st == wSt && outs.forall(_.size <= 1))
+        assert(wOut.map(_.new_event_id) == wSt.map(_.event_id).toList)
+    }
+  }
+
+  test("property: admitDocs and admitFrames: emitted set equal on id-ordered splits") {
+    forAllSplits(Gen.choose(0L, 30L), (ds: Seq[Long]) => ds.sorted) { (key, all, chunks) =>
+      val (st, outs) = replay(StreamingJobs.admitDocs _, key, chunks)
+      val (wSt, Seq(wOut)) = replay(StreamingJobs.admitDocs _, key, Seq(all))
+      assert(st == wSt && outs.flatten.toSet == wOut.toSet)
+    }
+    import StreamingJobs.FrameBandHit
+    // near copies of a few base hashes, so some pairs fall within maxHamming
+    val hit = for {
+      doc <- Gen.choose(0L, 6L)
+      frame <- Gen.choose(0, 3)
+      base <- Gen.oneOf(0x0123456789abcdefL, 0x7edcba9876543210L)
+      flips <- Gen.listOf(Gen.choose(0, 63)).map(_.take(5))
+    } yield FrameBandHit(doc, frame, flips.foldLeft(base)((h, b) => h ^ (1L << b)), 0, 0L)
+    for (bucketCap <- Seq(2L, 4096L)) {
+      val step = StreamingJobs.admitFrames(3, bucketCap) _
+      forAllSplits(hit, (hs: Seq[FrameBandHit]) => hs.sortBy(h => (h.doc_id, h.frame_no))) {
+        (key, all, chunks) =>
+          val (st, outs) = replay(step, key, chunks)
+          val (wSt, Seq(wOut)) = replay(step, key, Seq(all))
+          assert(st == wSt && outs.flatten.toSet == wOut.toSet)
+      }
+    }
+  }
+
   // ------------------------------------------------ signature kernels
   private def md5LongRef(s: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))

@@ -315,6 +315,48 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a cdc restart fails on a corrupted offset log instead of reading it") {
+    // checkpoint reads go through the one-argument FileContext.open,
+    // which graft's LocalFs verifies against the .crc sidecar
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val ckpt = java.nio.file.Files.createTempDirectory("cdc-crc").toFile
+    val in = MemoryStream[StreamingJobs.CdcEv](s)
+    def run(batch: StreamingJobs.CdcEv*): Unit = {
+      val q = StreamingJobs.cdcStream(in.toDS()).writeStream.format("noop")
+        .option("checkpointLocation", ckpt.getPath).start()
+      try { in.addData(batch); q.processAllAvailable() } finally q.stop()
+    }
+    run(StreamingJobs.CdcEv(1L, 1L, "view", 1.0, 10L))
+    val offsets = new java.io.File(ckpt, "offsets")
+    val latest = offsets.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(new java.io.File(offsets, s".$latest.crc").isFile)
+    val raf = new java.io.RandomAccessFile(new java.io.File(offsets, latest), "rw")
+    try {
+      raf.seek(raf.length / 2)
+      val b = raf.read()
+      raf.seek(raf.length / 2)
+      raf.write(b ^ 0x01)
+    } finally raf.close()
+    val e = intercept[Exception](run(StreamingJobs.CdcEv(1L, 2L, "view", 2.0, 20L)))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
+  }
+
+  test("mgTopkStream rejects k < 1 at plan time, on batch and streaming input") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamingJobs.MgTok
+    val batch = s.createDataset(Seq(MgTok(0, 0L, "a")))
+    val stream = MemoryStream[MgTok](s).toDS()
+    for (ds <- Seq(batch, stream); k <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](StreamingJobs.mgTopkStream(ds, k))
+      assert(e.getMessage.contains(s"mg_topk needs k >= 1, got $k"))
+    }
+  }
+
   test("streaming ewma: O(1) state agrees with the 32-horizon batch within the tail bound") {
     val s = spark
     import s.implicits._
